@@ -1,6 +1,6 @@
 """The end-to-end extraction job (SURVEY §3.1's Spark shape):
 
-    read(pages) → salt-bucket repartition (skew-split oversize blobs)
+    read(pages) → salt-bucket rebalance (skew-split oversize blobs)
                 → ONE fused mapInPandas (payload→text + regex fields)
                 → write results partitioned by bucket
                 → metrics agg + checkpoint manifests
@@ -9,7 +9,7 @@ One pass over the data: the reference runs OCR, dynamic-field extraction,
 license extraction, and two dict-joins as FOUR separate passes over its
 cached rows (/root/reference/gui/app.py:293,464-501); here every extractor
 reads the same Arrow batch once, so there is no join and the only shuffle is
-the explicit bucket repartition.
+the explicit bucket rebalance.
 
 Scale design (100 TB / 10^12 docs):
 * ``n_buckets`` is the unit of checkpointing and output atomicity — at
@@ -18,8 +18,13 @@ Scale design (100 TB / 10^12 docs):
 * skew-split: rows with payloads > ``skew_bytes`` are routed to a dedicated
   finer-grained re-salt (buckets [n_buckets, n_buckets+skew_buckets)) so one
   100 MB page cannot straggle a whole normal bucket.
-* AQE stays on; the bucket repartition is the only exchange and its
-  partition count tracks n_buckets.
+* the bucket exchange is the only one, and AQE sizes it by bytes: it is a
+  rebalance hashed on bucket_id into ``n_buckets + skew_buckets`` initial
+  partitions, and AQE coalesces the read side from the runtime shuffle
+  sizes (keeping at least default-parallelism partitions once the data is
+  big enough) and splits oversized partitions. The Python task count thus
+  follows the data volume, not the bucket count; a bucket may span tasks,
+  and one task may write several buckets.
 """
 
 from __future__ import annotations
@@ -122,6 +127,10 @@ def run_extraction(
 
     ``max_buckets`` caps how many remaining buckets are processed this
     invocation — the kill-mid-run simulation hook for resume tests.
+    ``repartition_to`` is the initial partition count of the bucket
+    exchange (default ``min(n_buckets + skew_buckets, 256)``). AQE then
+    coalesces or splits those partitions by their runtime byte size, so it
+    is not the number of tasks.
     """
     bucketed = with_buckets(pages, n_buckets, skew_bytes, skew_buckets)
 
@@ -140,7 +149,7 @@ def run_extraction(
         remaining_df = remaining_df.filter(F.col("bucket_id").isin(*map(int, target_buckets)) if target_buckets else F.lit(False))
 
     nparts = repartition_to or min(n_buckets + skew_buckets, 256)
-    remaining_df = remaining_df.repartition(nparts, "bucket_id")
+    remaining_df = remaining_df.hint("rebalance", nparts, "bucket_id")
 
     results = extract_all(remaining_df, dynamic_config)
     results_path = os.path.join(out_dir, "results")
@@ -158,8 +167,11 @@ def run_extraction(
     )
 
     # ---- per-bucket lineage/metrics from the landed output (cheap scan of
-    # narrow columns; html bytes are never re-read)
-    written = spark.read.parquet(results_path)
+    # narrow columns; html bytes are never re-read). The schema is given so
+    # that no schema-inference job runs over the footers.
+    written = spark.read.schema(
+        "n_bytes long, extract_ok boolean, bucket_id int"
+    ).parquet(results_path)
     if done:
         written = written.filter(~F.col("bucket_id").isin(*[int(b) for b in done]))
     if target_buckets is not None:

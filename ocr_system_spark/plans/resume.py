@@ -23,6 +23,7 @@ from __future__ import annotations
 import os
 from typing import List, Optional, Set
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -64,9 +65,9 @@ def completed_buckets(spark: SparkSession, out_dir: str, run_id: str) -> Set[int
 def append_manifests(spark: SparkSession, out_dir: str, rows: List[dict]) -> None:
     if not rows:
         return
-    df = spark.createDataFrame(
-        [(r["run_id"], int(r["bucket_id"]), r["status"], int(r["docs"]),
-          int(r["bytes"]), int(r["extract_fail_count"])) for r in rows],
-        schema=MANIFEST_SCHEMA,
-    )
+    # An Arrow table is decoded in the JVM whatever the session's Arrow
+    # setting; a list of tuples would go through a pickled Python RDD and
+    # fork a Python worker for a few metadata rows.
+    table = pa.table({c: [r[c] for r in rows] for c in MANIFEST_SCHEMA.fieldNames()})
+    df = spark.createDataFrame(table, schema=MANIFEST_SCHEMA)
     df.coalesce(1).write.mode("append").parquet(manifest_path(out_dir))

@@ -44,6 +44,16 @@ def ensure_package_on_executors(spark: SparkSession) -> None:
     spark._ocr_system_spark_shipped = True
 
 
+def _default_driver_memory() -> str:
+    """Half of host RAM, capped at 16g. A driver JVM sized near all of RAM
+    grows until the kernel kills it (a 16g heap on a 16 GB host did)."""
+    try:
+        total = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    except (AttributeError, ValueError, OSError):
+        return "16g"
+    return f"{min(total // 2 >> 20, 16 << 10)}m"
+
+
 def get_spark(
     cores: int | str = "*",
     app_name: str = "ocr_system_spark",
@@ -125,7 +135,8 @@ def get_spark(
             ),
         )
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_GRAFT_DRIVER_MEM", _default_driver_memory()))
     )
     if extra_conf:
         for k, v in extra_conf.items():

@@ -137,3 +137,39 @@ def test_skew_split_routing(spark):
     assert len(big) >= 1
     assert (big["bucket_id"] >= 8).all(), "oversize blobs must land in skew buckets"
     assert (small["bucket_id"] < 8).all()
+
+
+def test_bucket_exchange_sized_by_bytes(spark, tmp_path):
+    """The bucket exchange is sized by AQE from its shuffle bytes, so a small
+    input runs fewer tasks than buckets, while the bucket layout, the
+    manifests and the skew routing are those of one bucket per partition."""
+    from ocr_system_spark.sources.pages import generate_pages
+    n_buckets, skew_buckets, skew_bytes = 16, 8, 1 << 16
+    pdf = generate_pages(200, seed=5, skew_rows=3, skew_factor=300)
+    df = pages_df(spark, pdf)
+    out = str(tmp_path / "sized")
+    sc = spark.sparkContext
+    group = "test_bucket_exchange_sized_by_bytes"
+    sc.setJobGroup(group, group)
+    try:
+        P.run_extraction(spark, df, out, run_id="rz", n_buckets=n_buckets,
+                         skew_bytes=skew_bytes, skew_buckets=skew_buckets)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+    # every stage of the job, the write stage included, ran fewer tasks
+    # than the exchange's initial n_buckets + skew_buckets partitions
+    st = sc.statusTracker()
+    stages = [st.getStageInfo(s) for j in st.getJobIdsForGroup(group)
+              for s in st.getJobInfo(j).stageIds]
+    ran = [s.numCompletedTasks for s in stages if s is not None]
+    assert ran and max(ran) < n_buckets + skew_buckets, ran
+
+    res = P.read_results(spark, out).select("url", "bucket_id").toPandas()
+    assert res["url"].is_unique and len(res) == len(pdf)
+    mf = R.read_manifests(spark, out, "rz").toPandas()
+    assert set(res["bucket_id"]) == set(mf["bucket_id"])
+    assert mf["docs"].sum() == len(pdf)
+    blobs = pdf.loc[pdf["html"].map(len) > skew_bytes, "url"]
+    assert len(blobs) >= 1
+    assert (res.set_index("url").loc[blobs, "bucket_id"] >= n_buckets).all()

@@ -25,6 +25,23 @@ N_PAGES = int(os.environ.get("SPARK_GRAFT_VOLUME_PAGES", "100000"))
 CORES = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
+def write_tasks(spark, group: str) -> int:
+    """Tasks of the stage in job group ``group`` that wrote the most rows:
+    the results write, whose read side AQE sizes by shuffle bytes."""
+    sc = spark.sparkContext
+    jvm = sc._jvm
+    tracker = sc.statusTracker()
+    ids = {s for j in tracker.getJobIdsForGroup(group)
+           for s in tracker.getJobInfo(j).stageIds}
+    # py4j cannot fill in Scala default arguments: pass them all
+    stages = jvm.scala.jdk.javaapi.CollectionConverters.asJava(
+        sc._jsc.sc().statusStore().stageList(
+            jvm.java.util.ArrayList(), False, False,
+            sc._gateway.new_array(jvm.double, 0), jvm.java.util.ArrayList()))
+    return max((s for s in stages if s.stageId() in ids),
+               key=lambda s: s.outputRecords()).numCompleteTasks()
+
+
 def main() -> None:
     from pyspark.sql import functions as F
 
@@ -50,14 +67,17 @@ def main() -> None:
     out_dir = os.path.join(tmp, "out")
     # phase 1: process ~40% of buckets, then "die"
     t0 = time.perf_counter()
+    spark.sparkContext.setJobGroup("phase1", "phase1")
     s1 = P.run_extraction(spark, pages, out_dir, run_id="vol", n_buckets=256,
                           skew_bytes=1 << 18, skew_buckets=32, max_buckets=100)
     t1 = round(time.perf_counter() - t0, 1)
     # phase 2: resume to completion
     t0 = time.perf_counter()
+    spark.sparkContext.setJobGroup("phase2", "phase2")
     s2 = P.run_extraction(spark, pages, out_dir, run_id="vol", n_buckets=256,
                           skew_bytes=1 << 18, skew_buckets=32)
     t2 = round(time.perf_counter() - t0, 1)
+    spark.sparkContext.setLocalProperty("spark.jobGroup.id", None)
 
     res = P.read_results(spark, out_dir)
     n_rows = res.count()
@@ -72,7 +92,9 @@ def main() -> None:
         "input_bytes": in_bytes,
         "gen_sec": gen_sec,
         "phase1_sec": t1, "phase1_buckets": s1["buckets_processed"],
+        "phase1_write_tasks": write_tasks(spark, "phase1"),
         "phase2_sec": t2, "phase2_buckets": s2["buckets_processed"],
+        "phase2_write_tasks": write_tasks(spark, "phase2"),
         "rows": n_rows, "unique_urls": n_unique,
         "manifest_docs": int(mf["docs"].sum()),
         "manifest_buckets": int(len(mf)),
