@@ -1388,79 +1388,35 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["intra_doc_dup"] = q_intra_doc_dup
 
     def q_bpe_train(spark, sf_dir):
-        """Distributed BPE merge training (8 merges) over the corpus
-        vocabulary — classic Sennrich algorithm, integer/string-exact
-        argmax (count DESC, lhs ASC, rhs ASC), one 1-row collect per
-        step.  The oracle replays all 8 training iterations in SQL."""
+        """BPE merge training (8 merges): corpus→vocabulary aggregated
+        distributedly, then the classic Sennrich merge loop on the
+        driver with integer/string-exact argmax (count DESC, lhs ASC,
+        rhs ASC).  The oracle replays all 8 training iterations in SQL."""
         ensure_package_on_executors(spark)
-        from ocr_system_spark.operators.bpe import bpe_train_df
+        from ocr_system_spark.operators.bpe import bpe_train
         d = tables.load(spark, sf_dir, "documents").select("doc_id", "text")
-        return bpe_train_df(d, n_merges=8)
+        return spark.createDataFrame(
+            bpe_train(d, n_merges=8),
+            "merge_id long, lhs string, rhs string, pair_count long")
 
     q["bpe_train"] = q_bpe_train
-
-    def q_bpe_train_batched(spark, sf_dir):
-        """Batched BPE merge training (the production 32k-merge path):
-        many pairwise-disjoint merges applied per driver round under the
-        strict acceptance rule that makes the result BIT-IDENTICAL to
-        sequential training.  The oracle is therefore the sequential
-        8-iteration SQL replay — the batching mechanism is checked
-        against independent sequential semantics, not replayed."""
-        ensure_package_on_executors(spark)
-        from ocr_system_spark.operators.bpe import bpe_train_batched
-        d = tables.load(spark, sf_dir, "documents").select("doc_id", "text")
-        merges = bpe_train_batched(d, n_merges=8, max_batch=8)
-        return spark.createDataFrame(
-            merges, "merge_id long, lhs string, rhs string, pair_count long")
-
-    q["bpe_train_batched"] = q_bpe_train_batched
-
-    def q_bpe_train_local(spark, sf_dir):
-        """Vocabulary-collect BPE training (THE production 32k-merge
-        path): corpus→vocabulary aggregated distributedly, merge loop on
-        the driver with classic incremental pair-count updates —
-        bit-identical to the distributed sequential trainer, so the
-        sequential SQL replay is its oracle too."""
-        ensure_package_on_executors(spark)
-        from ocr_system_spark.operators.bpe import bpe_train_local
-        d = tables.load(spark, sf_dir, "documents").select("doc_id", "text")
-        merges = bpe_train_local(d, n_merges=8)
-        return spark.createDataFrame(
-            merges, "merge_id long, lhs string, rhs string, pair_count long")
-
-    q["bpe_train_local"] = q_bpe_train_local
+    # declared query names are fixed; one trainer serves all three
+    q["bpe_train_batched"] = q_bpe_train
+    q["bpe_train_local"] = q_bpe_train
 
     def q_bpe_encode(spark, sf_dir):
         """BPE encoding with the 8 learned merges: per-doc exact token and
-        subword counts.  The merge chain compiles to one nested JVM
-        replace expression — row-local; oracle replays training AND the
-        encode chain."""
+        subword counts from the rank-cursor Arrow kernel (sequential
+        merge semantics, row-local); the oracle replays training AND the
+        encode replace chain."""
         ensure_package_on_executors(spark)
-        # trainer swapped for the vocabulary-collect path (r06): its merge
-        # table is BIT-IDENTICAL to the sequential trainer (property-pinned
-        # in test_round4_bpe/test_round5_bpe_ranked) at ~1/20 the driver
-        # rounds — this query's point is the ENCODE chain, and the
-        # sequential mechanism stays demonstrated by `bpe_train` itself
-        from ocr_system_spark.operators.bpe import bpe_encode, bpe_train_local
+        from ocr_system_spark.operators.bpe import bpe_encode, bpe_train
         d = tables.load(spark, sf_dir, "documents").select("doc_id", "text")
-        return bpe_encode(d, bpe_train_local(d, n_merges=8))
+        return bpe_encode(d, bpe_train(d, n_merges=8))
 
     q["bpe_encode"] = q_bpe_encode
-
-    def q_bpe_encode_ranked(spark, sf_dir):
-        """The O(word-length) rank-cursor encoder (the 32k-merge
-        production path) on the same trained merges — bit-identical to
-        the expression-chain encoder by the cursor argument, so it
-        shares `bpe_encode`'s full SQL training+encode replay oracle."""
-        ensure_package_on_executors(spark)
-        # same trainer swap as bpe_encode (bit-identical merges, ~1/20
-        # the driver rounds); this query's point is the rank-cursor encoder
-        from ocr_system_spark.operators.bpe import (
-            bpe_encode_ranked, bpe_train_local)
-        d = tables.load(spark, sf_dir, "documents").select("doc_id", "text")
-        return bpe_encode_ranked(d, bpe_train_local(d, n_merges=8))
-
-    q["bpe_encode_ranked"] = q_bpe_encode_ranked
+    # declared query names are fixed; one encoder serves both
+    q["bpe_encode_ranked"] = q_bpe_encode
 
     def q_quality_model_score(spark, sf_dir):
         """Model-based quality filter plumbing (CCNet/fastText stage):
@@ -3884,8 +3840,7 @@ def oracle_sql() -> dict[str, str]:
         )
     """
 
-    # bit-identity is the batched trainer's contract, so the sequential
-    # replay IS its oracle (independent semantics, not a mechanism replay)
+    # one trainer serves all three trainer names (see queries())
     o["bpe_train_batched"] = o["bpe_train"]
     o["bpe_train_local"] = o["bpe_train"]
 

@@ -1,48 +1,46 @@
-"""Distributed BPE (byte-pair-encoding) merge training and encoding.
+"""BPE (byte-pair-encoding) merge training and encoding.
 
 The tokenizer-training step of an LLM data pipeline (public algorithm:
 Sennrich, Haddow & Birch 2016, "Neural Machine Translation of Rare Words
 with Subword Units").  The reference repo stops at field extraction; this
 closes the curation→tokenizer gap the brief's training-data surface needs.
 
-Algorithm (classic, word-type weighted):
+Training (``bpe_train``, classic word-type-weighted BPE):
   1. vocabulary = (term, count) from the corpus — the ONLY corpus-sized
-     shuffle; every later step works on the vocabulary relation.
-  2. each term becomes a symbol sequence: its characters plus a final
-     end-of-word marker U+001E (record separator), encoded as ONE string
-     with the unit separator U+001F — ONE separator at each end, TWO
-     between adjacent symbols ("\\x1f c1 \\x1f\\x1f c2 \\x1f\\x1f \\x1e
-     \\x1f").  Terms containing either control character are dropped, so
-     the marker can NEVER be assembled by merging real token characters
-     (a printable marker like ``</w>`` is constructible from an HTML-ish
-     corpus via ``<``+``/``+``w``+``>`` merges, silently conflating
-     word-interior content with word boundaries).
-  3. per merge step: count adjacent symbol pairs weighted by term count
-     (map-side-combined aggregation over vocabulary rows), pick the best
-     pair — (count DESC, left ASC, right ASC), a deterministic integer/
-     string ordering — and merge every occurrence via ONE literal string
-     replace of "\\x1f l \\x1f\\x1f r \\x1f" with "\\x1f lr \\x1f".
-     ``replace`` is leftmost non-overlapping in Spark
-     (UTF8String.replace), Python str.replace, and standard SQL engines
-     alike; with the double-separator layout each match consumes only the
-     FIRST of the two separators bounding the next occurrence, so
-     consecutive occurrences ("abab", "aaaa") all merge — byte-for-byte
-     the classic algorithm's one-pass leftmost-disjoint merge (property-
-     checked against a from-scratch reference in test_round4_bpe.py; a
-     single-separator layout silently under-merges reduplicated words).
-     An independent engine replays training bit-for-bit.
+     step, one distributed hash aggregation (``word_vocabulary``).
+  2. the vocabulary is collected (bounded by ``max_types``) and the
+     greedy merge loop runs on the driver: each term is its characters
+     plus a final end-of-word marker U+001E (record separator); each step
+     picks the best adjacent pair — (count DESC, left ASC, right ASC), a
+     deterministic integer/string ordering — and merges every occurrence
+     in one leftmost-disjoint pass, so "abab" and "aaaa" merge fully.
+     Terms containing U+001E or U+001F are dropped, so the marker can
+     NEVER be assembled by merging real token characters (a printable
+     marker like ``</w>`` is constructible from an HTML-ish corpus via
+     ``<``+``/``+``w``+``>`` merges, silently conflating word-interior
+     content with word boundaries).
 
-Scale shape (100 TB): corpus → vocabulary is one hash aggregation;
-each merge step shuffles vocabulary-sized pair counts (not corpus rows)
-and collects exactly ONE row to the driver (the argmax) — the same
-bounded-driver contract as IVF training (`similarity.train_ivf_centroids`).
-The sequence column is re-cached each step so lineage stays flat.
+Encoding (``bpe_encode``) applies the merge table to each token in learn
+order, one leftmost-disjoint pass per merge, in an Arrow kernel.
+
+SQL replay layout.  The oracles in ``__spark_entry__.oracle_sql()``
+replay training and encoding with literal string ``replace``: a symbol
+sequence is ONE string with the unit separator U+001F — ONE separator at
+each end, TWO between adjacent symbols ("\\x1f c1 \\x1f\\x1f c2
+\\x1f\\x1f \\x1e \\x1f") — and merging (l, r) is one replace of
+"\\x1f l \\x1f\\x1f r \\x1f" with "\\x1f lr \\x1f".  ``replace`` is
+leftmost non-overlapping in SQL engines and Python alike; with the
+double-separator layout each match consumes only the FIRST of the two
+separators bounding the next occurrence, so consecutive occurrences all
+merge — byte-for-byte the one-pass merge above (property-checked in
+tests/test_round4_bpe.py; a single-separator layout silently under-merges
+reduplicated words).
 """
 
 from __future__ import annotations
 
 import re
-from typing import Optional
+from bisect import bisect_left
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -56,9 +54,7 @@ from ocr_system_spark.functions.tokens import (
     lower_ascii_tokens,
 )
 
-__all__ = ["bpe_train", "bpe_train_batched", "bpe_train_local",
-           "bpe_encode", "bpe_encode_batched", "bpe_encode_ranked",
-           "word_vocabulary"]
+__all__ = ["bpe_train", "bpe_encode", "word_vocabulary"]
 
 SEP = "\x1f"
 EOW = "\x1e"
@@ -77,206 +73,13 @@ def word_vocabulary(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def _initial_seq(term):
-    """Separator-encoded initial symbol sequence of a term:
-    SEP c1 SEPSEP c2 SEPSEP ... SEPSEP EOW SEP (double separators
-    between symbols, singles at the ends)."""
-    chars = F.transform(
-        F.sequence(F.lit(1), F.length(term)),
-        lambda i: term.substr(i, F.lit(1)))
-    return F.concat(F.lit(SEP), F.array_join(chars, SEP + SEP),
-                    F.lit(SEP + SEP), F.lit(EOW), F.lit(SEP))
-
-
-def _pair_counts(vocab_seq: DataFrame) -> DataFrame:
-    """Adjacent-symbol pair counts over (seq, cnt), weighted by cnt."""
-    s0 = F.split(F.col("seq"), SEP + "+")   # regex: any separator run
-    syms = F.slice(s0, 2, F.size(s0) - 2)   # drop boundary empties
-    pairs = F.when(
-        F.size(syms) >= 2,
-        F.transform(
-            F.sequence(F.lit(1), F.size(syms) - 1),
-            lambda i: F.struct(F.element_at(syms, i).alias("lhs"),
-                               F.element_at(syms, i + 1).alias("rhs"))),
-    ).otherwise(F.array().cast("array<struct<lhs:string,rhs:string>>"))
-    return (
-        vocab_seq.select(F.explode(pairs).alias("p"), "cnt")
-        .groupBy("p.lhs", "p.rhs")
-        .agg(F.sum("cnt").alias("pair_count"))
-    )
-
-
-def bpe_train(df: DataFrame, n_merges: int,
-              text_col: str = "text") -> list[tuple[int, str, str, int]]:
-    """Learn ``n_merges`` BPE merges from the corpus.  Returns the merge
-    table as a (bounded, n_merges-row) driver-side list of
-    (merge_id, lhs, rhs, pair_count) — 1-based merge_id in learn order.
-
-    Driver traffic is one argmax row per step (collected with a
-    deterministic total order, so ties are stable across engines and
-    partitionings); all heavy work is distributed.
-    """
-    if n_merges <= 0:
-        raise ValueError(f"n_merges must be positive, got {n_merges}")
-    spark = df.sparkSession
-    vocab = word_vocabulary(df, text_col).select(
-        _initial_seq(F.col("term")).alias("seq"), "cnt").cache()
-    vocab.count()
-    merges: list[tuple[int, str, str, int]] = []
-    try:
-        for step in range(1, n_merges + 1):
-            best = (_pair_counts(vocab)
-                    .orderBy(F.col("pair_count").desc(),
-                             F.col("lhs").asc(), F.col("rhs").asc())
-                    .limit(1).collect())
-            if not best:        # vocabulary fully merged — nothing left
-                break
-            lhs, rhs, cnt = best[0]["lhs"], best[0]["rhs"], best[0]["pair_count"]
-            merges.append((step, lhs, rhs, int(cnt)))
-            nxt = vocab.select(
-                F.replace(F.col("seq"),
-                          F.lit(SEP + lhs + SEP + SEP + rhs + SEP),
-                          F.lit(SEP + lhs + rhs + SEP)).alias("seq"),
-                "cnt").cache()
-            nxt.count()
-            vocab.unpersist()
-            vocab = nxt
-    finally:
-        vocab.unpersist()
-    return merges
-
-
-def bpe_train_batched(df: DataFrame, n_merges: int,
-                      text_col: str = "text",
-                      max_batch: int = 32,
-                      stats: Optional[dict] = None
-                      ) -> list[tuple[int, str, str, int]]:
-    """``bpe_train`` with MANY merges applied per driver round — the
-    production path to a 32k-merge vocabulary.  BIT-IDENTICAL output to
-    sequential training on any corpus (property-pinned in
-    test_round4_bpe.py), with driver rounds collapsed from ``n_merges``
-    to roughly ``n_merges / batch``.
-
-    Why sequential training can't scale: each merge costs two
-    driver-orchestrated jobs (pair-count argmax + re-cache), so a 32k
-    vocabulary is ~64k job latencies regardless of cluster size.  This
-    variant collects the top ``max_batch + 1`` pairs per round and
-    accepts the longest sorted PREFIX that provably equals sequential
-    selection:
-
-    1. pairwise SYMBOL-DISJOINT — merging (l, r) only touches adjacencies
-       at its own occurrences, so counts of disjoint pairs are invariant
-       and their relative order is preserved;
-    2. NO SYMBOL COLLISION — an accepted merge's concatenation ``l + r``
-       must not equal any symbol already in play (initial alphabet ∪
-       prior merges ∪ this batch), else new-symbol pair counts would
-       blend with an existing pair's and could overtake a later accepted
-       pair (the driver tracks the full symbol inventory: every symbol is
-       initial or merge-created);
-    3. STRICT COUNT GAP — the last accepted count must strictly exceed
-       the first unaccepted count.  Counts never increase under a merge
-       (no adjacency between pre-existing symbols is ever created), and
-       every new pair's count is bounded by a conflicting old pair's, so
-       the gap guarantees no skipped or newly-created pair can reach the
-       accepted range; equal counts could (a new pair's lexicographic
-       rank is unrelated to its parent's), hence strict.
-
-    Scanning stops at the FIRST pair that violates 1 or 2 — pairs may not
-    be skipped, because a skipped-but-still-competitive pair could win a
-    later sequential step.  The accepted merges are disjoint, so their
-    replace patterns cannot overlap and one chained ``replace`` pass
-    applies them all; each keeps its original pair count, which is
-    exactly what sequential would have recorded.
-
-    Worst case (ties or cascading conflicts everywhere) degrades to one
-    merge per round — sequential's cost, never worse.  Typical Zipfian
-    corpora accept most of the batch (the volume check in
-    tools/bpe_volume_check.py measures the realized batch factor on both
-    a worst-case and a Zipfian corpus).
-
-    ``stats``, if given, is filled with {"rounds": driver rounds used} —
-    merges/rounds is the realized batch factor."""
-    if n_merges <= 0:
-        raise ValueError(f"n_merges must be positive, got {n_merges}")
-    if max_batch <= 0:
-        raise ValueError(f"max_batch must be positive, got {max_batch}")
-    vocab = word_vocabulary(df, text_col)
-    # the full symbol inventory starts as the term alphabet + EOW; one
-    # bounded job (distinct codepoints), then driver-maintained
-    symbols = {
-        r["c"] for r in vocab.select(
-            F.explode(F.split(F.col("term"), "")).alias("c"))
-        .distinct().collect() if r["c"]}
-    symbols.add(EOW)
-
-    seqs = vocab.select(_initial_seq(F.col("term")).alias("seq"),
-                        "cnt").cache()
-    seqs.count()
-    merges: list[tuple[int, str, str, int]] = []
-    rounds = 0
-    try:
-        while len(merges) < n_merges:
-            rounds += 1
-            want = min(max_batch, n_merges - len(merges))
-            top = (_pair_counts(seqs)
-                   .orderBy(F.col("pair_count").desc(),
-                            F.col("lhs").asc(), F.col("rhs").asc())
-                   .limit(want + 1).collect())
-            if not top:
-                break
-            batch: list[tuple[str, str, int]] = []
-            used: set[str] = set()
-            stop_at = min(want, len(top))
-            for i in range(stop_at):
-                lhs, rhs = top[i]["lhs"], top[i]["rhs"]
-                if lhs in used or rhs in used or (lhs + rhs) in symbols:
-                    break
-                batch.append((lhs, rhs, int(top[i]["pair_count"])))
-                used.update((lhs, rhs, lhs + rhs))
-                symbols.add(lhs + rhs)
-            if not batch:
-                # the round's argmax itself collides with an existing
-                # symbol (counts will blend — exactly what sequential
-                # does); a single-merge round is trivially sequential
-                lhs, rhs = top[0]["lhs"], top[0]["rhs"]
-                batch.append((lhs, rhs, int(top[0]["pair_count"])))
-                symbols.add(lhs + rhs)
-            # strict-gap trim against the first pair NOT in the batch
-            while len(batch) > 1 and len(batch) < len(top) \
-                    and batch[-1][2] <= int(top[len(batch)]["pair_count"]):
-                _l, _r, _ = batch.pop()
-                symbols.discard(_l + _r)
-            for lhs, rhs, cnt in batch:
-                merges.append((len(merges) + 1, lhs, rhs, cnt))
-            nxt_seq = F.col("seq")
-            for lhs, rhs, _ in batch:
-                nxt_seq = F.replace(
-                    nxt_seq, F.lit(SEP + lhs + SEP + SEP + rhs + SEP),
-                    F.lit(SEP + lhs + rhs + SEP))
-            # localCheckpoint, not cache: it TRUNCATES the logical plan.
-            # With cache the lineage grows ~batch nested replaces per
-            # round and Catalyst re-analyzes the whole tree every round —
-            # a thousand-merge run OOMs the driver on plan bookkeeping
-            # alone, while execution reads one cached relation regardless.
-            nxt = seqs.select(nxt_seq.alias("seq"), "cnt") \
-                .localCheckpoint(eager=True)
-            seqs.unpersist()
-            seqs = nxt
-    finally:
-        seqs.unpersist()
-    if stats is not None:
-        stats["rounds"] = rounds
-    return merges
-
-
 def _bpe_train_from_vocab(vocab: list, n_merges: int
                           ) -> list[tuple[int, str, str, int]]:
     """Classic incremental-update BPE over a collected (term, cnt)
     vocabulary: pair-count dict + lazy-deletion heap, per-merge work
-    proportional to the characters of AFFECTED words only.  Same argmax
-    (count DESC, lhs ASC, rhs ASC) and same one-pass leftmost-disjoint
-    merge as the engine's replace kernel, so the merge table is
-    bit-identical to ``bpe_train`` (property-pinned)."""
+    proportional to the characters of AFFECTED words only.  Argmax is
+    (count DESC, lhs ASC, rhs ASC) and each merge is one leftmost-
+    disjoint pass — the semantics the SQL replace replay reproduces."""
     import heapq
     from collections import defaultdict
 
@@ -338,24 +141,24 @@ def _bpe_train_from_vocab(vocab: list, n_merges: int
     return merges
 
 
-def bpe_train_local(df: DataFrame, n_merges: int,
-                    text_col: str = "text",
-                    max_types: int = 50_000_000
-                    ) -> list[tuple[int, str, str, int]]:
-    """The PRODUCTION path to a 32k-merge vocabulary: aggregate the
-    corpus to its (term, cnt) vocabulary distributedly — the only
-    corpus-sized step — then COLLECT that bounded relation and run the
-    classic incremental-update BPE on the driver.  Bit-identical to
-    ``bpe_train`` (property-pinned in test_round4_bpe.py).
+def bpe_train(df: DataFrame, n_merges: int,
+              text_col: str = "text",
+              max_types: int = 50_000_000
+              ) -> list[tuple[int, str, str, int]]:
+    """Learn up to ``n_merges`` BPE merges from the corpus.  Returns the
+    merge table as a (bounded, n_merges-row) driver-side list of
+    (merge_id, lhs, rhs, pair_count) — 1-based merge_id in learn order;
+    fewer rows if the vocabulary is fully merged first.
 
-    Why this is the right split: merge selection is inherently
-    sequential greedy over a few-hundred-MB state, while each Spark
-    round costs two whole-cluster job latencies — measured 0.5-2.4
-    s/merge for ``bpe_train``/``bpe_train_batched`` (hours for 32k)
-    versus seconds end-to-end here.  This is how public tokenizer
-    pipelines train (subword-nmt/HuggingFace run on a collected corpus
-    or vocabulary); Spark's job is the 100-TB corpus scan, not the
-    merge loop.
+    The corpus is aggregated to its (term, cnt) vocabulary distributedly
+    — the only corpus-sized step — then that bounded relation is
+    collected and the merge loop runs on the driver with incremental
+    pair-count updates.  Merge selection is inherently sequential greedy
+    over a few-hundred-MB state; a Spark round per merge would cost two
+    whole-cluster job latencies each (hours for a 32k vocabulary) versus
+    seconds here.  This is how public tokenizer pipelines train
+    (subword-nmt/HuggingFace run on a collected corpus or vocabulary);
+    Spark's job is the corpus scan, not the merge loop.
 
     ``max_types`` guards the collect: a vocabulary beyond it raises
     instead of OOMing the driver (at web scale a 100M-type vocabulary is
@@ -374,140 +177,28 @@ def bpe_train_local(df: DataFrame, n_merges: int,
                                  n_merges)
 
 
-def bpe_train_df(df: DataFrame, n_merges: int,
-                 text_col: str = "text") -> DataFrame:
-    """``bpe_train`` as a DataFrame (merge_id, lhs, rhs, pair_count)."""
-    merges = bpe_train(df, n_merges, text_col)
-    return df.sparkSession.createDataFrame(
-        merges, "merge_id long, lhs string, rhs string, pair_count long")
-
-
 def bpe_encode(df: DataFrame, merges: list[tuple[int, str, str, int]],
                id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """Apply a learned merge table to every document: per-doc exact token
-    and subword counts — (id, n_tokens, n_subwords).
+    and subword counts — (id, n_tokens, n_subwords).  Documents with no
+    token (NULL or blank text) are absent.
 
-    The merge chain compiles to ONE nested JVM ``replace`` expression per
-    merge applied to each token's separator-encoded sequence — row-local,
-    zero shuffle beyond the final per-doc aggregation, no Python.
+    Semantics: SEQUENTIAL merge application — one leftmost-disjoint pass
+    per merge, in learn order, word-internal and end-of-word-bounded —
+    exactly the SQL oracle's ``replace`` chain.  (The rank-priority
+    re-scan encoder — subword-nmt ``apply_bpe``, which re-checks earlier
+    merges after later ones create new adjacencies — can differ on words
+    where a later merge recreates an earlier pair.)
 
-    Semantics: SEQUENTIAL merge application — one classic leftmost-
-    disjoint pass per merge, in learn order, word-internal and
-    end-of-word-bounded — deterministic and replayable by any SQL engine
-    with literal replace (the double-separator layout makes literal
-    replace equal the classic one-pass merge; see the module docstring).
-    (The rank-priority re-scan encoder — subword-nmt ``apply_bpe``, which
-    re-checks earlier merges after later ones create new adjacencies —
-    can differ on words where a later merge recreates an earlier pair;
-    ``bpe_encode_batched`` implements the SAME sequential semantics so
-    the two encoders are bit-identical.)
-
-    Scope: the expression-chain form is for bounded merge tables (hundreds
-    — analysis/validation workloads, and the cross-engine oracle).  For a
-    production 32k-merge vocabulary the expression tree would blow up —
-    use ``bpe_encode_batched`` (Arrow-batched kernel, merge table shipped
-    once per worker).
-    """
-    tok = (df.select(F.col(id_col).alias("id"),
-                     F.explode(lower_ascii_tokens(F.col(text_col)))
-                     .alias("term"))
-           .filter(~F.col("term").contains(SEP)
-                   & ~F.col("term").contains(EOW)))
-    enc = _initial_seq(F.col("term"))
-    for _, lhs, rhs, _cnt in merges:
-        enc = F.replace(enc, F.lit(SEP + lhs + SEP + SEP + rhs + SEP),
-                        F.lit(SEP + lhs + rhs + SEP))
-    n_syms = F.size(F.split(enc, SEP + "+")) - 2
-    return (
-        tok.select("id", n_syms.alias("n_syms"))
-        .groupBy("id")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_tokens"),
-             F.sum("n_syms").cast("long").alias("n_subwords"))
-    )
-
-
-def bpe_encode_batched(df: DataFrame,
-                       merges: list[tuple[int, str, str, int]],
-                       id_col: str = "doc_id",
-                       text_col: str = "text") -> DataFrame:
-    """Production-scale BPE encoder: same contract and BIT-IDENTICAL
-    output as ``bpe_encode``, but the merge table ships once per worker
-    and each Arrow batch is encoded by a vectorized Python kernel with a
-    per-batch word cache — so a 32k-merge vocabulary costs a dict, not a
-    32k-deep expression tree.
-
-    Semantics are the same sequential merge application as ``bpe_encode``
-    (Python ``str.replace`` is leftmost non-overlapping, exactly like the
-    JVM/SQL replace), pinned by the parity test in test_round4_bpe.py.
-    """
-    patterns = [(SEP + l + SEP + SEP + r + SEP, SEP + l + r + SEP)
-                for _, l, r, _ in merges]
-    schema = T.StructType([
-        T.StructField("n_tokens", T.LongType(), False),
-        T.StructField("n_subwords", T.LongType(), False),
-    ])
-
-    tok_re = re.compile(_TOKEN_CLASS)
-    trans = str.maketrans(_UPPER, _LOWER)
-
-    @F.pandas_udf(schema)
-    def udf(texts: pd.Series) -> pd.DataFrame:
-        cache: dict[str, int] = {}
-
-        def word_syms(w: str) -> int:
-            n = cache.get(w)
-            if n is None:
-                s = SEP + (SEP + SEP).join(list(w) + [EOW]) + SEP
-                for patt, repl in patterns:
-                    s = s.replace(patt, repl)
-                n = s.count(SEP) // 2
-                cache[w] = n
-            return n
-
-        nt, ns = [], []
-        for t in texts.tolist():
-            words = [w for w in tok_re.findall((t or "").translate(trans))
-                     if SEP not in w and EOW not in w]
-            nt.append(len(words))
-            ns.append(sum(word_syms(w) for w in words))
-        return pd.DataFrame({"n_tokens": nt, "n_subwords": ns},
-                            index=texts.index)
-
-    out = df.select(F.col(id_col).alias("id"),
-                    udf(F.col(text_col)).alias("e"))
-    return (out.filter(F.col("e.n_tokens") > 0)
-            .select("id", F.col("e.n_tokens").alias("n_tokens"),
-                    F.col("e.n_subwords").alias("n_subwords")))
-
-
-def bpe_encode_ranked(df: DataFrame,
-                      merges: list[tuple[int, str, str, int]],
-                      id_col: str = "doc_id",
-                      text_col: str = "text") -> DataFrame:
-    """BIT-IDENTICAL to ``bpe_encode``/``bpe_encode_batched``, at
-    O(word-length) per unique word instead of O(n_merges): the encoder a
-    32k-merge production vocabulary actually needs.
-
-    ``bpe_encode_batched`` scans the FULL merge-pattern list per unique
-    word (32k ``str.replace`` calls/word — per-word cost grows with the
-    vocabulary).  This encoder replays the sequential semantics with a
-    rank cursor over the word's own adjacent pairs: between merge
-    applications the word is static, so the next merge the sequential
-    pass applies is exactly the present pair with the minimum rank ≥
-    cursor; apply it leftmost-non-overlapping (the proven double-
-    separator ``replace`` semantics on symbol lists), advance the cursor
-    past its rank, repeat.  Per-word cost is O(applied · len) — bounded
-    by the word, independent of vocabulary size.  A pair can hold
-    SEVERAL ranks (training may re-select a pair whose adjacency is
-    re-created by a later ambiguous concatenation); the per-pair sorted
-    rank list + bisect keeps that case sequential-exact.
-
-    Parity with the expression-chain/batched encoders is pinned by
-    tests/test_round5_bpe_ranked.py (trained merges over adversarial
-    reduplicated + Zipfian corpora) and the driver oracle (same SQL
-    replay as `bpe_encode`)."""
-    from bisect import bisect_left
-
+    Cost is O(word length) per unique word, independent of the merge
+    table size: between merge applications a word is static, so the next
+    merge the sequential pass applies is exactly the present pair with
+    the minimum rank ≥ a cursor; apply it, advance the cursor past its
+    rank, repeat.  A pair can hold SEVERAL ranks (training may re-select
+    a pair whose adjacency a later concatenation re-creates); the
+    per-pair sorted rank list + bisect keeps that case sequential-exact.
+    The merge table ships once per worker; each Arrow batch keeps a
+    per-batch word cache.  Row-local, no shuffle."""
     ranks: dict[tuple[str, str], list[int]] = {}
     pairs_at: list[tuple[str, str]] = []
     for pos, (_, l, r, _) in enumerate(merges):

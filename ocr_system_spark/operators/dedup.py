@@ -8,8 +8,9 @@ Five dedup strategies, all expressed Spark-first:
                     intersection/union counts. Shingles travel as 64-bit
                     hashes (collisions ~n²/2^64 — exact w.h.p., and the
                     DuckDB string-set oracle confirms it at test scale)
-* MinHash + LSH   — k JVM-side hash permutations over shingles → banded
-                    signature buckets → candidate pairs → EXACT Jaccard
+* MinHash + LSH   — k affine permutations over md5-hashed shingles (one
+                    fused Arrow kernel) → banded signature buckets →
+                    candidate pairs → EXACT Jaccard
                     verification of candidates (so output matches the exact
                     all-pairs answer whenever LSH recall holds; bands/rows
                     are sized so the miss probability at the threshold is
@@ -31,7 +32,7 @@ from __future__ import annotations
 import random
 import re
 from functools import lru_cache
-from typing import Iterator, Optional
+from typing import Optional
 
 import numpy as np
 import pandas as pd
@@ -197,16 +198,6 @@ def _minhash_params(k: int, seed: int = 1234567):
     return [(rng.randrange(1, MERSENNE31), rng.randrange(0, MERSENNE31)) for _ in range(k)]
 
 
-def with_shingle_hashes(df: DataFrame, shingle_col: str = "shingles",
-                        out_col: str = "sh_hashes") -> DataFrame:
-    """64-bit xxhash64 per shingle (JVM-side, hashed ONCE). Downstream —
-    MinHash permutations AND exact-verification set intersections — works
-    on these 8-byte longs instead of the raw shingle strings, which cuts
-    shuffle bytes by the average shingle length (~4×)."""
-    return df.withColumn(
-        out_col, F.transform(F.col(shingle_col), lambda s: F.xxhash64(s)))
-
-
 # odd 64-bit mixing multipliers (splitmix64 constants) — one per shingle
 # position so reordered words hash differently. Positions beyond the
 # seeded six are derived on demand (splitmix64 of the position, forced
@@ -335,45 +326,6 @@ def with_hashed_shingles_minhash(
             .withColumn("sh_hashes", F.col("_smh.sh_hashes"))
             .withColumn("minhash", F.col("_smh.minhash"))
             .drop("_smh"))
-
-
-def with_minhash(df: DataFrame, shingle_col: str = "shingles", k: int = 64,
-                 out_col: str = "minhash", seed: int = 1234567,
-                 hash_col: Optional[str] = None) -> DataFrame:
-    """k-permutation MinHash signature:
-    sig_i = min over shingles of pmod(a_i·(xxhash64(s) mod 2^31−1) + b_i, 2^31−1).
-
-    Hybrid execution: shingles are hashed ONCE on the JVM (xxhash64 — pass
-    ``hash_col`` to reuse a precomputed with_shingle_hashes column), then
-    the k affine permutations + min-reduce run as one numpy matrix op per
-    row inside a pandas UDF. Spark's higher-order-function lambdas are
-    interpreted per element — k=64 separate `transform` passes measured
-    ~10× slower than the (shingles×k) numpy broadcast."""
-    params = _minhash_params(k, seed)
-    a_vec = np.array([a for a, _ in params], dtype=np.int64)[None, :]
-    b_vec = np.array([b for _, b in params], dtype=np.int64)[None, :]
-
-    if hash_col is not None:
-        hashes = F.col(hash_col)
-    else:
-        hashes = F.transform(F.col(shingle_col), lambda s: F.xxhash64(s))
-
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def sig_udf(harr: pd.Series) -> pd.Series:
-        out = []
-        empty = [int(MERSENNE31)] * a_vec.shape[1]
-        for h in harr:
-            if h is None or len(h) == 0:
-                out.append(empty)
-                continue
-            # fold the 64-bit hash into the 31-bit permutation universe
-            # here (numpy % matches Spark pmod: non-negative result)
-            hv = (np.asarray(h, dtype=np.int64) % MERSENNE31)[:, None]  # (n, 1)
-            sig = ((hv * a_vec + b_vec) % MERSENNE31).min(axis=0)       # (k,)
-            out.append(sig.tolist())
-        return pd.Series(out, index=harr.index, dtype=object)
-
-    return df.withColumn(out_col, sig_udf(hashes))
 
 
 def _salted_self_join(

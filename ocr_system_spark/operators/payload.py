@@ -11,10 +11,9 @@ per-row Python at the Spark layer.
 
 from __future__ import annotations
 
-from typing import Iterator, List, Optional, Tuple
+from typing import List, Optional, Tuple
 
 import pandas as pd
-from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 from ocr_system_spark.functions import html_extract, pdf_layout
@@ -25,15 +24,6 @@ SPAN_TYPE = T.ArrayType(
         T.StructField("end", T.IntegerType(), False),
     ])
 )
-
-TEXT_SCHEMA = T.StructType([
-    T.StructField("url", T.StringType(), False),
-    T.StructField("extracted_text", T.StringType(), True),
-    T.StructField("spans", SPAN_TYPE, True),
-    T.StructField("payload_kind", T.StringType(), False),
-    T.StructField("n_bytes", T.LongType(), False),
-    T.StructField("extract_ok", T.BooleanType(), False),
-])
 
 
 def _sniff(payload: Optional[bytes]) -> str:
@@ -48,7 +38,8 @@ def _sniff(payload: Optional[bytes]) -> str:
 
 
 def extract_text_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Pure-pandas kernel: (url, html) in → TEXT_SCHEMA columns out."""
+    """Pure-pandas kernel: (url, html) in → (url, extracted_text, spans,
+    payload_kind, n_bytes, extract_ok) out."""
     payloads: List[Optional[bytes]] = [
         bytes(b) if b is not None else None for b in pdf["html"].tolist()
     ]
@@ -90,14 +81,3 @@ def extract_text_batch(pdf: pd.DataFrame) -> pd.DataFrame:
         "n_bytes": [len(b) if b else 0 for b in payloads],
         "extract_ok": ok,
     })
-
-
-def extract_text(pages: DataFrame) -> DataFrame:
-    """pages(url, html, …) → (url, extracted_text, spans, payload_kind,
-    n_bytes, extract_ok). Narrow; only (url, html) crosses into Python."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield extract_text_batch(pdf)
-
-    return pages.select("url", "html").mapInPandas(run, schema=TEXT_SCHEMA)

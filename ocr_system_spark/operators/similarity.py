@@ -484,24 +484,6 @@ def _hyperplanes(n_planes: int, dim: int, seed: int = 424242) -> List[List[float
     return [[rng.gauss(0.0, 1.0) for _ in range(dim)] for _ in range(n_planes)]
 
 
-def with_lsh_bucket(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    n_planes: int = 8,
-    dim: int = 64,
-    seed: int = 424242,
-    out_col: str = "bucket",
-) -> DataFrame:
-    """Random-hyperplane (SRP) LSH bucket id: bit i = sign(v·p_i)."""
-    planes = _hyperplanes(n_planes, dim, seed)
-    bucket = F.lit(0)
-    for i, p in enumerate(planes):
-        lit_plane = F.array(*[F.lit(x) for x in p])
-        bit = (dot(F.col(vec_col), lit_plane) > 0).cast("int")
-        bucket = bucket + (bit * (1 << i))
-    return df.withColumn(out_col, bucket)
-
-
 def _bucket_array(vec_col: str, n_tables: int, n_planes: int, dim: int,
                   seed: int) -> Column:
     """Array of n_tables SRP bucket ids (one per independent hash table).
@@ -520,8 +502,11 @@ def _bucket_array(vec_col: str, n_tables: int, n_planes: int, dim: int,
     therefore identical rounding, identical sign) as the JVM
     ``aggregate``'s sequential fold. JVM edge semantics reproduced:
     a NaN dot compares ``> 0`` true under Spark's NaN-is-largest rule
-    (``| np.isnan``); a NULL vector or a length≠dim vector yields NULL
-    bucket ids (zip_with pads with nulls → null dot → null bucket)."""
+    (``| np.isnan``); a NULL vector, a length≠dim vector or a vector with
+    a NULL element yields NULL bucket ids (zip_with pads with nulls → null
+    dot → null bucket).  Arrow hands a NULL element to pandas as NaN, so
+    the kernel could not tell it from a NaN element: such rows are nulled
+    on the JVM side before they reach it."""
     planes = np.array(
         [p for t in range(n_tables)
          for p in _hyperplanes(n_planes, dim, seed + 1000 * t)],
@@ -549,7 +534,8 @@ def _bucket_array(vec_col: str, n_tables: int, n_planes: int, dim: int,
                 out[i] = [int(x) for x in bkts[j]]
         return pd.Series(out, index=vecs.index, dtype=object)
 
-    return bucket_udf(F.col(vec_col))
+    vec = F.col(vec_col)
+    return bucket_udf(F.when(~F.exists(vec, lambda x: x.isNull()), vec))
 
 
 def lsh_topk(
@@ -644,13 +630,6 @@ def cosine_dup_pairs_lsh(
         .filter(F.col("score") >= min_cosine)
         .select("id_a", "id_b")
     )
-
-
-# Compatibility alias: ``cosine_dup_pairs`` was the round-1 name of the
-# exact form and the round-2 name of the LSH form — the approximate
-# semantics are now EXPLICIT in the name. The alias stays so existing
-# callers keep working, but new code should pick `_lsh` or `_exact`.
-cosine_dup_pairs = cosine_dup_pairs_lsh
 
 
 def cosine_dup_pairs_exact(

@@ -34,12 +34,6 @@ def export_csv(results: DataFrame, path: str, mode: str = "overwrite",
         .csv(path))
 
 
-def append_csv(results: DataFrame, path: str) -> None:
-    """Append-mode CSV (reference writes header only when the file is new;
-    Spark's csv source writes a header per part-file, which readers handle)."""
-    export_csv(results, path, mode="append")
-
-
 # ---------------------------------------------------------------------------
 # XLSX export (reference K2) — stdlib-only OOXML writer
 # ---------------------------------------------------------------------------

@@ -282,11 +282,3 @@ def generate_pages(
     df = pd.DataFrame(rows)
     df["warc_ts"] = pd.to_datetime(df["warc_ts"], utc=True).dt.tz_convert("UTC")
     return df
-
-
-PAGES_COLUMNS = ["url", "warc_ts", "html", "text", "lang"]
-
-
-def pages_input(df: pd.DataFrame) -> pd.DataFrame:
-    """Project to the canonical 5-column input_hint schema."""
-    return df[PAGES_COLUMNS].copy()

@@ -138,11 +138,28 @@ def test_cosine_dup_pairs_finds_scaled_copies(spark, emb):
     e = emb.select("vec_id", "embedding")
     scaled = e.select((F.col("vec_id") + 100000).alias("vec_id"),
                       F.transform("embedding", lambda x: x * F.lit(1.01)).alias("embedding"))
-    pairs = similarity.cosine_dup_pairs(e.union(scaled), 0.95).toPandas()
+    pairs = similarity.cosine_dup_pairs_lsh(e.union(scaled), 0.95).toPandas()
     n = e.count()
     found = set(zip(pairs["id_a"], pairs["id_b"]))
     assert all((i, i + 100000) in found for i in range(n))
     assert len(found) == n  # nothing spurious at 0.95 on this corpus
+
+
+def test_srp_bucket_null_element_is_null_nan_element_is_all_ones(spark):
+    """A NULL vector element makes the JVM dot NULL, so its bucket ids are
+    NULL, as for a NULL vector; a NaN element makes every dot NaN, which
+    compares > 0 (Spark's NaN-is-largest rule), so every plane bit is
+    set."""
+    rows = [(0, [1.0, None, 2.0, 3.0]),
+            (1, [1.0, float("nan"), 2.0, 3.0]),
+            (2, None)]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    got = {r.vec_id: r.b for r in df.select(
+        "vec_id", similarity._bucket_array("embedding", n_tables=2,
+                                           n_planes=3, dim=4,
+                                           seed=7).alias("b")).collect()}
+    assert got[0] == got[2] == [None, None]
+    assert got[1] == [0b111, (1 << 3) + 0b111]
 
 
 def test_brute_force_scored_volume_is_partial_topk(spark, emb):
@@ -237,15 +254,3 @@ def test_hashed_shingles_preserve_string_shingle_semantics(spark, docs):
         for b in ids[:10]:
             if a < b:
                 assert len(strs[a] & strs[b]) == len(hsh[a] & hsh[b]), (a, b)
-
-
-def test_with_minhash_hash_col_path_matches_inline_path(spark, docs):
-    """with_minhash's two entry forms (hash shingles inline vs reuse a
-    precomputed with_shingle_hashes column) must emit identical signatures."""
-    d = docs.limit(30)
-    sh = dedup.with_shingles(d, "text", 3)
-    a = dedup.with_minhash(sh, "shingles", k=32).select("doc_id", "minhash").collect()
-    pre = dedup.with_shingle_hashes(sh)
-    b = dedup.with_minhash(pre, k=32, hash_col="sh_hashes").select("doc_id", "minhash").collect()
-    assert {r.doc_id: tuple(r.minhash) for r in a} == \
-           {r.doc_id: tuple(r.minhash) for r in b}

@@ -119,13 +119,13 @@ def test_cosine_dup_pairs_bucketed_matches_exact(spark):
     all-pairs answer (planted scaled copies sit at cosine ≈ 1, where the
     analytical miss probability is ~1e-21)."""
     from ocr_system_spark.operators.similarity import (
-        cosine_dup_pairs, cosine_dup_pairs_exact)
+        cosine_dup_pairs_exact, cosine_dup_pairs_lsh)
     e = load(spark, SF, "embeddings").select("vec_id", "embedding")
     scaled = e.select(
         (F.col("vec_id") + 100000).alias("vec_id"),
         F.transform("embedding", lambda x: x * F.lit(1.01)).alias("embedding"))
     u = e.union(scaled)
-    got = {(r.id_a, r.id_b) for r in cosine_dup_pairs(u).collect()}
+    got = {(r.id_a, r.id_b) for r in cosine_dup_pairs_lsh(u).collect()}
     exp = {(r.id_a, r.id_b) for r in cosine_dup_pairs_exact(u).collect()}
     assert got == exp and exp
 

@@ -3,15 +3,17 @@ classic algorithm, determinism, and edge cases."""
 from __future__ import annotations
 
 import collections
+import re
 
 import pytest
 
+from ocr_system_spark.functions.tokens import (
+    ASCII_LOWER, ASCII_UPPER, TOKEN_CLASS)
 from ocr_system_spark.operators.bpe import (
     EOW,
+    SEP,
     bpe_encode,
     bpe_train,
-    bpe_train_batched,
-    bpe_train_df,
     word_vocabulary,
 )
 
@@ -45,6 +47,32 @@ def ref_bpe(words: list[str], n: int):
             new[tuple(out)] += c
         vocab = new
     return merges
+
+
+def ref_encode(rows, merges):
+    """Reference encoder: the SQL oracle's sequential ``str.replace`` chain
+    over the double-separator layout.  Sorted (id, n_tokens, n_subwords);
+    documents without a token are absent."""
+    trans = str.maketrans(ASCII_UPPER, ASCII_LOWER)
+    out = []
+    for doc_id, text in rows:
+        words = [w for w in re.findall(TOKEN_CLASS,
+                                       (text or "").translate(trans))
+                 if SEP not in w and EOW not in w]
+        n_sub = 0
+        for w in words:
+            s = SEP + (SEP + SEP).join(list(w) + [EOW]) + SEP
+            for _, l, r, _ in merges:
+                s = s.replace(SEP + l + SEP + SEP + r + SEP, SEP + l + r + SEP)
+            n_sub += s.count(SEP) // 2
+        if words:
+            out.append((doc_id, len(words), n_sub))
+    return sorted(out)
+
+
+def _encoded(df):
+    return sorted((r["id"], r["n_tokens"], r["n_subwords"])
+                  for r in df.collect())
 
 
 CORPUS = [
@@ -86,10 +114,16 @@ class TestBpeTrain:
         with pytest.raises(ValueError):
             bpe_train(_df(spark), 0)
 
-    def test_train_df_schema(self, spark):
-        out = bpe_train_df(_df(spark), 3)
-        assert out.columns == ["merge_id", "lhs", "rhs", "pair_count"]
-        assert out.count() == 3
+    def test_train_df_schema(self, spark, tmp_path):
+        import pandas as pd
+        import __spark_entry__ as entry
+        pd.DataFrame(CORPUS, columns=["doc_id", "text"]) \
+            .to_parquet(tmp_path / "documents.parquet", index=False)
+        words = " ".join(t for _, t in CORPUS).split()
+        for name in ("bpe_train", "bpe_train_batched", "bpe_train_local"):
+            out = entry.queries()[name](spark, str(tmp_path))
+            assert out.columns == ["merge_id", "lhs", "rhs", "pair_count"]
+            assert [tuple(r) for r in out.collect()] == ref_bpe(words, 8)
 
 
 class TestBpeEncode:
@@ -103,11 +137,25 @@ class TestBpeEncode:
         assert out[0]["n_subwords"] == 3 * 4 + 2 * 6 + 4 * 1 + 1 * 4
         assert out[1]["n_tokens"] == 4
         assert out[1]["n_subwords"] == 2 * 4 + 2 * 1
+        assert _encoded(bpe_encode(df, m)) == ref_encode(CORPUS, m)
 
     def test_no_merges_counts_chars_plus_eow(self, spark):
         df = _df(spark, [(0, "ab c")])
         out = bpe_encode(df, []).collect()[0]
         assert out["n_tokens"] == 2 and out["n_subwords"] == 3 + 2
+
+    def test_matches_replace_chain_on_mixed_corpus(self, spark):
+        rows = [
+            (0, "low lower newest widest the quick brown fox"),
+            (1, "é中 ünïcôdé mixed ASCII and Ünï"),
+            (2, "aaa aa a aaaa"),
+            (3, None),
+            (4, "repeated repeated repeated word word"),
+            (5, "x"),
+        ]
+        df = spark.createDataFrame(rows, "doc_id long, text string")
+        m = bpe_train(df, 8)
+        assert _encoded(bpe_encode(df, m)) == ref_encode(rows, m)
 
     def test_null_text_doc_absent(self, spark):
         df = spark.createDataFrame([(0, "x"), (1, None)],
@@ -161,58 +209,37 @@ class TestReduplicationMerges:
 
 
 class TestBatchedEncoderParity:
-    def test_bit_identical_to_expression_encoder(self, spark):
-        from ocr_system_spark.operators.bpe import bpe_encode_batched
-        rows = [
-            (0, "low lower newest widest the quick brown fox"),
-            (1, "é中 ünïcôdé mixed ASCII and Ünï"),
-            (2, "aaa aa a aaaa"),
-            (3, None),
-            (4, "repeated repeated repeated word word"),
-            (5, "x"),
-        ]
-        df = spark.createDataFrame(rows, "doc_id long, text string")
-        m = bpe_train(df, 8)
-        a = sorted(bpe_encode(df, m).collect())
-        b = sorted(bpe_encode_batched(df, m).collect())
-        assert a == b
-
     def test_empty_merge_table(self, spark):
-        from ocr_system_spark.operators.bpe import bpe_encode_batched
         df = spark.createDataFrame([(0, "ab c")], "doc_id long, text string")
-        a = sorted(bpe_encode(df, []).collect())
-        b = sorted(bpe_encode_batched(df, []).collect())
-        assert a == b
+        assert _encoded(bpe_encode(df, [])) == ref_encode([(0, "ab c")], [])
 
 
 class TestBatchedTrainerParity:
-    """bpe_train_batched must be BIT-IDENTICAL to sequential bpe_train —
-    the whole point of the strict acceptance rule (disjointness, symbol-
-    collision stop, strict count gap)."""
+    """The hard cases for merging several pairs per round — symbol
+    collisions, all-tie counts, reduplication, early exhaustion.
+    ``bpe_train``, which also serves the ``bpe_train_batched`` query,
+    must be BIT-IDENTICAL to the sequential reference on each."""
 
     def test_identical_on_pinned_corpus(self, spark):
         df = _df(spark)
-        seq = {nm: bpe_train(df, nm) for nm in (1, 4, 8)}
-        for nm, mb in ((1, 32), (4, 2), (8, 4), (8, 32)):
-            assert bpe_train_batched(df, nm, max_batch=mb) == seq[nm], \
-                (nm, mb)
+        words = " ".join(t for _, t in CORPUS).split()
+        for nm in (1, 4, 8):
+            assert bpe_train(df, nm) == ref_bpe(words, nm), nm
 
     def test_identical_under_heavy_ties(self, spark):
-        # every pair count ties — the strict-gap rule must degrade the
-        # batch to one merge per round, not diverge
-        df = _df(spark, [(0, "ab ab cd cd ef ef gh gh")])
-        assert bpe_train_batched(df, 8, max_batch=8) == bpe_train(df, 8)
+        text = "ab ab cd cd ef ef gh gh"
+        assert bpe_train(_df(spark, [(0, text)]), 8) == \
+            ref_bpe(text.split(), 8)
 
     def test_identical_on_reduplication_corpus(self, spark):
-        rows = [(0, "abab abab bobo bobo aaaa aaaa aaaaa murmur")]
-        df = spark.createDataFrame(rows, "doc_id long, text string")
+        text = "abab abab bobo bobo aaaa aaaa aaaaa murmur"
+        df = _df(spark, [(0, text)])
         for nm in (2, 8):
-            assert bpe_train_batched(df, nm, max_batch=6) == \
-                bpe_train(df, nm), nm
+            assert bpe_train(df, nm) == ref_bpe(text.split(), nm), nm
 
     def test_identical_on_random_corpora(self, spark):
         """Randomized property: small alphabets force symbol collisions
-        and conflicting top pairs — the hard cases for batching."""
+        and conflicting top pairs."""
         import random
         rng = random.Random(23)
         for trial in range(3):
@@ -223,21 +250,19 @@ class TestBatchedTrainerParity:
                      for _ in range(n_words)]
             df = _df(spark, [(0, " ".join(words))])
             nm = rng.randint(2, 6)
-            got = bpe_train_batched(df, nm, max_batch=4)
-            want = bpe_train(df, nm)
-            assert got == want, (trial, words, nm)
+            assert bpe_train(df, nm) == ref_bpe(words, nm), \
+                (trial, words, nm)
 
     def test_exhaustion_stops_early(self, spark):
         df = _df(spark, [(0, "ha ha ha")])
-        got = bpe_train_batched(df, 50, max_batch=16)
-        assert got == bpe_train(df, 50)
+        got = bpe_train(df, 50)
+        assert got == ref_bpe(["ha", "ha", "ha"], 50)
         assert len(got) == 2    # a+EOW, then h+aEOW: fully merged
 
     def test_invalid_args(self, spark):
-        with pytest.raises(ValueError):
-            bpe_train_batched(_df(spark), 0)
-        with pytest.raises(ValueError):
-            bpe_train_batched(_df(spark), 3, max_batch=0)
+        for nm in (0, -1):
+            with pytest.raises(ValueError):
+                bpe_train(_df(spark), nm)
 
 
 class TestEowMarkerNotForgeable:
@@ -269,30 +294,29 @@ class TestEowMarkerNotForgeable:
 
 
 class TestLocalTrainerParity:
-    """bpe_train_local (collect the bounded vocabulary, classic
-    incremental-update BPE on the driver) must be BIT-IDENTICAL to the
-    distributed sequential trainer — it is the production 32k-merge
-    path, so the parity matters most here."""
+    """bpe_train (collect the bounded vocabulary, classic incremental-
+    update BPE on the driver) must be BIT-IDENTICAL to the from-scratch
+    reference ``ref_bpe`` — it is the production 32k-merge path, so the
+    parity matters most here."""
 
     def test_identical_on_pinned_corpus(self, spark):
-        from ocr_system_spark.operators.bpe import bpe_train_local
         df = _df(spark)
+        words = " ".join(t for _, t in CORPUS).split()
         for nm in (1, 6, 20):
-            assert bpe_train_local(df, nm) == bpe_train(df, nm), nm
+            assert bpe_train(df, nm) == ref_bpe(words, nm), nm
 
     def test_identical_under_ties_and_reduplication(self, spark):
-        from ocr_system_spark.operators.bpe import bpe_train_local
-        for rows in ([(0, "ab ab cd cd ef ef gh gh")],
-                     [(0, "abab abab bobo bobo aaaa aaaa aaaaa murmur")],
-                     [(0, "Ha ha HA")]):
-            df = _df(spark, rows)
-            assert bpe_train_local(df, 12) == bpe_train(df, 12), rows
+        for text in ("ab ab cd cd ef ef gh gh",
+                     "abab abab bobo bobo aaaa aaaa aaaaa murmur",
+                     "Ha ha HA"):
+            df = _df(spark, [(0, text)])
+            assert bpe_train(df, 12) == ref_bpe(text.lower().split(), 12), \
+                text
 
     def test_identical_on_random_small_alphabet(self, spark):
         """Small alphabets maximize symbol collisions and count churn —
         the hard case for the incremental pair-count updates."""
         import random
-        from ocr_system_spark.operators.bpe import bpe_train_local
         rng = random.Random(31)
         for trial in range(3):
             words = ["".join(rng.choice("abc")
@@ -300,7 +324,7 @@ class TestLocalTrainerParity:
                      for _ in range(rng.randint(8, 40))]
             df = _df(spark, [(0, " ".join(words))])
             nm = rng.randint(3, 12)
-            assert bpe_train_local(df, nm) == bpe_train(df, nm), \
+            assert bpe_train(df, nm) == ref_bpe(words, nm), \
                 (trial, words, nm)
 
     def test_pure_python_core_matches_ref_on_volume(self):
@@ -319,11 +343,11 @@ class TestLocalTrainerParity:
         assert got == want
 
     def test_max_types_guard(self, spark):
-        import pytest as _pytest
-        from ocr_system_spark.operators.bpe import bpe_train_local
         df = _df(spark, [(0, "one two three")])
-        with _pytest.raises(ValueError, match="max_types"):
-            bpe_train_local(df, 2, max_types=2)
+        with pytest.raises(ValueError, match="max_types"):
+            bpe_train(df, 2, max_types=2)
+        assert bpe_train(df, 2, max_types=3) == \
+            ref_bpe(["one", "two", "three"], 2)
 
 
 class TestOracleExhaustionGraceful:
