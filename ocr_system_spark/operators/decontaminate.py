@@ -14,10 +14,11 @@ distinct shingle-hash set is BROADCAST and the contamination flag is a
 map-side broadcast semi-join on a 64-bit hash — the corpus is touched in
 ONE scan with NO shuffle for the filter form; the per-doc hit-count form
 adds exactly one doc-keyed aggregation. Shingles travel as
-md5-derived 64-bit hashes (md5_number_lower — DuckDB-replayable) (``with_hashed_shingles`` — same kernel and
-hash as the dedup family, so a corpus already signed for dedup reuses its
-arrays), and equality of hash sets equals equality of string sets w.h.p.
-(collisions ~n²/2^64).
+md5-derived 64-bit hashes (md5_number_lower — DuckDB-replayable) — the
+same kernel and hash as the dedup family, so a corpus already signed for
+dedup reuses its arrays — and equality of hash sets equals equality of
+string sets w.h.p. (collisions ~n²/2^64). Each side's kernel runs once
+per row, in one ``mapInArrow`` pass that drops rows with no shingle.
 
 ``n`` defaults to 8: long enough that natural re-use of common phrasing
 does not flag (the published pipelines use 8–13), short enough that a
@@ -31,14 +32,14 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .dedup import with_hashed_shingles
+from .dedup import _shingle_rows
 
 __all__ = ["contamination_hits", "decontaminate", "decontaminate_bloom"]
 
 
 def _bench_shingles(benchmark: DataFrame, text_col: str, n: int) -> DataFrame:
     return (
-        with_hashed_shingles(benchmark.select(text_col), text_col, n)
+        _shingle_rows(benchmark.select(text_col), text_col, n)
         .select(F.explode("sh_hashes").alias("h"))
         .distinct()
     )
@@ -58,7 +59,7 @@ def contamination_hits(
     Plan: corpus-side explode → broadcast hash semi-join per shingle →
     one groupBy(id); the only shuffle is the final doc-keyed count."""
     c = (
-        with_hashed_shingles(corpus.select(id_col, text_col), text_col, n)
+        _shingle_rows(corpus.select(id_col, text_col), text_col, n)
         .select(F.col(id_col).alias("id"), F.explode("sh_hashes").alias("h"))
     )
     hits = c.join(F.broadcast(_bench_shingles(benchmark, bench_text_col, n)),
@@ -82,7 +83,7 @@ def decontaminate(
     ``contamination_hits`` once and reusing its tiny dirty-id relation
     across every downstream consumer)."""
     dirty_ids = (
-        with_hashed_shingles(corpus.select(id_col, text_col), text_col, n)
+        _shingle_rows(corpus.select(id_col, text_col), text_col, n)
         .select(F.col(id_col), F.explode("sh_hashes").alias("h"))
         .join(F.broadcast(_bench_shingles(benchmark, bench_text_col, n)),
               "h", "left_semi")
@@ -197,8 +198,7 @@ def decontaminate_bloom(
         out[nz] = np.bitwise_or.reduceat(hit, offsets)
         return pd.Series(out, index=sh.index)
 
-    signed = with_hashed_shingles(
-        corpus.select(id_col, text_col), text_col, n)
+    signed = _shingle_rows(corpus.select(id_col, text_col), text_col, n)
     cand = signed.filter(bloom_any(F.col("sh_hashes")))
     dirty_ids = (
         cand.select(F.col(id_col), F.explode("sh_hashes").alias("h"))

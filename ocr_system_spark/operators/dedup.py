@@ -9,7 +9,8 @@ Five dedup strategies, all expressed Spark-first:
                     hashes (collisions ~n²/2^64 — exact w.h.p., and the
                     DuckDB string-set oracle confirms it at test scale)
 * MinHash + LSH   — k affine permutations over md5-hashed shingles (one
-                    fused Arrow kernel) → banded signature buckets →
+                    Arrow kernel pass per row, rows with no shingle
+                    dropped in the kernel) → banded signature buckets →
                     candidate pairs → EXACT Jaccard
                     verification of candidates (so output matches the exact
                     all-pairs answer whenever LSH recall holds; bands/rows
@@ -36,6 +37,7 @@ from typing import Optional
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -277,55 +279,63 @@ def with_hashed_shingles(df: DataFrame, text_col: str = "text", n: int = 3,
     return df.withColumn(out_col, udf(F.col(text_col)))
 
 
-def with_hashed_shingles_minhash(
-    df: DataFrame,
-    text_col: str = "text",
-    n: int = 3,
-    k: int = 64,
-    seed: int = 1234567,
-) -> DataFrame:
-    """ONE fused Arrow kernel: text → (sh_hashes, minhash).
+def _long_lists(arrs: list) -> pa.ListArray:
+    """``array<long>`` column from per-row int64 numpy arrays: one offsets
+    cumsum and one concatenation, no per-element Python ints."""
+    offsets = np.zeros(len(arrs) + 1, dtype=np.int32)
+    np.cumsum([a.size for a in arrs], out=offsets[1:])
+    values = np.concatenate(arrs) if arrs else np.empty(0, dtype=np.int64)
+    return pa.ListArray.from_arrays(offsets, values)
 
-    Fusing matters twice at scale: the hash arrays never round-trip
-    JVM→Python a second time for the signature pass, and the k affine
-    permutations run as ONE slab matmul over the batch's concatenated
-    shingle hashes with a segmented min (np.minimum.reduceat) — no
-    per-row Python loop at all after word hashing."""
-    params = _minhash_params(k, seed)
-    a_vec = np.array([a for a, _ in params], dtype=np.int64)[None, :]
-    b_vec = np.array([b for _, b in params], dtype=np.int64)[None, :]
-    empty_sig = [int(MERSENNE31)] * k
 
-    out_t = T.StructType([
-        T.StructField("sh_hashes", T.ArrayType(T.LongType()), False),
-        T.StructField("minhash", T.ArrayType(T.LongType()), False),
-    ])
+def _shingle_rows(df: DataFrame, text_col: str, n: int,
+                  minhash_params: Optional[list] = None) -> DataFrame:
+    """ONE ``mapInArrow`` pass over ``df``: every column but ``text_col``
+    passes through, each row's distinct word-``n``-gram hashes are appended
+    as ``sh_hashes`` (plus, given ``minhash_params``, its MinHash signature
+    as ``minhash``), and rows without a shingle are dropped in the kernel.
 
-    @F.pandas_udf(out_t)
-    def udf(texts: pd.Series) -> pd.DataFrame:
-        memo: dict = {}
-        arrs = [_hashed_shingles_one((t or "").split(), n, memo)
-                for t in texts.tolist()]
-        # per-row (n_shingles × k) expansion: the arrays are small enough to
-        # stay cache-resident, which measured ~20× faster than one big
-        # batch-wide expansion + segmented min (memory-bandwidth bound)
-        sigs: list = []
-        for a in arrs:
-            if a.size == 0:
-                sigs.append(empty_sig)
-                continue
-            hv = (a % MERSENNE31)[:, None]                 # non-negative
-            sigs.append(((hv * a_vec + b_vec) % MERSENNE31)
-                        .min(axis=0).tolist())
-        return pd.DataFrame({
-            "sh_hashes": [a.tolist() for a in arrs],
-            "minhash": sigs,
-        }, index=texts.index)
+    A Python map is a plan barrier. A projected pandas UDF is not: Spark
+    pushes a filter over its output (``size(sh_hashes) > 0``, written or
+    inferred from an ``explode``) below the projection, and the filter
+    then evaluates the UDF a second time."""
+    pos = df.columns.index(text_col)
+    sign = minhash_params is not None
+    longs = T.ArrayType(T.LongType())
+    out_t = T.StructType(
+        [f for i, f in enumerate(df.schema.fields) if i != pos]
+        + [T.StructField("sh_hashes", longs)]
+        + ([T.StructField("minhash", longs)] if sign else []))
+    if sign:
+        a_vec = np.array([a for a, _ in minhash_params], dtype=np.int64)[None, :]
+        b_vec = np.array([b for _, b in minhash_params], dtype=np.int64)[None, :]
 
-    return (df.withColumn("_smh", udf(F.col(text_col)))
-            .withColumn("sh_hashes", F.col("_smh.sh_hashes"))
-            .withColumn("minhash", F.col("_smh.minhash"))
-            .drop("_smh"))
+    def kernel(batches):
+        for batch in batches:
+            memo: dict = {}
+            keep, shs, sigs = [], [], []
+            for i, t in enumerate(batch.column(pos).to_pylist()):
+                a = _hashed_shingles_one((t or "").split(), n, memo)
+                if a.size == 0:
+                    continue
+                keep.append(i)
+                shs.append(a)
+                if sign:
+                    # per-row (n_shingles × k) expansion: the arrays are
+                    # small enough to stay cache-resident, which measured
+                    # ~20× faster than one batch-wide expansion + segmented
+                    # min (memory-bandwidth bound)
+                    hv = (a % MERSENNE31)[:, None]         # non-negative
+                    sigs.append(((hv * a_vec + b_vec) % MERSENNE31).min(axis=0))
+            rows = pa.array(keep, type=pa.int64())
+            cols = [batch.column(j).take(rows)
+                    for j in range(batch.num_columns) if j != pos]
+            cols.append(_long_lists(shs))
+            if sign:
+                cols.append(_long_lists(sigs))
+            yield pa.RecordBatch.from_arrays(cols, names=out_t.names)
+
+    return df.mapInArrow(kernel, out_t)
 
 
 def _salted_self_join(
@@ -424,37 +434,30 @@ def minhash_signatures(df: DataFrame, key_col: str, text_col: str = "text",
                        n: int = 3, k: int = 64,
                        seed: int = 1234567) -> DataFrame:
     """The persistable MinHash signature relation: (id, sh_hashes, minhash)
-    — one fused Arrow kernel per input row, empty-shingle rows dropped.
+    — one Arrow kernel pass per input row, rows with no shingle dropped
+    inside the kernel. ``id`` keeps the type of ``key_col``.
     This is the table an INCREMENTAL dedup pipeline stores between batches
     (write it bucketed by ``id`` via plans/bucketed for exchange-free
     verification joins)."""
-    return (
-        with_hashed_shingles_minhash(df, text_col, n, k, seed)
-        .select(F.col(key_col).alias("id"), "sh_hashes", "minhash")
-        .filter(F.size("sh_hashes") > 0)
-    )
+    return _shingle_rows(
+        df.select(F.col(key_col).alias("id"), F.col(text_col).alias("text")),
+        "text", n, _minhash_params(k, seed))
 
 
 def band_rows(sig: DataFrame, bands: int = 16, rows: int = 4) -> DataFrame:
     """LSH band rows (id, band, bhash) from a signature relation — pure
     JVM expressions over the ``minhash`` array (xxhash64 of each band's
     ``rows`` signature slots), so deriving band rows from a stored
-    signature table costs no Python and no extra kernel run."""
-    band_structs = F.array(*[
-        F.struct(
-            F.lit(j).alias("band"),
-            F.xxhash64(F.concat_ws(",", *[
-                F.element_at("minhash", j * rows + r + 1).cast("string")
-                for r in range(rows)
-            ])).alias("bhash"),
-        )
-        for j in range(bands)
-    ])
-    return (
-        sig.select("id", F.explode(band_structs).alias("b"))
-        .select("id", F.col("b.band").alias("band"),
-                F.col("b.bhash").alias("bhash"))
-    )
+    signature table costs no Python and no extra kernel run. The
+    expression goes to the JVM as one SQL string: built from ``F.*``
+    calls it costs one py4j round trip per node (~2,200 for 16×4)."""
+    structs = ", ".join(
+        f"named_struct('band', {j}, 'bhash', xxhash64(concat_ws(',', "
+        + ", ".join(f"cast(element_at(minhash, {j * rows + r + 1}) as string)"
+                    for r in range(rows))
+        + ")))"
+        for j in range(bands))
+    return sig.selectExpr("id", f"inline(array({structs}))")
 
 
 def incremental_minhash_pairs(

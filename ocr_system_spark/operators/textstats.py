@@ -5,6 +5,7 @@ from __future__ import annotations
 import re
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -88,11 +89,7 @@ def with_repetition_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
 # rule 7) — a quality heuristic, not a language model
 GOPHER_STOPS = ("the", "be", "to", "of", "and", "that", "have", "with")
 
-GOPHER_SCHEMA = T.StructType([
-    T.StructField("n_words", T.LongType(), False),
-    T.StructField("n_word_chars", T.LongType(), False),
-    T.StructField("n_stop_hits", T.LongType(), False),
-])
+GOPHER_FIELDS = ("n_words", "n_word_chars", "n_stop_hits")
 
 
 def with_gopher_quality(df: DataFrame, text_col: str = "text",
@@ -101,20 +98,30 @@ def with_gopher_quality(df: DataFrame, text_col: str = "text",
     """Gopher/MassiveText document-quality gates, integer-stable:
     word-count bounds, mean-word-length bounds (3 ≤ mean ≤ 10, compared as
     3·n ≤ chars ≤ 10·n — no floats), and the ≥2-stopword rule. Emits the
-    raw counts plus the combined ``gopher_pass`` verdict."""
-    @F.pandas_udf(GOPHER_SCHEMA)
-    def udf(texts: pd.Series) -> pd.DataFrame:
-        nw, nc, ns = [], [], []
-        for t in texts.tolist():
-            w = _TOKEN_RE.findall(t or "")
-            nw.append(len(w))
-            nc.append(sum(len(x) for x in w))
-            ns.append(sum(1 for x in w if x.lower() in GOPHER_STOPS))
-        return pd.DataFrame({"n_words": nw, "n_word_chars": nc,
-                             "n_stop_hits": ns}, index=texts.index)
+    raw counts plus the combined ``gopher_pass`` verdict.
 
-    out = df.withColumn("g", udf(F.col(text_col))).select("*", "g.*").drop("g")
-    return out.withColumn(
+    The counts are appended by a pass-through ``mapInArrow``, a plan
+    barrier: a filter on ``gopher_pass`` cannot be pushed below it, so the
+    kernel runs once per row whatever filter follows (over a projected
+    pandas UDF such a filter evaluates the UDF a second time)."""
+    pos = df.columns.index(text_col)
+    out_t = T.StructType(df.schema.fields + [
+        T.StructField(name, T.LongType()) for name in GOPHER_FIELDS])
+
+    def kernel(batches):
+        for batch in batches:
+            nw, nc, ns = [], [], []
+            for t in batch.column(pos).to_pylist():
+                w = _TOKEN_RE.findall(t or "")
+                nw.append(len(w))
+                nc.append(sum(len(x) for x in w))
+                ns.append(sum(1 for x in w if x.lower() in GOPHER_STOPS))
+            yield pa.RecordBatch.from_arrays(
+                batch.columns + [pa.array(c, type=pa.int64())
+                                 for c in (nw, nc, ns)],
+                names=out_t.names)
+
+    return df.mapInArrow(kernel, out_t).withColumn(
         "gopher_pass",
         (F.col("n_words") >= min_words) & (F.col("n_words") <= max_words)
         & (F.col("n_word_chars") >= 3 * F.col("n_words"))

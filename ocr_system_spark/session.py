@@ -24,19 +24,33 @@ def ensure_package_on_executors(spark: SparkSession) -> None:
     """
     if getattr(spark, "_ocr_system_spark_shipped", False):
         return
+    import hashlib
     import tempfile
     import zipfile
 
     pkg_dir = os.path.join(_REPO_ROOT, "ocr_system_spark")
-    zip_path = os.path.join(tempfile.gettempdir(), "ocr_system_spark_pkg.zip")
+    sources = sorted(os.path.join(root, fn)
+                     for root, _dirs, files in os.walk(pkg_dir)
+                     for fn in files if fn.endswith(".py"))
+    # the zip is named by a digest of the sources it holds: a zip left in
+    # the temp dir by another checkout or an older tree must never be
+    # shipped in place of this one
+    digest = hashlib.sha256()
+    for full in sources:
+        digest.update(os.path.relpath(full, _REPO_ROOT).encode())
+        with open(full, "rb") as fh:
+            digest.update(fh.read())
+    zip_path = os.path.join(
+        tempfile.gettempdir(),
+        f"ocr_system_spark_pkg-{digest.hexdigest()[:16]}.zip")
     if not os.path.exists(zip_path):
-        with zipfile.ZipFile(zip_path, "w") as zf:
-            for root, _dirs, files in os.walk(pkg_dir):
-                for fn in files:
-                    if fn.endswith(".py"):
-                        full = os.path.join(root, fn)
-                        rel = os.path.relpath(full, _REPO_ROOT)
-                        zf.write(full, rel)
+        # written aside and renamed, so a concurrent process never ships a
+        # half-written zip
+        part = f"{zip_path}.{os.getpid()}"
+        with zipfile.ZipFile(part, "w") as zf:
+            for full in sources:
+                zf.write(full, os.path.relpath(full, _REPO_ROOT))
+        os.replace(part, zip_path)
     try:
         spark.sparkContext.addPyFile(zip_path)
     except Exception:

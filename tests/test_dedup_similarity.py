@@ -3,6 +3,7 @@ approximate methods are measured against their exact baselines."""
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
@@ -254,3 +255,71 @@ def test_hashed_shingles_preserve_string_shingle_semantics(spark, docs):
         for b in ids[:10]:
             if a < b:
                 assert len(strs[a] & strs[b]) == len(hsh[a] & hsh[b]), (a, b)
+
+
+# minhash_signatures / band_rows against test-side references: the
+# signature kernel's per-row chain (word hash, position mix, affine
+# permutations) and the F.* form of the band expression.
+MIXED_TEXTS = [
+    "",
+    None,
+    "two words",
+    "exactly three words",
+    "seven words make exactly one seven gram",
+    "a b c a b c a b c a b c",                     # repeated n-grams
+    "nbsp\xa0splits here and\u2003em space too ok",  # str.split splits both
+    "the quick brown fox jumps over the lazy dog " * 3,
+]
+
+
+def _ref_signatures(rows, n, k=64, seed=1234567):
+    params = dedup._minhash_params(k, seed)
+    a = np.array([x for x, _ in params], dtype=np.int64)[None, :]
+    b = np.array([x for _, x in params], dtype=np.int64)[None, :]
+    out = {}
+    for doc_id, text in rows:
+        arr = dedup._hashed_shingles_one((text or "").split(), n, {})
+        if arr.size:
+            sig = (((arr % dedup.MERSENNE31)[:, None] * a + b)
+                   % dedup.MERSENNE31).min(axis=0)
+            out[doc_id] = (arr.tolist(), sig.tolist())
+    return out
+
+
+@pytest.mark.parametrize("n", [3, 7])
+def test_minhash_signatures_match_row_reference(spark, docs, n):
+    rows = list(enumerate(MIXED_TEXTS, start=-len(MIXED_TEXTS)))
+    rows += [(r.doc_id, r.text) for r in docs.limit(60).collect()]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    sig = dedup.minhash_signatures(df, "doc_id", n=n)
+    assert [(f.name, f.dataType.simpleString(), f.nullable)
+            for f in sig.schema.fields] == [
+        ("id", "bigint", True), ("sh_hashes", "array<bigint>", True),
+        ("minhash", "array<bigint>", True)]
+    got = {r.id: (r.sh_hashes, r.minhash) for r in sig.collect()}
+    assert got == _ref_signatures(rows, n)
+
+
+def _ref_band_rows(sig, bands, rows):
+    band_structs = F.array(*[
+        F.struct(
+            F.lit(j).alias("band"),
+            F.xxhash64(F.concat_ws(",", *[
+                F.element_at("minhash", j * rows + r + 1).cast("string")
+                for r in range(rows)
+            ])).alias("bhash"),
+        )
+        for j in range(bands)
+    ])
+    return (sig.select("id", F.explode(band_structs).alias("b"))
+            .select("id", F.col("b.band").alias("band"),
+                    F.col("b.bhash").alias("bhash")))
+
+
+@pytest.mark.parametrize("bands,rows", [(16, 4), (8, 8)])
+def test_band_rows_match_column_reference(spark, docs, bands, rows):
+    sig = dedup.minhash_signatures(docs, "doc_id")
+    got = dedup.band_rows(sig, bands, rows)
+    exp = _ref_band_rows(sig, bands, rows)
+    assert got.schema == exp.schema
+    assert sorted(got.collect()) == sorted(exp.collect())

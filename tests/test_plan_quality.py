@@ -9,6 +9,8 @@ projection, fails here long before it fails at scale.
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -23,6 +25,16 @@ def plan_of(df) -> str:
     return df._sc._jvm.PythonSQLUtils.explainString(
         df._jdf.queryExecution(), "formatted"
     )
+
+
+_PY_NODE = re.compile(
+    r"^\(\d+\) (ArrowEvalPython|MapInArrow|MapInPandas)\n(Input \[\d+\]: .*)$",
+    re.M)
+
+
+def python_nodes(df) -> list:
+    """(node, input line) for every Python evaluation node in the plan."""
+    return _PY_NODE.findall(plan_of(df))
 
 
 def test_extraction_pipeline_is_narrow_and_pruned(spark):
@@ -206,3 +218,40 @@ def test_dup_spans_joins_are_keyed_never_cartesian(spark):
     p = plan_of(df)
     assert "CartesianProduct" not in p, p
     assert "BroadcastNestedLoopJoin" not in p, p
+
+
+# ---------------------------------------------------------------------------
+# Python kernels run once per row: a filter over a projected pandas UDF is
+# pushed below the projection and evaluates the UDF a second time, so each
+# of these plans must hold exactly one Python node per kernel input.
+# ---------------------------------------------------------------------------
+
+def _fresh_docs(spark):
+    """An uncached input, so no cached plan stands in for the kernel."""
+    words = " ".join(f"w{i}" for i in range(40))
+    return spark.createDataFrame(
+        [(1, words), (2, "the and of " + words), (3, "too short")],
+        "doc_id long, text string")
+
+
+def test_minhash_signatures_runs_kernel_once(spark):
+    from ocr_system_spark.operators import dedup
+    nodes = python_nodes(dedup.minhash_signatures(_fresh_docs(spark), "doc_id"))
+    assert len(nodes) == 1, nodes
+
+
+def test_gopher_filter_runs_kernel_once(spark):
+    from ocr_system_spark.operators.textstats import with_gopher_quality
+    nodes = python_nodes(
+        with_gopher_quality(_fresh_docs(spark)).filter("gopher_pass"))
+    assert len(nodes) == 1, nodes
+
+
+def test_contamination_hits_runs_each_kernel_once(spark):
+    from ocr_system_spark.operators.decontaminate import contamination_hits
+    docs = _fresh_docs(spark)
+    nodes = python_nodes(contamination_hits(
+        docs, docs.filter("doc_id = 1").select("text"), n=5))
+    corpus = [x for x in nodes if "doc_id" in x[1]]
+    bench = [x for x in nodes if "doc_id" not in x[1]]
+    assert len(corpus) == 1 and len(bench) == 1, nodes
