@@ -8,12 +8,12 @@ minimum label among itself and its neighbors, repeated to fixpoint. Rounds
 needed = graph diameter. Near-dup components are near-cliques (every member
 pairs with most others), so the diameter is tiny (2-3) and propagation
 converges in a handful of shuffles; each round is one join + one groupBy on
-the edge list, both partitioned by node id. For general graphs with long
-chains at 10^12-edge scale, swap the loop body for the alternating
-large-star/small-star rounds (Kiveris et al., "Connected Components in
-MapReduce and Beyond", SoCC'14) — same join shape, provably O(log n)
-rounds; the fixpoint loop and convergence accounting here carry over
-unchanged.
+the edge list, both partitioned by node id. This is the one components
+algorithm here. The known swap for general graphs with long chains at
+10^12-edge scale is the alternating large-star/small-star rounds (Kiveris
+et al., "Connected Components in MapReduce and Beyond", SoCC'14) — same
+join shape, provably O(log n) rounds, with an unchanged-edge-set fixpoint;
+the fixpoint loop and convergence accounting here carry over unchanged.
 
 Every round materializes via localCheckpoint: it truncates the growing
 lineage (a 10-round loop would otherwise re-execute round 1 ten times) and
@@ -26,91 +26,6 @@ from typing import Optional
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def _large_star(e: DataFrame) -> DataFrame:
-    """Large-star round (Kiveris et al. SoCC'14): every node u connects its
-    LARGER neighbors to the minimum of its neighborhood (incl. itself)."""
-    sym = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    mins = (sym.groupBy("u").agg(F.min("v").alias("mn"))
-            .select("u", F.least("mn", "u").alias("m")))
-    return (
-        sym.join(mins, "u")
-        .filter(F.col("v") > F.col("u"))
-        .select(F.col("v").alias("u"), F.col("m").alias("v"))
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-    )
-
-
-def _small_star(e: DataFrame) -> DataFrame:
-    """Small-star round: orient edges to the larger endpoint, then connect
-    each center's smaller neighbors (and itself) to the neighborhood min."""
-    canon = e.select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))
-    mins = canon.groupBy("u").agg(F.min("v").alias("m"))
-    return (
-        canon.join(mins, "u")
-        .select(F.col("v").alias("u"), F.col("m").alias("v"))
-        .union(mins.select("u", F.col("m").alias("v")))
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-    )
-
-
-def connected_components_star(
-    edges: DataFrame,
-    src: str = "id_a",
-    dst: str = "id_b",
-    nodes: Optional[DataFrame] = None,
-    id_col: str = "id",
-    max_iter: int = 50,
-) -> DataFrame:
-    """(id, comp) via alternating large-star/small-star rounds — the
-    general-graph path: provably O(log n) rounds on ANY topology (long
-    chains included), each round two shuffles. Use this when the pair
-    graph is not the near-clique shape of dedup output.
-
-    Fixpoint: the paper's termination condition is an unchanged edge set;
-    an (count, per-edge hash sum) fingerprint detects that without a full
-    sort-compare."""
-    e = (edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-         .filter(F.col("u") != F.col("v")).distinct()
-         .localCheckpoint(eager=True))
-    universe = e.select("u").union(e.select("v")).distinct() \
-        .withColumnRenamed("u", id_col)
-    if nodes is not None:
-        universe = nodes.select(F.col(id_col)).distinct()
-
-    def fingerprint(df: DataFrame):
-        row = df.agg(
-            F.count(F.lit(1)).alias("n"),
-            # decimal accumulator: ANSI mode makes a long sum of 64-bit
-            # hashes an overflow ERROR, not a wrap
-            F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")).alias("h"),
-        ).collect()[0]
-        return (row["n"], row["h"])
-
-    fp = fingerprint(e)
-    converged = False
-    for _ in range(max_iter):
-        e = _small_star(_large_star(e)).localCheckpoint(eager=True)
-        nfp = fingerprint(e)
-        if nfp == fp:
-            converged = True
-            break
-        fp = nfp
-    if not converged:
-        raise RuntimeError(
-            f"connected_components_star did not reach an edge fixpoint in "
-            f"{max_iter} rounds — raise max_iter (O(log n) rounds expected).")
-    # at the fixpoint every edge points a node at its component's min
-    comp = (e.groupBy("u").agg(F.min("v").alias("comp"))
-            .withColumnRenamed("u", id_col))
-    return (
-        universe.join(comp, id_col, "left")
-        .select(id_col, F.least(F.coalesce("comp", F.col(id_col)),
-                                F.col(id_col)).alias("comp"))
-    )
 
 
 def connected_components(
@@ -126,11 +41,13 @@ def connected_components(
     ``edges`` is an undirected pair list (each pair once, either order).
     ``nodes`` optionally supplies the full node universe — nodes with no
     edges come back as their own singleton component (what a dedup pipeline
-    needs: every document gets a cluster id).
+    needs: every document gets a cluster id). Components are then those of
+    the subgraph induced by ``nodes``: an edge touching an id outside
+    ``nodes`` is ignored, and such ids never appear as labels.
 
-    This is the min-label-propagation form (rounds = diameter — right for
-    near-clique dedup graphs). For arbitrary topology use
-    :func:`connected_components_star` (O(log n) rounds).
+    Min-label propagation: rounds = diameter, right for near-clique dedup
+    graphs. The first round is fused into initialization, so up to
+    ``max_iter``+1 rounds run in effect.
     """
     # Materialize the symmetrized edge list ONCE, reading ``edges`` once:
     # the propagation loop joins `sym` every round, and without the
@@ -139,7 +56,7 @@ def connected_components(
     # union of two selects would additionally execute that plan twice
     # inside this one job (guide §2.4 — remove repeated work behind an
     # iteration boundary; §2.3 — both orientations come from one scan via
-    # explode). Same move `connected_components_star` makes for its loop.
+    # explode).
     sym = (
         edges.select(F.explode(F.array(
             F.struct(F.col(src).alias("u"), F.col(dst).alias("v")),
@@ -150,8 +67,14 @@ def connected_components(
         .localCheckpoint(eager=True)
     )
     node_ids = sym.select(F.col("u").alias(id_col)).distinct()
+    nbr_edges = sym
     if nodes is not None:
         node_ids = nodes.select(F.col(id_col)).distinct()
+        # the loop's inner join on labels already skips neighbours outside
+        # `nodes`; the fused first round must too, or such an id becomes a
+        # label
+        nbr_edges = sym.join(nodes.select(F.col(id_col).alias("v")), "v",
+                             "left_semi")
 
     # Fused round 1: with every label initialized to its own id, the first
     # propagation round's neighbor-min is just min(neighbor ids) — one
@@ -159,7 +82,7 @@ def connected_components(
     # its own checkpoint and convergence count. Labels after this are
     # exactly what the old loop produced after its first iteration, so the
     # fixpoint (and the returned labels) are unchanged.
-    nbr0 = sym.groupBy("u").agg(F.min("v").alias("_m"))
+    nbr0 = nbr_edges.groupBy("u").agg(F.min("v").alias("_m"))
     labels = (
         node_ids.join(nbr0, node_ids[id_col] == nbr0.u, "left")
         .select(F.col(id_col),
@@ -194,8 +117,8 @@ def connected_components(
             f"connected_components did not converge in max_iter={max_iter} "
             f"rounds ({changed} labels still moving). The graph has longer "
             "chains than min-label propagation handles in this budget — "
-            "raise max_iter, or use the large-star/small-star formulation "
-            "for O(log n) rounds on arbitrary graphs.")
+            "raise max_iter, or swap in the large-star/small-star rounds of "
+            "Kiveris et al. (SoCC'14) for O(log n) rounds on arbitrary graphs.")
     return labels
 
 

@@ -8,28 +8,34 @@ Five dedup strategies, all expressed Spark-first:
                     intersection/union counts. Shingles travel as 64-bit
                     hashes (collisions ~n²/2^64 — exact w.h.p., and the
                     DuckDB string-set oracle confirms it at test scale)
-* MinHash + LSH   — k affine permutations over md5-hashed shingles (one
-                    Arrow kernel pass per row, rows with no shingle
-                    dropped in the kernel) → banded signature buckets →
-                    candidate pairs → EXACT Jaccard
-                    verification of candidates (so output matches the exact
-                    all-pairs answer whenever LSH recall holds; bands/rows
-                    are sized so the miss probability at the threshold is
-                    ≪ 1e-9 for true near-dups)
+* MinHash + LSH   — k affine permutations over the same shingle hashes →
+                    banded signature buckets → candidate pairs → EXACT
+                    Jaccard verification of candidates (so output matches
+                    the exact all-pairs answer whenever LSH recall holds;
+                    bands/rows are sized so the miss probability at the
+                    threshold is ≪ 1e-9 for true near-dups)
 * SimHash         — 64-bit sign-of-weighted-token-hash signature (Arrow
                     batch kernel), 4×16-bit band blocking, Hamming verify
 * embedding cosine — see operators/similarity.py
+
+One implementation per mechanism: one word hash (``_word_hash``, for the
+shingle and SimHash kernels); one shingle pass (``_shingle_rows``, one
+``mapInArrow`` per row, behind n-gram Jaccard, MinHash and
+decontamination); one exact verifier (``_verify_jaccard``); one salting
+rule (``_oversized_groups`` + ``_with_chunk_count``) behind every salted join.
 
 Scale notes: every strategy is shuffle-bounded by its blocking key
 (content hash, shingle, band hash, simhash band). At 10^12 docs the
 shingle self-join must be salted on hot shingles; here hot-shingle groups
 are capped via a group-size guard (``max_group``) — the standard frequent-
 shingle drop used by web-dedup pipelines (very frequent shingles carry no
-dedup signal and only create quadratic blowup).
+dedup signal and only create quadratic blowup) — and the groups under the
+cap but above ``salt_cap`` are triangle-salted.
 """
 
 from __future__ import annotations
 
+import hashlib
 import random
 import re
 from functools import lru_cache
@@ -48,35 +54,12 @@ from pyspark.sql import types as T
 MERSENNE31 = (1 << 31) - 1
 
 
-# ---------------------------------------------------------------------------
-# shared: word shingles, JVM-side
-# ---------------------------------------------------------------------------
-
-def with_shingles(df: DataFrame, text_col: str = "text", n: int = 3,
-                  out_col: str = "shingles") -> DataFrame:
-    """Distinct word n-gram shingles per row, as an Arrow-batched kernel.
-
-    A pure-JVM formulation exists (`transform(sequence(...), i ->
-    array_join(slice(words, i+1, n)))`) but Spark evaluates higher-order
-    lambdas per element INTERPRETED — measured ~12s for 10k mid-size docs
-    vs ~1s for this batch kernel. Order of first occurrence is preserved
-    (dict semantics), matching array_distinct."""
-
-    @F.pandas_udf(T.ArrayType(T.StringType()))
-    def shingle_udf(texts: pd.Series) -> pd.Series:
-        out = []
-        for t in texts.tolist():
-            words = (t or "").split()
-            if len(words) < n:
-                out.append([])
-                continue
-            seen = dict.fromkeys(
-                " ".join(words[i:i + n]) for i in range(len(words) - n + 1)
-            )
-            out.append(list(seen))
-        return pd.Series(out, index=texts.index, dtype=object)
-
-    return df.withColumn(out_col, shingle_udf(F.col(text_col)))
+def _word_hash(word: str) -> int:
+    """64-bit word hash = DuckDB's md5_number_lower: little-endian uint64
+    of md5-digest bytes [8:16]. The MinHash shingle kernel and the SimHash
+    kernel both hash words with it, so an independent SQL engine can
+    recompute either signature from scratch (oracle parity)."""
+    return int.from_bytes(hashlib.md5(word.encode()).digest()[8:16], "little")
 
 
 # ---------------------------------------------------------------------------
@@ -133,17 +116,21 @@ def ngram_jaccard_pairs(
     single task ever holds ~max_group²/2 pairs; the pair set (and every
     inter/uni count) is unchanged.
     """
-    # shingles travel as 64-bit hashes (with_hashed_shingles): the explode +
+    # shingles travel as 64-bit hashes (_shingle_rows): the explode +
     # self-join below shuffles every shingle twice, so 8-byte longs instead
     # of strings cut the operator's dominant shuffle ~4×. Set-cardinality
     # decisions (inter/uni/n_sh) are unchanged w.h.p. (collisions ~n²/2^64).
-    # cached: read by the frequency aggregate, the salted-group probe, and
-    # the exploded join side — one fused-kernel run instead of three
-    base = with_hashed_shingles(df, text_col, n).select(
-        F.col(key_col).alias("id"),
-        *([F.col(block_col).alias("blk")] if block_col else [F.lit(0).alias("blk")]),
-        F.col("sh_hashes").alias("shingles"),
-    ).cache()
+    # Rows with no shingle are dropped in the kernel; they would explode to
+    # nothing below. Cached: read by the frequency aggregate, the
+    # salted-group probe, and the exploded join side — one kernel run
+    # instead of three.
+    base = _shingle_rows(
+        df.select(
+            F.col(key_col).alias("id"),
+            F.col(block_col).alias("blk") if block_col else F.lit(0).alias("blk"),
+            F.col(text_col).alias("text")),
+        "text", n,
+    ).withColumnRenamed("sh_hashes", "shingles").cache()
     # frequent-shingle guard: the hot set is tiny by construction (shingles
     # in > max_group docs), so collect it per block and broadcast; subtract
     # from the arrays BEFORE sizing so n_sh matches the joined universe.
@@ -234,21 +221,18 @@ def _hashed_shingles_one(words: list, n: int, memo: dict) -> np.ndarray:
     vocab repeats heavily), then the n-gram hash is a position-weighted
     wrapping mix of the word hashes, vectorized over the whole doc.
 
-    The word hash is md5-digest bytes [8:16] little-endian — DuckDB's
-    ``md5_number_lower``, the same primitive the SimHash kernel pins —
-    so an independent SQL engine can replay the ENTIRE MinHash chain
-    (word hash → position mix → affine permutations → band buckets) and
-    the incremental-dedup oracles need no LSH-recall assumption."""
+    The word hash is ``_word_hash``, so an independent SQL engine can
+    replay the ENTIRE MinHash chain (word hash → position mix → affine
+    permutations → band buckets) and the incremental-dedup oracles need
+    no LSH-recall assumption."""
     if len(words) < n:
         return np.empty(0, dtype=np.int64)
-    import hashlib
     mix = _mix_for(n)
     wh = np.empty(len(words), dtype=np.uint64)
     for i, w in enumerate(words):
         h = memo.get(w)
         if h is None:
-            h = int.from_bytes(hashlib.md5(w.encode()).digest()[8:16],
-                               "little")
+            h = _word_hash(w)
             memo[w] = h
         wh[i] = h
     m = len(words) - n + 1
@@ -257,26 +241,6 @@ def _hashed_shingles_one(words: list, n: int, memo: dict) -> np.ndarray:
         for j in range(1, n):
             tri = tri ^ (wh[j:j + m] * mix[j])
     return np.unique(tri).view(np.int64)
-
-
-def with_hashed_shingles(df: DataFrame, text_col: str = "text", n: int = 3,
-                         out_col: str = "sh_hashes") -> DataFrame:
-    """Distinct word n-gram shingles per row, as 64-bit HASHES — one fused
-    Arrow kernel, no shingle strings ever built (the string-join dominated
-    the with_shingles profile and the strings dominated its shuffle bytes).
-    Hash-set semantics equal string-set semantics w.h.p. (collisions
-    ~n_shingles²/2^64); every downstream decision is set-cardinality based
-    so the outputs are unchanged."""
-
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def udf(texts: pd.Series) -> pd.Series:
-        memo: dict = {}
-        return pd.Series(
-            [_hashed_shingles_one((t or "").split(), n, memo).tolist()
-             for t in texts.tolist()],
-            index=texts.index, dtype=object)
-
-    return df.withColumn(out_col, udf(F.col(text_col)))
 
 
 def _long_lists(arrs: list) -> pa.ListArray:
@@ -338,6 +302,33 @@ def _shingle_rows(df: DataFrame, text_col: str, n: int,
     return df.mapInArrow(kernel, out_t)
 
 
+def _oversized_groups(rows: DataFrame, keys: list, salt_cap: int,
+                      big: Optional[DataFrame] = None) -> Optional[DataFrame]:
+    """The key groups of ``rows`` holding more than ``salt_cap`` rows, as
+    (*keys, gsz), or None when there is none: then the caller runs the
+    plain join and pays no per-row ``sequence`` explode (the round-2
+    dedup_minhash regression). ``big`` passes this relation precomputed
+    (the ngram path); otherwise it is aggregated here and cached, since
+    it is TINY and read twice (the one-job emptiness probe and the salted
+    join's broadcast side)."""
+    if big is None:
+        big = (rows.groupBy(*keys)
+               .agg(F.count(F.lit(1)).alias("gsz"))
+               .filter(F.col("gsz") > salt_cap)
+               .cache())
+    return None if big.isEmpty() else big
+
+
+def _with_chunk_count(rows: DataFrame, big: DataFrame, keys: list,
+                      salt_cap: int) -> DataFrame:
+    """``rows`` plus ``m``, the number of chunks its key group is salted
+    into: m=⌈G/cap⌉ for the oversized groups in ``big`` (*keys, gsz), 1
+    for every other group."""
+    return (rows.join(F.broadcast(big.select(*keys, "gsz")), list(keys), "left")
+            .withColumn("m", F.coalesce(
+                F.ceil(F.col("gsz") / salt_cap), F.lit(1)).cast("int")))
+
+
 def _salted_self_join(
     exploded: DataFrame,
     keys: list,
@@ -360,28 +351,10 @@ def _salted_self_join(
     only at chunk-pair (cx, cy), in one orientation when cx < cy and — via
     the aid < bid filter — once when cx = cy.
 
-    ``big`` is the oversized-group relation (*keys, gsz): pass it
-    precomputed when the caller already aggregated group sizes (the ngram
-    path); when None it is derived here and, if EMPTY, the whole salting
-    machinery short-circuits to a plain |keys|-key equi-join — the common
-    no-viral-cluster case pays one tiny aggregate instead of a 4-key join
-    with a per-row ``sequence`` explode (the round-2 dedup_minhash
-    regression)."""
-    if big is None:
-        # cached: the oversized-bucket relation is TINY (bounded by
-        # rows/salt_cap) and read twice — the emptiness probe below and,
-        # when non-empty, the salted join's broadcast side — so the
-        # bucket-count aggregation behind it runs once (the ngram
-        # freq-tail precedent; released by the ContextCleaner)
-        big = (exploded.groupBy(*keys)
-               .agg(F.count(F.lit(1)).alias("gsz"))
-               .filter(F.col("gsz") > salt_cap)
-               .cache())
-    # the emptiness probe is ONE tiny aggregate job (over the caller's
-    # cached upstream in every call site) and decides between the plain
-    # 2-key join and the 4-key salted join + per-row sequence explode
-    if big.isEmpty():
-        big = None
+    ``big`` is the precomputed oversized-group relation, if the caller
+    has one (see ``_oversized_groups``); when no group is oversized the
+    salting machinery short-circuits to a plain |keys|-key equi-join."""
+    big = _oversized_groups(exploded, keys, salt_cap, big)
 
     def payload(side: str):
         return [F.col(c).alias(f"{side}_{c}") for c in payload_cols]
@@ -395,12 +368,8 @@ def _salted_self_join(
                         *[F.col(f"{s}_{c}")
                           for c in payload_cols for s in ("a", "b")]))
 
-    ex = (
-        exploded.join(F.broadcast(big.select(*keys, "gsz")), list(keys), "left")
-        .withColumn("m", F.coalesce(
-            F.ceil(F.col("gsz") / salt_cap), F.lit(1)).cast("int"))
-        .withColumn("chunk", F.pmod(F.xxhash64("id"), F.col("m")).cast("int"))
-    )
+    ex = (_with_chunk_count(exploded, big, keys, salt_cap)
+          .withColumn("chunk", F.pmod(F.xxhash64("id"), F.col("m")).cast("int")))
     a = ex.select(
         F.col("id").alias("aid"), *keys, *payload("a"),
         F.col("chunk").alias("pi"),
@@ -428,6 +397,23 @@ def _salted_band_candidates(exploded: DataFrame, salt_cap: int) -> DataFrame:
     return (_salted_self_join(exploded, ["band", "bhash"], salt_cap)
             .select("id_a", "id_b")
             .distinct())
+
+
+def _verify_jaccard(cand: DataFrame, left: DataFrame, right: DataFrame,
+                    a: str, b: str, min_jaccard_pct: int) -> DataFrame:
+    """Exact Jaccard verification of candidate pairs (``a``, ``b``): the
+    ``sh_hashes`` of ``left`` (keyed by ``a``) and ``right`` (keyed by
+    ``b``) are joined on, and a pair is kept when 100·inter ≥ pct·union —
+    integer-only, over the 8-byte hash arrays. Output: (a, b, inter, uni)."""
+    sa = left.select(F.col("id").alias(a), F.col("sh_hashes").alias("sh_a"))
+    sb = right.select(F.col("id").alias(b), F.col("sh_hashes").alias("sh_b"))
+    return (
+        cand.join(sa, a).join(sb, b)
+        .withColumn("inter", F.size(F.array_intersect("sh_a", "sh_b")))
+        .withColumn("uni", F.size("sh_a") + F.size("sh_b") - F.col("inter"))
+        .filter(F.col("inter") * 100 >= F.col("uni") * min_jaccard_pct)
+        .select(a, b, "inter", "uni")
+    )
 
 
 def minhash_signatures(df: DataFrame, key_col: str, text_col: str = "text",
@@ -501,30 +487,22 @@ def incremental_minhash_pairs(
     # within-batch leg; ib feeds the hot-bucket probe and the cross join
     bb = band_rows(batch_sig, bands, rows).cache()
     ib = band_rows(index_sig, bands, rows).cache()
-    # cached: read by the emptiness probe and, when non-empty, by BOTH
-    # legs' broadcast joins (il and bl) — bounded by index_rows/salt_cap
-    big = (ib.groupBy("band", "bhash")
-           .agg(F.count(F.lit(1)).alias("gsz"))
-           .filter(F.col("gsz") > salt_cap)
-           .cache())
-    il = ib.select(F.col("id").alias("index_id"), "band", "bhash")
-    bl = bb.select(F.col("id").alias("batch_id"), "band", "bhash")
-    if big.isEmpty():
-        raw = il.join(bl, ["band", "bhash"])
+    # the INDEX side's oversized buckets, read by both legs' broadcast joins
+    keys = ["band", "bhash"]
+    big = _oversized_groups(ib, keys, salt_cap)
+    il = ib.select(F.col("id").alias("index_id"), *keys)
+    bl = bb.select(F.col("id").alias("batch_id"), *keys)
+    if big is None:
+        raw = il.join(bl, keys)
     else:
-        il = (il.join(F.broadcast(big), ["band", "bhash"], "left")
-              .withColumn("m", F.coalesce(
-                  F.ceil(F.col("gsz") / salt_cap), F.lit(1)).cast("int"))
+        il = (_with_chunk_count(il, big, keys, salt_cap)
               .withColumn("chunk", F.pmod(F.xxhash64("index_id"),
                                           F.col("m")).cast("int")))
-        bl = (bl.join(F.broadcast(big), ["band", "bhash"], "left")
-              .withColumn("m", F.coalesce(
-                  F.ceil(F.col("gsz") / salt_cap), F.lit(1)).cast("int"))
+        bl = (_with_chunk_count(bl, big, keys, salt_cap)
               .withColumn("chunk", F.explode(
                   F.sequence(F.lit(0), F.col("m") - 1))))
-        raw = (il.select("index_id", "band", "bhash", "chunk")
-               .join(bl.select("batch_id", "band", "bhash", "chunk"),
-                     ["band", "bhash", "chunk"]))
+        raw = (il.select("index_id", *keys, "chunk")
+               .join(bl.select("batch_id", *keys, "chunk"), [*keys, "chunk"]))
     cand = (
         raw.filter(F.col("index_id") != F.col("batch_id"))
         .select("index_id", "batch_id")
@@ -539,19 +517,10 @@ def incremental_minhash_pairs(
     # on an id present in BOTH relations (re-crawl) the INDEX version wins
     # deterministically — it is the stored truth until the batch is merged
     # (dropDuplicates would pick an arbitrary side per run)
-    sa = index_sig.unionByName(
-        batch_sig.join(index_sig.select("id"), "id", "left_anti")
-    ).select(
-        F.col("id").alias("index_id"), F.col("sh_hashes").alias("sh_a"))
-    sb = batch_sig.select(
-        F.col("id").alias("batch_id"), F.col("sh_hashes").alias("sh_b"))
-    return (
-        cand.join(sa, "index_id").join(sb, "batch_id")
-        .withColumn("inter", F.size(F.array_intersect("sh_a", "sh_b")))
-        .withColumn("uni", F.size("sh_a") + F.size("sh_b") - F.col("inter"))
-        .filter(F.col("inter") * 100 >= F.col("uni") * min_jaccard_pct)
-        .select("index_id", "batch_id", "inter", "uni")
-    )
+    left = index_sig.unionByName(
+        batch_sig.join(index_sig.select("id"), "id", "left_anti"))
+    return _verify_jaccard(cand, left, batch_sig, "index_id", "batch_id",
+                           min_jaccard_pct)
 
 
 def minhash_index_survivors(
@@ -612,10 +581,9 @@ def minhash_lsh_pairs(
     misses every band is (1−0.7⁴)¹⁶ ≈ 1.2%, and for the ≥0.9 near-dups this
     operator targets it is < 1e-8.
 
-    Verification runs over the per-doc xxhash64(shingle) arrays (8 bytes
-    each), never the raw shingle strings — integer set intersections give
-    the same (inter, uni) w.h.p. (64-bit collisions ~n²/2^64) and shuffle
-    ~4× fewer bytes through the three joins.
+    Verification runs over the per-doc 64-bit shingle-hash arrays, never
+    the raw shingle strings — the same (inter, uni) w.h.p. (collisions
+    ~n²/2^64) and ~4× fewer bytes shuffled through the three joins.
 
     ``salt_cap`` triangle-salts oversized band buckets: a viral cluster of
     G near-identical docs puts all G rows in ONE (band, bhash) bucket and
@@ -636,16 +604,7 @@ def minhash_lsh_pairs(
     exploded = band_rows(sh, bands, rows).cache()
 
     cand = _salted_band_candidates(exploded, salt_cap)
-    # exact verification of candidates over the hash arrays
-    sa = sh.select(F.col("id").alias("id_a"), F.col("sh_hashes").alias("sh_a"))
-    sb = sh.select(F.col("id").alias("id_b"), F.col("sh_hashes").alias("sh_b"))
-    verified = (
-        cand.join(sa, "id_a").join(sb, "id_b")
-        .withColumn("inter", F.size(F.array_intersect("sh_a", "sh_b")))
-        .withColumn("uni", F.size("sh_a") + F.size("sh_b") - F.col("inter"))
-        .filter(F.col("inter") * 100 >= F.col("uni") * min_jaccard_pct)
-        .select("id_a", "id_b", "inter", "uni")
-    )
+    verified = _verify_jaccard(cand, sh, sh, "id_a", "id_b", min_jaccard_pct)
     if eager_cleanup:
         verified = verified.localCheckpoint(eager=True)
         sh.unpersist()
@@ -665,14 +624,6 @@ SIMHASH_BITS = 64
 _SIMHASH_TOKEN_RE = re.compile(r"[^\t\n\f\r ]+")
 
 
-def simhash_token_hash(tok: str) -> int:
-    """64-bit token hash = DuckDB's md5_number_lower: little-endian uint64
-    of md5-digest bytes [8:16]. Chosen so an independent SQL engine can
-    recompute the full SimHash signature from scratch (oracle parity)."""
-    import hashlib
-    return int.from_bytes(hashlib.md5(tok.encode()).digest()[8:16], "little")
-
-
 def _simhash_batch(texts: pd.Series) -> pd.Series:
     """64-bit SimHash per text: sign of the per-bit sum of ±1 votes from
     each distinct token's 64-bit hash, weighted by token frequency.
@@ -683,7 +634,7 @@ def _simhash_batch(texts: pd.Series) -> pd.Series:
     def tok_hash(tok: str) -> int:
         h = cache.get(tok)
         if h is None:
-            h = simhash_token_hash(tok)
+            h = _word_hash(tok)
             cache[tok] = h
         return h
 
@@ -699,7 +650,6 @@ def _simhash_batch(texts: pd.Series) -> pd.Series:
         )
         bits = ((vals[:, None] >> shifts) & np.uint64(1)).astype(np.int64)  # (T, 64)
         votes = (counts[:, None] * (2 * bits - 1)).sum(axis=0)
-        sig = np.uint64(0)
         sig_bits = (votes >= 0).astype(np.uint64)
         sig = (sig_bits << shifts).sum(dtype=np.uint64)
         out[i] = np.int64(sig.astype(np.uint64).view(np.int64))

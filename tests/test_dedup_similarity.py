@@ -237,26 +237,6 @@ def test_minhash_eager_cleanup_unpersists(spark, docs):
     assert after <= before + 1  # the checkpoint itself may linger; caches don't
 
 
-def test_hashed_shingles_preserve_string_shingle_semantics(spark, docs):
-    """with_shingles (string form — the readable spec) and
-    with_hashed_shingles (the production form) must agree on every
-    set-cardinality the dedup operators consume: per-doc distinct counts
-    and pairwise intersection sizes."""
-    d = docs.limit(40)
-    s = dedup.with_shingles(d, "text", 3).select("doc_id", "shingles").collect()
-    h = dedup.with_hashed_shingles(d, "text", 3).select("doc_id", "sh_hashes").collect()
-    strs = {r.doc_id: set(r.shingles) for r in s}
-    hsh = {r.doc_id: set(r.sh_hashes) for r in h}
-    assert set(strs) == set(hsh)
-    for k in strs:
-        assert len(strs[k]) == len(hsh[k]), k
-    ids = sorted(strs)
-    for a in ids[:10]:
-        for b in ids[:10]:
-            if a < b:
-                assert len(strs[a] & strs[b]) == len(hsh[a] & hsh[b]), (a, b)
-
-
 # minhash_signatures / band_rows against test-side references: the
 # signature kernel's per-row chain (word hash, position mix, affine
 # permutations) and the F.* form of the band expression.
@@ -270,6 +250,35 @@ MIXED_TEXTS = [
     "nbsp\xa0splits here and\u2003em space too ok",  # str.split splits both
     "the quick brown fox jumps over the lazy dog " * 3,
 ]
+
+
+def _string_shingles(text, n):
+    """The readable spec: distinct word-n-gram strings of a text."""
+    words = (text or "").split()
+    return {" ".join(words[i:i + n]) for i in range(len(words) - n + 1)}
+
+
+def test_hashed_shingles_preserve_string_shingle_semantics(spark, docs):
+    """String shingles (the readable spec, computed here) and the hashed
+    shingles of the production kernel must agree on every set-cardinality
+    the dedup operators consume: per-doc distinct counts and pairwise
+    intersection sizes. Documents with no shingle are absent."""
+    rows = list(enumerate(MIXED_TEXTS, start=-len(MIXED_TEXTS)))
+    rows += [(r.doc_id, r.text) for r in docs.limit(40).collect()]
+    d = spark.createDataFrame(rows, "doc_id long, text string")
+    h = dedup.minhash_signatures(d, "doc_id", n=3).collect()
+    strs = {i: _string_shingles(t, 3) for i, t in rows}
+    strs = {i: s for i, s in strs.items() if s}
+    hsh = {r.id: set(r.sh_hashes) for r in h}
+    assert set(strs) == set(hsh)
+    assert {-8, -7, -6} & set(hsh) == set()       # "", None, two words
+    for k in strs:
+        assert len(strs[k]) == len(hsh[k]), k
+    ids = sorted(strs)
+    for a in ids[:10]:
+        for b in ids[:10]:
+            if a < b:
+                assert len(strs[a] & strs[b]) == len(hsh[a] & hsh[b]), (a, b)
 
 
 def _ref_signatures(rows, n, k=64, seed=1234567):

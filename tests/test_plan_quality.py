@@ -240,6 +240,12 @@ def test_minhash_signatures_runs_kernel_once(spark):
     assert len(nodes) == 1, nodes
 
 
+def test_ngram_jaccard_pairs_runs_one_arrow_map(spark):
+    from ocr_system_spark.operators import dedup
+    nodes = python_nodes(dedup.ngram_jaccard_pairs(_fresh_docs(spark), "doc_id"))
+    assert [node for node, _ in nodes] == ["MapInArrow"], nodes
+
+
 def test_gopher_filter_runs_kernel_once(spark):
     from ocr_system_spark.operators.textstats import with_gopher_quality
     nodes = python_nodes(

@@ -197,3 +197,11 @@ def test_hot_shingle_drop_keeps_inter_uni_consistent(spark):
             exp[(a, b)] = (inter, uni)
     assert got == exp
     assert got, "guard dropped everything — test is vacuous"
+    # texts with no shingle (empty, NULL, fewer than n words) add no pair
+    extra = [(6, ""), (7, None), (8, "two words")]
+    df = spark.createDataFrame(rows + extra, schema="doc_id long, text string")
+    assert {
+        (r.id_a, r.id_b): (r.inter, r.uni)
+        for r in ngram_jaccard_pairs(df, "doc_id", min_jaccard_pct=50,
+                                     max_group=3).collect()
+    } == got

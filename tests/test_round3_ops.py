@@ -317,7 +317,7 @@ def test_hashed_shingles_n_gt_6(spark):
     df = spark.createDataFrame(
         [(1, "one two three four five six seven eight nine ten")],
         "doc_id long, text string")
-    out = dedup.with_hashed_shingles(df, "text", n=8).collect()[0]
+    out = dedup._shingle_rows(df, "text", n=8).collect()[0]
     assert len(out["sh_hashes"]) == 3          # 10 words → 3 distinct 8-grams
     # the first six multipliers are unchanged (hash stability for n ≤ 6)
     assert dedup._mix_for(6).tolist() == dedup._MIX.tolist()

@@ -34,7 +34,7 @@ def test_ngram_guard_construction_has_hot_and_salted_groups(spark):
     chosen params: ≥1 shingle group > max_group (dropped) and ≥1 group in
     (salt_cap, max_group] (salted)."""
     docs = _guard_corpus(spark)
-    freq = (dedup.with_hashed_shingles(docs, "text", 3)
+    freq = (dedup._shingle_rows(docs, "text", 3)
             .select(F.explode("sh_hashes").alias("h"))
             .groupBy("h").agg(F.count(F.lit(1)).alias("g")))
     assert freq.filter(F.col("g") > 150).count() >= 1          # hot tier

@@ -18,7 +18,7 @@ except Exception:                       # pragma: no cover
     HAVE_HYP = False
 
 from ocr_system_spark.functions.textstats import winnow_fingerprint_one
-from ocr_system_spark.operators.dedup import _SIMHASH_TOKEN_RE, simhash_token_hash
+from ocr_system_spark.operators.dedup import _SIMHASH_TOKEN_RE, _word_hash
 
 pytestmark = pytest.mark.skipif(not HAVE_HYP, reason="hypothesis missing")
 
@@ -57,7 +57,7 @@ def test_simhash_token_hash_matches_duckdb(text):
     con = duckdb.connect()
     for tok in set(_SIMHASH_TOKEN_RE.findall(text)):
         dk = con.execute("SELECT md5_number_lower(?)", [tok]).fetchone()[0]
-        assert dk == simhash_token_hash(tok), tok
+        assert dk == _word_hash(tok), tok
 
 
 @FUZZ
