@@ -106,20 +106,25 @@ def _keyed_kernel(df: DataFrame, out_fields: list[str], batch_fn) -> DataFrame:
     return df.mapInPandas(run, schema=schema)
 
 
-def _static_fields_df(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _fields_kernel(df: DataFrame, out_fields: list[str],
+                   dynamic_config: dict | None = None) -> DataFrame:
+    """``extract_fields_batch`` over (doc_id, text), keyed by doc_id: the
+    kernel sees doc_id as its string ``url``."""
     from ocr_system_spark.operators.extract import extract_fields_batch
 
     def batch(pdf: pd.DataFrame) -> pd.DataFrame:
         tmp = pdf.rename(columns={"doc_id": "url"})
         tmp["url"] = tmp["url"].astype(str)
-        return extract_fields_batch(tmp).drop(columns=["url"])
+        return extract_fields_batch(tmp, dynamic_config=dynamic_config)[out_fields]
 
-    return _keyed_kernel(
+    return _keyed_kernel(df, out_fields, batch)
+
+
+def _static_fields_df(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _fields_kernel(
         _enriched_docs(spark, sf_dir),
         ["license_id", "date", "reference_id", "address",
-         "start_date", "end_date", "licenses", "renew_times", "notes"],
-        batch,
-    )
+         "start_date", "end_date", "licenses", "renew_times", "notes"])
 
 
 # ---------------------------------------------------------------------------
@@ -175,17 +180,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         """Static projection over RAW documents text (catch-all patterns +
         W1 non-empty filter + notes errors-as-data)."""
         ensure_package_on_executors(spark)
-        from ocr_system_spark.operators.extract import extract_fields_batch
-
         d = tables.load(spark, sf_dir, "documents").select("doc_id", "text")
-
-        def batch(pdf):
-            tmp = pdf.rename(columns={"doc_id": "url"})
-            tmp["url"] = tmp["url"].astype(str)
-            out = extract_fields_batch(tmp)
-            return out[["license_id", "reference_id", "notes"]]
-
-        return _keyed_kernel(d, ["license_id", "reference_id", "notes"], batch)
+        return _fields_kernel(d, ["license_id", "reference_id", "notes"])
 
     q["static_fields_raw"] = q_static_fields_raw
 
@@ -194,17 +190,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         drops the rows whose whole extraction came up empty (changes the
         row count, which is what the oracle checks)."""
         ensure_package_on_executors(spark)
-        from ocr_system_spark.operators.extract import extract_fields_batch
-
         d = tables.load(spark, sf_dir, "documents").select("doc_id", "text")
-
-        def batch(pdf):
-            tmp = pdf.rename(columns={"doc_id": "url"})
-            tmp["url"] = tmp["url"].astype(str)
-            out = extract_fields_batch(tmp)
-            return out[["license_id", "reference_id"]]
-
-        res = _keyed_kernel(d, ["license_id", "reference_id"], batch)
+        res = _fields_kernel(d, ["license_id", "reference_id"])
         return res.filter(
             (F.trim(F.coalesce(F.col("license_id"), F.lit(""))) != "")
             | (F.trim(F.coalesce(F.col("reference_id"), F.lit(""))) != "")
@@ -604,22 +591,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         the ''-for-miss semantics (NOT null — differs from the static layer)
         and a deliberately invalid pattern that must be dropped driver-side."""
         ensure_package_on_executors(spark)
-        from ocr_system_spark.operators.extract import extract_fields_batch
-
         cfg = {
             "permit": [r"\bLIC[-_\s]?(\d{3,})\b"],
             "zone": [r"Zone\s+(\d)\b"],
             "nothing": [r"([bad", r"\bZZZNOPE\b"],
         }
-
-        def batch(pdf):
-            tmp = pdf.rename(columns={"doc_id": "url"})
-            tmp["url"] = tmp["url"].astype(str)
-            out = extract_fields_batch(tmp, dynamic_config=cfg)
-            return out[["permit", "zone", "nothing"]]
-
-        return _keyed_kernel(
-            _enriched_docs(spark, sf_dir), ["permit", "zone", "nothing"], batch)
+        return _fields_kernel(
+            _enriched_docs(spark, sf_dir), ["permit", "zone", "nothing"], cfg)
 
     q["dynamic_fields"] = q_dynamic_fields
 

@@ -14,8 +14,7 @@ observable output is byte-identical and pinned by tests/test_fields_golden.py):
   (the reference recompiles per row per call — ocr/extract.py:29-31,
   ocr/dynamic.py:60 — an anti-pattern we do not replicate);
 * all kernels take/return pandas Series so they slot into Arrow-batched
-  ``mapInPandas``/``pandas_udf`` stages with zero per-row Python at the Spark
-  layer;
+  ``mapInPandas`` stages with zero per-row Python at the Spark layer;
 * Python's ``re`` engine is used on purpose: Java/RE2 regex dialects differ
   (inline verbose flags, lookahead nuances, ``\\u2080-\\u2089`` classes), and
   byte-identity with the reference is a hard requirement — never "optimize"

@@ -5,10 +5,11 @@ Two tiers per operator:
 * a JVM-expressible form (built into the driver queries — pure
   pyspark.sql.functions, oracle-checkable against DuckDB);
 * a batch-kernel form here (character n-gram language ID, winnowing
-  fingerprints), Arrow-batched via pandas_udf. These are still
-  oracle-checkable: the langid oracle is SQL GENERATED from the same
-  profile constants, and the winnowing hash is a codepoint polynomial an
-  independent SQL engine can recompute from scratch.
+  fingerprints), run once per row over Arrow batches by the pass-through
+  map in ``operators/_rowmap``. These are still oracle-checkable: the
+  langid oracle is SQL GENERATED from the same profile constants, and
+  the winnowing hash is a codepoint polynomial an independent SQL engine
+  can recompute from scratch.
 """
 
 from __future__ import annotations

@@ -42,7 +42,6 @@ from __future__ import annotations
 import re
 from bisect import bisect_left
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -53,6 +52,8 @@ from ocr_system_spark.functions.tokens import (
     TOKEN_CLASS as _TOKEN_CLASS,
     lower_ascii_tokens,
 )
+
+from ._rowmap import map_rows
 
 __all__ = ["bpe_train", "bpe_encode", "word_vocabulary"]
 
@@ -181,7 +182,8 @@ def bpe_encode(df: DataFrame, merges: list[tuple[int, str, str, int]],
                id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """Apply a learned merge table to every document: per-doc exact token
     and subword counts — (id, n_tokens, n_subwords).  Documents with no
-    token (NULL or blank text) are absent.
+    token (NULL or blank text) are dropped inside the kernel, so no
+    filter sits over its output.
 
     Semantics: SEQUENTIAL merge application — one leftmost-disjoint pass
     per merge, in learn order, word-internal and end-of-word-bounded —
@@ -205,15 +207,10 @@ def bpe_encode(df: DataFrame, merges: list[tuple[int, str, str, int]],
         ranks.setdefault((l, r), []).append(pos)
         pairs_at.append((l, r))
 
-    schema = T.StructType([
-        T.StructField("n_tokens", T.LongType(), False),
-        T.StructField("n_subwords", T.LongType(), False),
-    ])
     tok_re = re.compile(_TOKEN_CLASS)
     trans = str.maketrans(_UPPER, _LOWER)
 
-    @F.pandas_udf(schema)
-    def udf(texts: pd.Series) -> pd.DataFrame:
+    def kernel(batch):
         cache: dict[str, int] = {}
 
         def word_syms(w: str) -> int:
@@ -247,17 +244,17 @@ def bpe_encode(df: DataFrame, merges: list[tuple[int, str, str, int]],
             cache[w] = len(syms)
             return len(syms)
 
-        nt, ns = [], []
-        for t in texts.tolist():
+        rows, nt, ns = [], [], []
+        for i, t in enumerate(batch.column(text_col).to_pylist()):
             words = [w for w in tok_re.findall((t or "").translate(trans))
                      if SEP not in w and EOW not in w]
-            nt.append(len(words))
-            ns.append(sum(word_syms(w) for w in words))
-        return pd.DataFrame({"n_tokens": nt, "n_subwords": ns},
-                            index=texts.index)
+            if words:
+                rows.append(i)
+                nt.append(len(words))
+                ns.append(sum(word_syms(w) for w in words))
+        return rows, [nt, ns]
 
-    out = df.select(F.col(id_col).alias("id"),
-                    udf(F.col(text_col)).alias("e"))
-    return (out.filter(F.col("e.n_tokens") > 0)
-            .select("id", F.col("e.n_tokens").alias("n_tokens"),
-                    F.col("e.n_subwords").alias("n_subwords")))
+    return map_rows(df.select(F.col(id_col).alias("id"), text_col), kernel,
+                    [T.StructField("n_tokens", T.LongType()),
+                     T.StructField("n_subwords", T.LongType())],
+                    drop=text_col)

@@ -18,7 +18,7 @@ md5-derived 64-bit hashes (md5_number_lower — DuckDB-replayable) — the
 same kernel and hash as the dedup family, so a corpus already signed for
 dedup reuses its arrays — and equality of hash sets equals equality of
 string sets w.h.p. (collisions ~n²/2^64). Each side's kernel runs once
-per row, in one ``mapInArrow`` pass that drops rows with no shingle.
+per row, in one ``map_rows`` pass that drops rows with no shingle.
 
 ``n`` defaults to 8: long enough that natural re-use of common phrasing
 does not flag (the published pipelines use 8–13), short enough that a
@@ -28,10 +28,10 @@ quoted benchmark item cannot hide behind minor truncation.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ._rowmap import map_rows
 from .dedup import _shingle_rows
 
 __all__ = ["contamination_hits", "decontaminate", "decontaminate_bloom"]
@@ -181,25 +181,18 @@ def decontaminate_bloom(
     bits = _bloom_build(bench_arr, m, k)
     bc = corpus.sparkSession.sparkContext.broadcast((bits, k))
 
-    @F.pandas_udf("boolean")
-    def bloom_any(sh: pd.Series) -> pd.Series:
+    def bloom_any(batch):
+        """The rows with a shingle probing positive: a segmented ANY over
+        the flat hashes. ``_shingle_rows`` leaves no row without one."""
         bits_, k_ = bc.value
-        arrs = [np.asarray(a, dtype=np.int64) for a in sh.tolist()]
-        lens = np.array([len(a) for a in arrs])
-        if lens.sum() == 0:
-            return pd.Series(np.zeros(len(sh), dtype=bool), index=sh.index)
-        flat = np.concatenate([a for a in arrs if len(a)]).view(np.uint64)
-        hit = _bloom_probe(flat, bits_, k_)
-        out = np.zeros(len(sh), dtype=bool)
-        nz = lens > 0
-        # segmented ANY over the concatenated per-doc slices
-        offsets = np.zeros(int(nz.sum()), dtype=np.int64)
-        np.cumsum(lens[nz][:-1], out=offsets[1:])
-        out[nz] = np.bitwise_or.reduceat(hit, offsets)
-        return pd.Series(out, index=sh.index)
+        sh = batch.column("sh_hashes")
+        offs = sh.offsets.to_numpy()
+        hit = _bloom_probe(sh.flatten().to_numpy().view(np.uint64), bits_, k_)
+        any_hit = np.bitwise_or.reduceat(hit, offs[:-1] - offs[0])
+        return np.flatnonzero(any_hit), []
 
     signed = _shingle_rows(corpus.select(id_col, text_col), text_col, n)
-    cand = signed.filter(bloom_any(F.col("sh_hashes")))
+    cand = map_rows(signed, bloom_any, [])
     dirty_ids = (
         cand.select(F.col(id_col), F.explode("sh_hashes").alias("h"))
         .join(bench_sh, "h", "left_semi")

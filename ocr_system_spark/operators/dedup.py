@@ -20,9 +20,9 @@ Five dedup strategies, all expressed Spark-first:
 
 One implementation per mechanism: one word hash (``_word_hash``, for the
 shingle and SimHash kernels); one shingle pass (``_shingle_rows``, one
-``mapInArrow`` per row, behind n-gram Jaccard, MinHash and
-decontamination); one exact verifier (``_verify_jaccard``); one salting
-rule (``_oversized_groups`` + ``_with_chunk_count``) behind every salted join.
+``map_rows`` pass, behind n-gram Jaccard, MinHash and decontamination);
+one exact verifier (``_verify_jaccard``); one salting rule
+(``_oversized_groups`` + ``_with_chunk_count``) behind every salted join.
 
 Scale notes: every strategy is shuffle-bounded by its blocking key
 (content hash, shingle, band hash, simhash band). At 10^12 docs the
@@ -42,11 +42,12 @@ from functools import lru_cache
 from typing import Optional
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ._rowmap import map_rows
 
 # 2^31-1 (Mersenne prime). Using a 31-bit hash universe keeps every
 # a*h+b term below 2^62, so the JVM-side arithmetic can never overflow a
@@ -254,52 +255,37 @@ def _long_lists(arrs: list) -> pa.ListArray:
 
 def _shingle_rows(df: DataFrame, text_col: str, n: int,
                   minhash_params: Optional[list] = None) -> DataFrame:
-    """ONE ``mapInArrow`` pass over ``df``: every column but ``text_col``
+    """ONE ``map_rows`` pass over ``df``: every column but ``text_col``
     passes through, each row's distinct word-``n``-gram hashes are appended
     as ``sh_hashes`` (plus, given ``minhash_params``, its MinHash signature
-    as ``minhash``), and rows without a shingle are dropped in the kernel.
-
-    A Python map is a plan barrier. A projected pandas UDF is not: Spark
-    pushes a filter over its output (``size(sh_hashes) > 0``, written or
-    inferred from an ``explode``) below the projection, and the filter
-    then evaluates the UDF a second time."""
-    pos = df.columns.index(text_col)
+    as ``minhash``), and rows without a shingle are dropped in the kernel."""
     sign = minhash_params is not None
     longs = T.ArrayType(T.LongType())
-    out_t = T.StructType(
-        [f for i, f in enumerate(df.schema.fields) if i != pos]
-        + [T.StructField("sh_hashes", longs)]
-        + ([T.StructField("minhash", longs)] if sign else []))
+    out = [T.StructField("sh_hashes", longs)]
     if sign:
+        out.append(T.StructField("minhash", longs))
         a_vec = np.array([a for a, _ in minhash_params], dtype=np.int64)[None, :]
         b_vec = np.array([b for _, b in minhash_params], dtype=np.int64)[None, :]
 
-    def kernel(batches):
-        for batch in batches:
-            memo: dict = {}
-            keep, shs, sigs = [], [], []
-            for i, t in enumerate(batch.column(pos).to_pylist()):
-                a = _hashed_shingles_one((t or "").split(), n, memo)
-                if a.size == 0:
-                    continue
-                keep.append(i)
-                shs.append(a)
-                if sign:
-                    # per-row (n_shingles × k) expansion: the arrays are
-                    # small enough to stay cache-resident, which measured
-                    # ~20× faster than one batch-wide expansion + segmented
-                    # min (memory-bandwidth bound)
-                    hv = (a % MERSENNE31)[:, None]         # non-negative
-                    sigs.append(((hv * a_vec + b_vec) % MERSENNE31).min(axis=0))
-            rows = pa.array(keep, type=pa.int64())
-            cols = [batch.column(j).take(rows)
-                    for j in range(batch.num_columns) if j != pos]
-            cols.append(_long_lists(shs))
+    def kernel(batch):
+        memo: dict = {}
+        keep, shs, sigs = [], [], []
+        for i, t in enumerate(batch.column(text_col).to_pylist()):
+            a = _hashed_shingles_one((t or "").split(), n, memo)
+            if a.size == 0:
+                continue
+            keep.append(i)
+            shs.append(a)
             if sign:
-                cols.append(_long_lists(sigs))
-            yield pa.RecordBatch.from_arrays(cols, names=out_t.names)
+                # per-row (n_shingles × k) expansion: the arrays are
+                # small enough to stay cache-resident, which measured
+                # ~20× faster than one batch-wide expansion + segmented
+                # min (memory-bandwidth bound)
+                hv = (a % MERSENNE31)[:, None]         # non-negative
+                sigs.append(((hv * a_vec + b_vec) % MERSENNE31).min(axis=0))
+        return keep, [_long_lists(shs)] + ([_long_lists(sigs)] if sign else [])
 
-    return df.mapInArrow(kernel, out_t)
+    return map_rows(df, kernel, out, drop=text_col)
 
 
 def _oversized_groups(rows: DataFrame, keys: list, salt_cap: int,
@@ -624,7 +610,7 @@ SIMHASH_BITS = 64
 _SIMHASH_TOKEN_RE = re.compile(r"[^\t\n\f\r ]+")
 
 
-def _simhash_batch(texts: pd.Series) -> pd.Series:
+def _simhash_batch(texts: list) -> np.ndarray:
     """64-bit SimHash per text: sign of the per-bit sum of ±1 votes from
     each distinct token's 64-bit hash, weighted by token frequency.
     Token→hash memoized per batch (web corpora repeat tokens heavily);
@@ -640,7 +626,7 @@ def _simhash_batch(texts: pd.Series) -> pd.Series:
 
     out = np.zeros(len(texts), dtype=np.int64)
     shifts = np.arange(SIMHASH_BITS, dtype=np.uint64)
-    for i, t in enumerate(texts.tolist()):
+    for i, t in enumerate(texts):
         toks = _SIMHASH_TOKEN_RE.findall(t or "")
         if not toks:
             continue
@@ -653,15 +639,13 @@ def _simhash_batch(texts: pd.Series) -> pd.Series:
         sig_bits = (votes >= 0).astype(np.uint64)
         sig = (sig_bits << shifts).sum(dtype=np.uint64)
         out[i] = np.int64(sig.astype(np.uint64).view(np.int64))
-    return pd.Series(out, index=texts.index)
+    return out
 
 
 def with_simhash(df: DataFrame, text_col: str = "text", out_col: str = "simhash") -> DataFrame:
-    @F.pandas_udf(T.LongType())
-    def simhash_udf(texts: pd.Series) -> pd.Series:
-        return _simhash_batch(texts)
-
-    return df.withColumn(out_col, simhash_udf(F.col(text_col)))
+    return map_rows(
+        df, lambda b: (None, [_simhash_batch(b.column(text_col).to_pylist())]),
+        [T.StructField(out_col, T.LongType())])
 
 
 def simhash_pairs(

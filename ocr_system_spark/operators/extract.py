@@ -18,6 +18,8 @@ from pyspark.sql import types as T
 
 from ocr_system_spark.functions import fields
 
+from ._rowmap import map_rows
+
 # Result schema: the reference's ExtractionResult row
 # (/root/reference/ocr/models.py:7-16) keyed by url, plus the derived
 # renew_times column and first-page licenses.
@@ -91,17 +93,12 @@ def with_custom_column(
     """The reference's scalar-UDF extension point (`compute_new_column`,
     ocr/postprocess.py:8): a user-supplied per-row function over the result
     row, here as an Arrow-batched slot — fn(pandas.DataFrame) -> pandas.Series."""
-    import pandas as pd
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
     in_cols = [c for c in results.columns if c != "spans"]
 
-    @F.pandas_udf(T.StringType())
-    def udf(s: pd.DataFrame) -> pd.Series:
-        return fn(s).astype(object)
+    def kernel(batch):
+        return None, [fn(batch.select(in_cols).to_pandas()).astype(object)]
 
-    return results.withColumn(name, udf(F.struct(*in_cols)))
+    return map_rows(results, kernel, [T.StructField(name, T.StringType())])
 
 
 def extract_fields(

@@ -34,16 +34,40 @@ from __future__ import annotations
 
 import re as _re
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-_REBUILD_SCHEMA = T.StructType([
-    T.StructField("clean_text", T.StringType(), False),
-    T.StructField("n_lines", T.LongType(), False),
-    T.StructField("n_removed", T.LongType(), False),
-])
+from ._rowmap import map_rows
+
+_REBUILD_FIELDS = [
+    T.StructField("clean_text", T.StringType()),
+    T.StructField("n_lines", T.LongType()),
+    T.StructField("n_removed", T.LongType()),
+]
+
+
+def _drop_hot_lines(df: DataFrame, hot: set, id_col: str, text_col: str,
+                    line_sep: str = "\n") -> DataFrame:
+    """(id, clean_text, n_lines, n_removed): every document rebuilt
+    row-locally without the lines in ``hot``, which ships once to each
+    worker as a broadcast variable."""
+    b = df.sparkSession.sparkContext.broadcast(hot)
+
+    def kernel(batch):
+        h = b.value
+        clean, n_lines, n_removed = [], [], []
+        for t in batch.column(text_col).to_pylist():
+            ls = (t or "").split(line_sep)
+            kept = [l for l in ls if l not in h]
+            clean.append(line_sep.join(kept))
+            n_lines.append(len(ls))
+            n_removed.append(len(ls) - len(kept))
+        return None, [clean, n_lines, n_removed]
+
+    return map_rows(df.select(F.col(id_col).alias("id"), text_col), kernel,
+                    _REBUILD_FIELDS, drop=text_col)
+
 
 # A line participates in dedup / template detection only if it has visible
 # content.  Blank lines are preserved verbatim by the removal transforms.
@@ -191,25 +215,7 @@ def remove_duplicate_lines(df: DataFrame, min_docs: int,
             local_max_bytes, broadcast_max_bytes)
     if rebuild == "local":
         hot_set = {r["line"] for r in hot_rel.select("line").collect()}
-        b = df.sparkSession.sparkContext.broadcast(hot_set)
-
-        @F.pandas_udf(_REBUILD_SCHEMA)
-        def rebuild_udf(texts: pd.Series) -> pd.DataFrame:
-            hot = b.value
-            clean, n_lines, n_removed = [], [], []
-            for t in texts.tolist():
-                ls = (t or "").split(line_sep)
-                kept = [l for l in ls if l not in hot]
-                clean.append(line_sep.join(kept))
-                n_lines.append(len(ls))
-                n_removed.append(len(ls) - len(kept))
-            return pd.DataFrame({"clean_text": clean, "n_lines": n_lines,
-                                 "n_removed": n_removed},
-                                index=texts.index)
-
-        out = df.select(F.col(id_col).alias("id"),
-                        rebuild_udf(F.col(text_col)).alias("r"))
-        return out.select("id", "r.clean_text", "r.n_lines", "r.n_removed")
+        return _drop_hot_lines(df, hot_set, id_col, text_col, line_sep)
 
     hot = hot_rel.select("line")
     if broadcast_hot:

@@ -26,10 +26,11 @@ from __future__ import annotations
 
 import unicodedata
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ._rowmap import map_rows
 
 __all__ = ["normalize_text"]
 
@@ -44,8 +45,9 @@ def normalize_text(df: DataFrame, id_col: str = "doc_id",
         F.coalesce(F.col(text_col), F.lit("")), "\r\n", "\n")
     pre = F.regexp_replace(pre, _ZERO_WIDTH, "")
 
-    @F.pandas_udf(T.StringType())
-    def nfc(texts: pd.Series) -> pd.Series:
-        return texts.map(lambda t: unicodedata.normalize("NFC", t))
+    def nfc(batch):
+        return None, [[unicodedata.normalize("NFC", t)
+                       for t in batch.column(out_col).to_pylist()]]
 
-    return df.select(F.col(id_col).alias("id"), nfc(pre).alias(out_col))
+    return map_rows(df.select(F.col(id_col).alias("id"), pre.alias(out_col)),
+                    nfc, [T.StructField(out_col, T.StringType())])

@@ -18,7 +18,7 @@ exact.
 from __future__ import annotations
 
 import random
-from typing import Iterator, List
+from typing import Iterator, List, Optional
 
 import numpy as np
 import pandas as pd
@@ -26,6 +26,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql import Window as W
+
+from ._rowmap import map_rows
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -243,9 +245,7 @@ def ivf_scored(
     # effective cell key = cell * _SUB_STRIDE + chunk (chunk = 0 unsplit)
     hot_plan: dict = {}
     if cell_cap is not None:
-        assign_col = _assign_cell_udf(cents)
-        hist = (emb.select(vec_col)
-                .withColumn("cell", assign_col(F.col(vec_col)))
+        hist = (_with_cell(emb.select(vec_col), vec_col, cents, drop=vec_col)
                 .groupBy("cell").agg(F.count(F.lit(1)).alias("n")).collect())
         hot_plan = plan_hot_cells(
             {int(r["cell"]): int(r["n"]) for r in hist},
@@ -318,16 +318,16 @@ def _id_chunk(ids: np.ndarray, n_sub: int) -> np.ndarray:
     return (h % np.uint64(n_sub)).astype(np.int64)
 
 
-def _assign_cell_udf(cents_normed: np.ndarray):
-    cn = cents_normed
-
-    @F.pandas_udf("int")
-    def assign(vecs: pd.Series) -> pd.Series:
-        mat = np.array(vecs.tolist(), dtype=np.float64)
+def _with_cell(df: DataFrame, vec_col: str, cents_normed: np.ndarray,
+               drop: Optional[str] = None) -> DataFrame:
+    """``df`` plus ``cell``, the argmax-cosine centroid of ``vec_col``."""
+    def assign(batch):
+        mat = np.array(batch.column(vec_col).to_pylist(), dtype=np.float64)
         mat /= np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-12)
-        return pd.Series(np.argmax(mat @ cn.T, axis=1).astype("int32"),
-                         index=vecs.index)
-    return assign
+        return None, [np.argmax(mat @ cents_normed.T, axis=1).astype(np.int32)]
+
+    return map_rows(df, assign, [T.StructField("cell", T.IntegerType())],
+                    drop=drop)
 
 
 def with_int8_embedding(df: DataFrame, vec_col: str = "embedding",
@@ -411,8 +411,7 @@ def ivf_assign(
     into the Arrow batches; no shuffle."""
     cm = np.array(centroids, dtype=np.float64)
     cn = cm / np.maximum(np.linalg.norm(cm, axis=1, keepdims=True), 1e-12)
-    return emb.select(F.col(id_col),
-                      _assign_cell_udf(cn)(F.col(vec_col)).alias("cell"))
+    return _with_cell(emb.select(id_col, vec_col), vec_col, cn, drop=vec_col)
 
 
 def train_ivf_centroids(
@@ -452,21 +451,15 @@ def train_ivf_centroids(
         n_centroids = len(cents)
     dim = len(cents[0])
 
-    vq = emb.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("v"),
-        F.transform(
-            vec_col,
-            lambda x: F.round(x.cast("double") * quant).cast("long")
-        ).alias("q"),
-    )
+    q = F.transform(vec_col,
+                    lambda x: F.round(x.cast("double") * quant).cast("long"))
 
     for _ in range(iters):
         cm = np.array(cents, dtype=np.float64)
         cn = cm / np.maximum(np.linalg.norm(cm, axis=1, keepdims=True), 1e-12)
         sums = (
-            vq.withColumn("cell", _assign_cell_udf(cn)(F.col("v")))
-            .select("cell", F.posexplode("q").alias("dim", "qv"))
+            _with_cell(emb.select(vec_col), vec_col, cn)
+            .select("cell", F.posexplode(q).alias("dim", "qv"))
             .groupBy("cell", "dim")
             .agg(F.sum("qv").alias("s"), F.count(F.lit(1)).alias("c"))
             .collect()                     # ≤ n_centroids·dim tiny rows
@@ -484,9 +477,11 @@ def _hyperplanes(n_planes: int, dim: int, seed: int = 424242) -> List[List[float
     return [[rng.gauss(0.0, 1.0) for _ in range(dim)] for _ in range(n_planes)]
 
 
-def _bucket_array(vec_col: str, n_tables: int, n_planes: int, dim: int,
-                  seed: int) -> Column:
-    """Array of n_tables SRP bucket ids (one per independent hash table).
+def _srp_bucket_rows(df: DataFrame, vec_col: str, out_col: str,
+                     n_tables: int, n_planes: int, dim: int,
+                     seed: int) -> DataFrame:
+    """``df`` with one row per SRP bucket id ``out_col`` of ``vec_col``:
+    n_tables rows per vector, one per independent hash table.
 
     Computed in ONE Arrow kernel instead of n_tables·n_planes separate
     JVM ``aggregate(zip_with(...))`` chains: Spark evaluates higher-order
@@ -503,10 +498,8 @@ def _bucket_array(vec_col: str, n_tables: int, n_planes: int, dim: int,
     ``aggregate``'s sequential fold. JVM edge semantics reproduced:
     a NaN dot compares ``> 0`` true under Spark's NaN-is-largest rule
     (``| np.isnan``); a NULL vector, a length≠dim vector or a vector with
-    a NULL element yields NULL bucket ids (zip_with pads with nulls → null
-    dot → null bucket).  Arrow hands a NULL element to pandas as NaN, so
-    the kernel could not tell it from a NaN element: such rows are nulled
-    on the JVM side before they reach it."""
+    a NULL element has no bucket (zip_with pads with nulls → null dot →
+    null bucket, which an ``explode`` drops), so its row is dropped."""
     planes = np.array(
         [p for t in range(n_tables)
          for p in _hyperplanes(n_planes, dim, seed + 1000 * t)],
@@ -515,27 +508,22 @@ def _bucket_array(vec_col: str, n_tables: int, n_planes: int, dim: int,
                        dtype=np.int64)
     weights = (np.int64(1) << np.arange(n_planes, dtype=np.int64))
 
-    @F.pandas_udf(T.ArrayType(T.IntegerType()))
-    def bucket_udf(vecs: pd.Series) -> pd.Series:
-        arr = vecs.tolist()
-        null_row = [None] * n_tables
-        out: list = [null_row] * len(arr)
+    def kernel(batch):
+        arr = batch.column(vec_col).to_pylist()
         ok = [i for i, v in enumerate(arr)
-              if v is not None and len(v) == dim]
+              if v is not None and len(v) == dim and None not in v]
+        bkts = np.empty((len(ok), n_tables), dtype=np.int32)
         for s in range(0, len(ok), 512):        # bound the (b, T·P, dim) slab
             blk = ok[s:s + 512]
             m = np.array([arr[i] for i in blk], dtype=np.float64)  # exact f32→f64
             prods = m[:, None, :] * planes[None, :, :]             # (b, T·P, dim)
-            acc = np.cumsum(prods, axis=2)[:, :, -1]               # JVM fold order
+            acc = np.cumsum(prods, axis=2, out=prods)[:, :, -1]    # JVM fold order
             bits = ((acc > 0) | np.isnan(acc)).astype(np.int64) \
                 .reshape(len(blk), n_tables, n_planes)
-            bkts = bits @ weights + offsets[None, :]
-            for j, i in enumerate(blk):
-                out[i] = [int(x) for x in bkts[j]]
-        return pd.Series(out, index=vecs.index, dtype=object)
+            bkts[s:s + len(blk)] = bits @ weights + offsets[None, :]
+        return np.repeat(np.asarray(ok, dtype=np.int64), n_tables), [bkts.ravel()]
 
-    vec = F.col(vec_col)
-    return bucket_udf(F.when(~F.exists(vec, lambda x: x.isNull()), vec))
+    return map_rows(df, kernel, [T.StructField(out_col, T.IntegerType())])
 
 
 def lsh_topk(
@@ -562,14 +550,12 @@ def lsh_topk(
     query set at corpus scale, drop the broadcast hint so the join becomes
     a shuffle on the bucket id, and grow n_planes with log2(N) to keep
     per-bucket occupancy bounded (same salting rules as cosine_dup_pairs)."""
-    c = emb.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv"),
-        F.explode(_bucket_array(vec_col, n_tables, n_planes, dim, seed)).alias("c_bkt"),
-    )
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"),
-        F.explode(_bucket_array(vec_col, n_tables, n_planes, dim, seed)).alias("q_bkt"),
-    )
+    c = _srp_bucket_rows(
+        emb.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")),
+        "cv", "c_bkt", n_tables, n_planes, dim, seed)
+    q = _srp_bucket_rows(
+        queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")),
+        "qv", "q_bkt", n_tables, n_planes, dim, seed)
     cand = (
         c.join(F.broadcast(q), (F.col("c_bkt") == F.col("q_bkt"))
                & (F.col("neighbor_id") != F.col("query_id")))
@@ -613,10 +599,9 @@ def cosine_dup_pairs_lsh(
     → 16.7M buckets/table), and cap/salt residual hot buckets the same way
     minhash_lsh_pairs salts band buckets.
     """
-    b = emb.select(
-        F.col(id_col).alias("id"), F.col(vec_col).alias("vv"),
-        F.explode(_bucket_array(vec_col, n_tables, n_planes, dim, seed)).alias("bkt"),
-    )
+    b = _srp_bucket_rows(
+        emb.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vv")),
+        "vv", "bkt", n_tables, n_planes, dim, seed)
     l, r = b.alias("l"), b.alias("r")
     cand = (
         l.join(r, (F.col("l.bkt") == F.col("r.bkt"))

@@ -4,13 +4,13 @@ from __future__ import annotations
 
 import re
 
-import pandas as pd
-import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ocr_system_spark.functions import textstats as K
+
+from ._rowmap import map_rows
 
 # Tokens are runs of non-ASCII-whitespace — the SAME pinned alphabet as the
 # SimHash kernel (operators/dedup._SIMHASH_TOKEN_RE) and the winnowing
@@ -21,12 +21,19 @@ from ocr_system_spark.functions import textstats as K
 _TOKEN_RE = re.compile(r"[^\t\n\f\r ]+")
 
 
-def with_langid(df: DataFrame, text_col: str = "text", out_col: str = "lang_pred") -> DataFrame:
-    @F.pandas_udf(T.StringType())
-    def udf(texts: pd.Series) -> pd.Series:
-        return K.langid_batch(texts)
+def _frame_kernel(batch_fn, text_col: str):
+    """A 1:1 kernel from a pandas batch function returning a frame."""
+    def kernel(batch):
+        frame = batch_fn(batch.column(text_col).to_pandas())
+        return None, [frame[c] for c in frame.columns]
+    return kernel
 
-    return df.withColumn(out_col, udf(F.col(text_col)))
+
+def with_langid(df: DataFrame, text_col: str = "text", out_col: str = "lang_pred") -> DataFrame:
+    def kernel(batch):
+        return None, [K.langid_batch(batch.column(text_col).to_pandas())]
+
+    return map_rows(df, kernel, [T.StructField(out_col, T.StringType())])
 
 
 QUALITY_SCHEMA = T.StructType([
@@ -39,11 +46,8 @@ QUALITY_SCHEMA = T.StructType([
 
 
 def with_quality(df: DataFrame, text_col: str = "text") -> DataFrame:
-    @F.pandas_udf(QUALITY_SCHEMA)
-    def udf(texts: pd.Series) -> pd.DataFrame:
-        return K.quality_features_batch(texts)
-
-    return df.withColumn("q", udf(F.col(text_col))).select("*", "q.*").drop("q")
+    return map_rows(df, _frame_kernel(K.quality_features_batch, text_col),
+                    QUALITY_SCHEMA)
 
 
 TOKENS_SCHEMA = T.StructType([
@@ -53,11 +57,8 @@ TOKENS_SCHEMA = T.StructType([
 
 
 def with_token_counts(df: DataFrame, text_col: str = "text") -> DataFrame:
-    @F.pandas_udf(TOKENS_SCHEMA)
-    def udf(texts: pd.Series) -> pd.DataFrame:
-        return K.token_count_batch(texts)
-
-    return df.withColumn("t", udf(F.col(text_col))).select("*", "t.*").drop("t")
+    return map_rows(df, _frame_kernel(K.token_count_batch, text_col),
+                    TOKENS_SCHEMA)
 
 
 REPETITION_SCHEMA = T.StructType([
@@ -71,18 +72,16 @@ def with_repetition_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
     mass per document. Emitted as INTEGER (total, distinct) counts — the
     duplicate fraction (total-distinct)/total is derived downstream, so the
     cross-engine comparison stays exact."""
-    @F.pandas_udf(REPETITION_SCHEMA)
-    def udf(texts: pd.Series) -> pd.DataFrame:
+    def kernel(batch):
         tot, dis = [], []
-        for t in texts.tolist():
+        for t in batch.column(text_col).to_pylist():
             w = _TOKEN_RE.findall(t or "")
             n = max(len(w) - 1, 0)
             tot.append(n)
             dis.append(len({(w[i], w[i + 1]) for i in range(n)}) if n else 0)
-        return pd.DataFrame({"total_bigrams": tot, "distinct_bigrams": dis},
-                            index=texts.index)
+        return None, [tot, dis]
 
-    return df.withColumn("r", udf(F.col(text_col))).select("*", "r.*").drop("r")
+    return map_rows(df, kernel, REPETITION_SCHEMA)
 
 
 # the published MassiveText "must contain ≥2 of" stop list (Gopher paper,
@@ -98,30 +97,19 @@ def with_gopher_quality(df: DataFrame, text_col: str = "text",
     """Gopher/MassiveText document-quality gates, integer-stable:
     word-count bounds, mean-word-length bounds (3 ≤ mean ≤ 10, compared as
     3·n ≤ chars ≤ 10·n — no floats), and the ≥2-stopword rule. Emits the
-    raw counts plus the combined ``gopher_pass`` verdict.
+    raw counts plus the combined ``gopher_pass`` verdict."""
+    def kernel(batch):
+        nw, nc, ns = [], [], []
+        for t in batch.column(text_col).to_pylist():
+            w = _TOKEN_RE.findall(t or "")
+            nw.append(len(w))
+            nc.append(sum(len(x) for x in w))
+            ns.append(sum(1 for x in w if x.lower() in GOPHER_STOPS))
+        return None, [nw, nc, ns]
 
-    The counts are appended by a pass-through ``mapInArrow``, a plan
-    barrier: a filter on ``gopher_pass`` cannot be pushed below it, so the
-    kernel runs once per row whatever filter follows (over a projected
-    pandas UDF such a filter evaluates the UDF a second time)."""
-    pos = df.columns.index(text_col)
-    out_t = T.StructType(df.schema.fields + [
-        T.StructField(name, T.LongType()) for name in GOPHER_FIELDS])
-
-    def kernel(batches):
-        for batch in batches:
-            nw, nc, ns = [], [], []
-            for t in batch.column(pos).to_pylist():
-                w = _TOKEN_RE.findall(t or "")
-                nw.append(len(w))
-                nc.append(sum(len(x) for x in w))
-                ns.append(sum(1 for x in w if x.lower() in GOPHER_STOPS))
-            yield pa.RecordBatch.from_arrays(
-                batch.columns + [pa.array(c, type=pa.int64())
-                                 for c in (nw, nc, ns)],
-                names=out_t.names)
-
-    return df.mapInArrow(kernel, out_t).withColumn(
+    counts = map_rows(df, kernel, [T.StructField(name, T.LongType())
+                                   for name in GOPHER_FIELDS])
+    return counts.withColumn(
         "gopher_pass",
         (F.col("n_words") >= min_words) & (F.col("n_words") <= max_words)
         & (F.col("n_word_chars") >= 3 * F.col("n_words"))
@@ -140,18 +128,22 @@ def winnow_fingerprints(df: DataFrame, id_col: str = "doc_id",
                         text_col: str = "text", k: int = 8,
                         window: int = 4) -> DataFrame:
     """Winnowing fingerprints as SCALAR rows (id, pos, fp) — one row per
-    selected k-gram. Scalar output (not array<long>) so downstream joins,
-    aggregations, and cross-engine comparison all work on plain columns."""
-    @F.pandas_udf(FP_STRUCT)
-    def udf(texts: pd.Series) -> pd.Series:
-        return K.winnow_fingerprint_batch(texts, k, window).map(
-            lambda xs: [{"pos": p, "fp": v} for p, v in xs]
-        )
+    selected k-gram, exploded in the kernel. Scalar output (not
+    array<long>) so downstream joins, aggregations, and cross-engine
+    comparison all work on plain columns."""
+    def kernel(batch):
+        rows, pos, fp = [], [], []
+        fps = K.winnow_fingerprint_batch(batch.column(text_col).to_pandas(),
+                                         k, window)
+        for i, xs in enumerate(fps):
+            for p, v in xs:
+                rows.append(i)
+                pos.append(p)
+                fp.append(v)
+        return rows, [pos, fp]
 
-    return (
-        df.select(F.col(id_col), F.explode(udf(F.col(text_col))).alias("s"))
-        .select(id_col, F.col("s.pos").alias("pos"), F.col("s.fp").alias("fp"))
-    )
+    return map_rows(df.select(id_col, text_col), kernel,
+                    FP_STRUCT.elementType, drop=text_col)
 
 
 def top_terms_by_tf(df: DataFrame, id_col: str = "doc_id",

@@ -21,8 +21,9 @@ pure function of (base version content, batches 1..k).
 
 Scale: the merge is a full-outer join of two pre-aggregated count
 relations on the line key (map-side combined on both sides); the cleaning
-pass is the row-local broadcast rebuild (`remove_duplicate_lines`
-``rebuild="local"`` internals) driven by the bounded hot set.  Rewriting
+pass is ``operators/lines._drop_hot_lines``, the same row-local broadcast
+kernel ``remove_duplicate_lines(rebuild="local")`` runs, driven by the
+bounded hot set.  Rewriting
 the counts relation per batch is the sandbox stand-in for an aggregating
 MERGE INTO on an Iceberg table — the loop logic is unchanged.
 """
@@ -32,11 +33,10 @@ from __future__ import annotations
 import os
 from typing import Optional
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ocr_system_spark.operators.lines import _REBUILD_SCHEMA, line_doc_frequency
+from ocr_system_spark.operators.lines import _drop_hot_lines, line_doc_frequency
 from ocr_system_spark.plans import index_store
 
 __all__ = ["process_lines_batch", "start_hot_line_stream",
@@ -145,25 +145,7 @@ def process_lines_batch(
         hot = {r["line"] for r in
                prev.filter(F.col("n_docs") >= min_docs)
                    .select("line").collect()}
-    b = spark.sparkContext.broadcast(hot)
-
-    @F.pandas_udf(_REBUILD_SCHEMA)
-    def clean_udf(texts: pd.Series) -> pd.DataFrame:
-        h = b.value
-        clean, n_lines, n_removed = [], [], []
-        for t in texts.tolist():
-            ls = (t or "").split("\n")
-            kept = [l for l in ls if l not in h]
-            clean.append("\n".join(kept))
-            n_lines.append(len(ls))
-            n_removed.append(len(ls) - len(kept))
-        return pd.DataFrame({"clean_text": clean, "n_lines": n_lines,
-                             "n_removed": n_removed}, index=texts.index)
-
-    cleaned = (batch_df
-               .select(F.col(id_col).alias("id"),
-                       clean_udf(F.col(text_col)).alias("r"))
-               .select("id", "r.clean_text", "r.n_lines", "r.n_removed"))
+    cleaned = _drop_hot_lines(batch_df, hot, id_col, text_col)
     (cleaned.write.mode("overwrite")
      .parquet(os.path.join(clean_dir, f"batch={batch_id}")))
 

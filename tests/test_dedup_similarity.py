@@ -147,20 +147,18 @@ def test_cosine_dup_pairs_finds_scaled_copies(spark, emb):
 
 
 def test_srp_bucket_null_element_is_null_nan_element_is_all_ones(spark):
-    """A NULL vector element makes the JVM dot NULL, so its bucket ids are
-    NULL, as for a NULL vector; a NaN element makes every dot NaN, which
-    compares > 0 (Spark's NaN-is-largest rule), so every plane bit is
-    set."""
+    """A NULL vector element makes the JVM dot NULL, so the vector has no
+    bucket, as a NULL vector has none; a NaN element makes every dot NaN,
+    which compares > 0 (Spark's NaN-is-largest rule), so every plane bit
+    is set."""
     rows = [(0, [1.0, None, 2.0, 3.0]),
             (1, [1.0, float("nan"), 2.0, 3.0]),
             (2, None)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    got = {r.vec_id: r.b for r in df.select(
-        "vec_id", similarity._bucket_array("embedding", n_tables=2,
-                                           n_planes=3, dim=4,
-                                           seed=7).alias("b")).collect()}
-    assert got[0] == got[2] == [None, None]
-    assert got[1] == [0b111, (1 << 3) + 0b111]
+    got = sorted((r.vec_id, r.b) for r in similarity._srp_bucket_rows(
+        df, "embedding", "b", n_tables=2, n_planes=3, dim=4,
+        seed=7).collect())
+    assert got == [(1, 0b111), (1, (1 << 3) + 0b111)]
 
 
 def test_brute_force_scored_volume_is_partial_topk(spark, emb):

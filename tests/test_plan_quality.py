@@ -261,3 +261,101 @@ def test_contamination_hits_runs_each_kernel_once(spark):
     corpus = [x for x in nodes if "doc_id" in x[1]]
     bench = [x for x in nodes if "doc_id" not in x[1]]
     assert len(corpus) == 1 and len(bench) == 1, nodes
+
+
+def _embeddings(spark):
+    rows = [(i, [float((i * 7 + d) % 5) - 2.0 for d in range(64)])
+            for i in range(12)]
+    return spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+
+
+def _lsh_topk(spark):
+    from ocr_system_spark.operators.similarity import lsh_topk
+    e = _embeddings(spark)
+    return lsh_topk(e, e.filter("vec_id < 3"), k=2)
+
+
+def _cosine_dup_pairs_lsh(spark):
+    from ocr_system_spark.operators.similarity import cosine_dup_pairs_lsh
+    return cosine_dup_pairs_lsh(_embeddings(spark))
+
+
+def _ivf_assign(spark):
+    from ocr_system_spark.operators.similarity import ivf_assign
+    return ivf_assign(_embeddings(spark), [[1.0] * 64, [-1.0] * 64])
+
+
+def _bpe_encode(spark):
+    from ocr_system_spark.operators.bpe import bpe_encode, bpe_train
+    docs = _fresh_docs(spark)
+    return bpe_encode(docs, bpe_train(docs, n_merges=4))
+
+
+def _decontaminate_bloom(spark):
+    from ocr_system_spark.operators.decontaminate import decontaminate_bloom
+    docs = _fresh_docs(spark)
+    return decontaminate_bloom(docs, docs.filter("doc_id = 1"), n=5)
+
+
+def _remove_duplicate_lines(spark):
+    from ocr_system_spark.operators.lines import remove_duplicate_lines
+    return remove_duplicate_lines(_fresh_docs(spark), min_docs=2,
+                                  rebuild="local")
+
+
+def _with_custom_column(spark):
+    from ocr_system_spark.operators.extract import with_custom_column
+    res = spark.createDataFrame([("u1", "L-1"), ("u2", None)],
+                                "url string, licenses string")
+    return with_custom_column(res, lambda rows: rows["url"])
+
+
+def _textstats(op):
+    def build(spark):
+        from ocr_system_spark.operators import textstats
+        return getattr(textstats, op)(_fresh_docs(spark))
+    return build
+
+
+def _normalize_text(spark):
+    from ocr_system_spark.operators.normalize import normalize_text
+    return normalize_text(_fresh_docs(spark))
+
+
+def _with_simhash(spark):
+    from ocr_system_spark.operators.dedup import with_simhash
+    return with_simhash(_fresh_docs(spark))
+
+
+# (operator, plan builder, kernel inputs: one Python node each)
+_PER_ROW_KERNELS = [
+    ("with_langid", _textstats("with_langid"), 1),
+    ("with_quality", _textstats("with_quality"), 1),
+    ("with_token_counts", _textstats("with_token_counts"), 1),
+    ("with_repetition_stats", _textstats("with_repetition_stats"), 1),
+    ("winnow_fingerprints", _textstats("winnow_fingerprints"), 1),
+    ("with_simhash", _with_simhash, 1),
+    ("normalize_text", _normalize_text, 1),
+    ("remove_duplicate_lines_local", _remove_duplicate_lines, 1),
+    ("bpe_encode", _bpe_encode, 1),
+    ("ivf_assign", _ivf_assign, 1),
+    ("with_custom_column", _with_custom_column, 1),
+    # corpus side and query side
+    ("lsh_topk", _lsh_topk, 2),
+    # one per self-join side: the SRP kernel still runs twice per row
+    ("cosine_dup_pairs_lsh", _cosine_dup_pairs_lsh, 2),
+    # benchmark shingles, corpus shingles, then the Bloom probe over them
+    ("decontaminate_bloom", _decontaminate_bloom, 3),
+]
+
+
+@pytest.mark.parametrize("build,n_inputs",
+                         [c[1:] for c in _PER_ROW_KERNELS],
+                         ids=[c[0] for c in _PER_ROW_KERNELS])
+def test_per_row_kernels_run_as_one_arrow_map(spark, build, n_inputs):
+    """Every per-row kernel goes through the pass-through map: no
+    projected pandas UDF (``ArrowEvalPython``) is left for a filter to
+    re-evaluate, and a ``bpe_encode`` that drops token-less documents in
+    the kernel holds one Python node, not two."""
+    nodes = python_nodes(build(spark))
+    assert [node for node, _ in nodes] == ["MapInArrow"] * n_inputs, nodes
