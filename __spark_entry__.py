@@ -1245,8 +1245,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def q_line_dedup(spark, sf_dir):
         """Duplicated-line REMOVAL: rebuild every document without the
         lines that occur in >= 10 distinct documents (boilerplate pool
-        lines go; content lines stay).  The hot set is broadcast —
-        bounded by total_lines/min_docs — so the corpus shuffles once for
+        lines go; content lines stay).  The hot set (bounded by
+        total_lines/min_docs) marks lines in a JVM join that Spark plans
+        as a broadcast at these sizes, so the corpus shuffles once for
         the frequency agg and once for the per-doc rebuild."""
         from ocr_system_spark.operators.lines import remove_duplicate_lines
         return remove_duplicate_lines(_lined_documents(spark, sf_dir),
@@ -1261,9 +1262,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         odd ids — only after NFC do the variants collide into one hot
         paragraph (n_docs = all docs), which the paragraph dedup then
         strips; every 7th doc carries a second shared paragraph; each
-        doc's own text is its unique surviving paragraph.  Rebuild
-        strategy is the measured AUTO default (tiny hot set → row-local
-        broadcast rebuild)."""
+        doc's own text is its unique surviving paragraph.  The rebuild
+        is the JVM mark join + per-doc re-aggregation (tiny hot set →
+        Spark broadcasts it)."""
         from ocr_system_spark.operators.lines import remove_duplicate_lines
         from ocr_system_spark.operators.normalize import normalize_text
         d = tables.load(spark, sf_dir, "documents").select("doc_id", "text")
@@ -1306,7 +1307,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def q_template_strip(spark, sf_dir):
         """Per-host template stripping: lines in >= 1/2 of a host's
         documents (hosts with >= 5 docs) removed.  Integer-exact fraction
-        threshold; template set broadcast per (host, line)."""
+        threshold; the (host, line) template set joins as a broadcast,
+        which Spark picks from its size."""
         from ocr_system_spark.operators.lines import strip_template_lines
         return strip_template_lines(
             _hosted_lined_documents(spark, sf_dir), host_col="host",
@@ -1409,8 +1411,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def q_quality_model_table_score(spark, sf_dir):
         """The trained-weight-table scoring path: (term, weight) relation
-        (deterministic stand-in: weight = length(term) - 4) broadcast to
-        per-doc term frequencies; OOV tokens default to 0."""
+        (deterministic stand-in: weight = length(term) - 4) joined to
+        per-doc term frequencies (Spark broadcasts the table at these
+        sizes); OOV tokens default to 0."""
         from ocr_system_spark.functions.tokens import lower_ascii_tokens
         from ocr_system_spark.operators.quality_model import linear_score
         d = tables.load(spark, sf_dir, "documents").select("doc_id", "text")

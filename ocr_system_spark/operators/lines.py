@@ -18,8 +18,11 @@ Scale shape (100 TB):
   traffic as the shingle-based dedup family.
 * The "hot" (duplicated / template) line set is small BY CONSTRUCTION:
   lines occurring in >= min_docs documents number at most
-  total_line_occurrences / min_docs.  The removal join therefore
-  broadcasts the hot set — no second shuffle of the corpus.
+  total_line_occurrences / min_docs.  It is never collected: the
+  removal marks lines with a join against it, which Spark plans from
+  the hot set's size (a broadcast when the plan statistics or
+  AQE's runtime sizes show it fits, a line-keyed shuffle join
+  otherwise), then re-aggregates each document.
 * Everything is a JVM expression or built-in aggregation — zero Python in
   the per-row path.
 
@@ -36,37 +39,6 @@ import re as _re
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-from ._rowmap import map_rows
-
-_REBUILD_FIELDS = [
-    T.StructField("clean_text", T.StringType()),
-    T.StructField("n_lines", T.LongType()),
-    T.StructField("n_removed", T.LongType()),
-]
-
-
-def _drop_hot_lines(df: DataFrame, hot: set, id_col: str, text_col: str,
-                    line_sep: str = "\n") -> DataFrame:
-    """(id, clean_text, n_lines, n_removed): every document rebuilt
-    row-locally without the lines in ``hot``, which ships once to each
-    worker as a broadcast variable."""
-    b = df.sparkSession.sparkContext.broadcast(hot)
-
-    def kernel(batch):
-        h = b.value
-        clean, n_lines, n_removed = [], [], []
-        for t in batch.column(text_col).to_pylist():
-            ls = (t or "").split(line_sep)
-            kept = [l for l in ls if l not in h]
-            clean.append(line_sep.join(kept))
-            n_lines.append(len(ls))
-            n_removed.append(len(ls) - len(kept))
-        return None, [clean, n_lines, n_removed]
-
-    return map_rows(df.select(F.col(id_col).alias("id"), text_col), kernel,
-                    _REBUILD_FIELDS, drop=text_col)
 
 
 # A line participates in dedup / template detection only if it has visible
@@ -114,12 +86,29 @@ def hot_lines(df: DataFrame, min_docs: int, id_col: str = "doc_id",
         F.col("n_docs") >= F.lit(min_docs))
 
 
-def _rebuild(marked, group_cols: list[str], line_sep: str = "\n"):
-    """Shared document-rebuild aggregation over a (pos, line, _hot)-marked
-    line relation: keep the un-hot lines in position order, count totals.
-    Both removal transforms delegate here so the rebuild semantics (blank
-    preservation, ordering, empty-result '' ) cannot diverge."""
-    rebuilt = marked.groupBy(*group_cols).agg(
+def _rebuild(docs: DataFrame, hot: DataFrame,
+             line_sep: str = "\n") -> DataFrame:
+    """Rebuild every document of ``docs`` (its key columns plus a non-null
+    ``text``) without the lines that match a row of ``hot`` on all of
+    ``hot``'s columns (``line`` plus any key columns); ``hot`` holds one
+    row per match key.  The remaining lines keep their position order.
+    Output: (keys..., clean_text, n_lines, n_removed).
+
+    One left mark join over the exploded lines, then one per-document
+    re-aggregation, both in the JVM.  Spark picks the join from the hot
+    relation's size: a broadcast while it fits the auto-broadcast
+    threshold (AQE re-decides on the runtime size), a shuffle join past
+    it.  Every removal transform delegates here so the rebuild semantics
+    (blank preservation, ordering, empty-result '') cannot diverge."""
+    keys = [c for c in docs.columns if c != "text"]
+    lines = docs.select(
+        *keys,
+        F.posexplode(F.split(F.col("text"), _re.escape(line_sep)))
+        .alias("pos", "line"),
+    )
+    marked = lines.join(hot.withColumn("_hot", F.lit(True)),
+                        on=hot.columns, how="left")
+    rebuilt = marked.groupBy(*keys).agg(
         F.count(F.lit(1)).alias("n_lines"),
         F.sum(F.when(F.col("_hot"), 1).otherwise(0)).alias("n_removed"),
         F.sort_array(
@@ -131,103 +120,35 @@ def _rebuild(marked, group_cols: list[str], line_sep: str = "\n"):
     clean = F.array_join(
         F.transform(F.col("_kept"), lambda s: s["line"]), line_sep)
     return rebuilt.select(
-        *group_cols,
+        *keys,
         clean.alias("clean_text"),
         F.col("n_lines").cast("long").alias("n_lines"),
         F.col("n_removed").cast("long").alias("n_removed"),
     )
 
 
-def _choose_rebuild(n_hot: int, hot_bytes: int,
-                    local_max_bytes: int,
-                    broadcast_max_bytes: int) -> tuple[str, bool]:
-    """Strategy for a measured hot set: ('local'|'join', broadcast_hot).
-
-    * fits ``local_max_bytes``  -> collect + broadcast variable, row-local
-      Arrow rebuild (cheapest on a real cluster: the hot set ships once
-      per executor, the corpus never re-shuffles);
-    * fits ``broadcast_max_bytes`` -> pure-JVM mark join with a broadcast
-      hint (no driver-side Python set, but still no corpus shuffle);
-    * larger -> line-keyed shuffle mark join (the only shape with no
-      single-node bound at all)."""
-    if hot_bytes <= local_max_bytes:
-        return "local", True
-    if hot_bytes <= broadcast_max_bytes:
-        return "join", True
-    return "join", False
-
-
 def remove_duplicate_lines(df: DataFrame, min_docs: int,
                            id_col: str = "doc_id",
                            text_col: str = "text",
-                           broadcast_hot: bool = True,
-                           rebuild: str = "auto",
-                           line_sep: str = "\n",
-                           local_max_bytes: int = 64 << 20,
-                           broadcast_max_bytes: int = 512 << 20) -> DataFrame:
+                           line_sep: str = "\n") -> DataFrame:
     """Rebuild each document without the lines that occur in >=
     ``min_docs`` distinct documents (the CCNet duplicated-line pass).
 
     Line order is preserved; blank lines survive (they carry formatting,
     not content, and would otherwise all collide into one "hot" key).
-    Output: (id, clean_text, n_lines, n_removed).
+    Output: (id, clean_text, n_lines, n_removed), one row per document.
+    ``id_col`` must be a non-null, unique document key: the rebuild
+    groups the document's lines back together by it.
 
-    The hot set is bounded by total_line_occurrences/min_docs.  Two
-    rebuild strategies, identical results (pinned in tests):
-
-    * ``rebuild="local"``: collect the bounded hot set once,
-      ship it to every worker as a broadcast variable, and rebuild each
-      document ROW-LOCALLY in an Arrow-batched kernel — the corpus is
-      shuffled only by the doc-frequency aggregation; the rebuild itself
-      is a map.  On one box the two strategies measure the same
-      (2→8-core efficiency ≈0.82 for both, 1M docs — local shuffle is
-      just memory traffic); the local rebuild's advantage appears on a
-      REAL cluster, where the join rebuild ships every line occurrence
-      across the network twice (mark join + per-doc re-aggregation) and
-      the local rebuild ships only the hot set once per executor.
-    * ``rebuild="join"``: pure-JVM mark join + per-doc re-aggregation —
-      zero Python and no driver-side collect, for when the hot set
-      outgrows driver memory; ``broadcast_hot=False`` additionally
-      switches the mark join to a line-keyed shuffle join past the
-      broadcast ceiling.
-    * ``rebuild="auto"`` (default): MEASURE the hot set first — one
-      2-column aggregate over the doc-frequency relation the pass
-      computes anyway — and pick the strategy against the byte
-      thresholds (``local_max_bytes``, then ``broadcast_max_bytes``);
-      the measured bound, not the caller's guess, decides.  The explicit
-      values remain as overrides (callers who know their corpus skip the
-      probe; when an explicit strategy is given the threshold arguments
-      are ignored).
+    The hot set is bounded by total_line_occurrences/min_docs.  It is
+    never collected: the lines are marked by a join against it and each
+    document is re-aggregated (``_rebuild``), all in the JVM, and Spark
+    chooses broadcast or shuffle for that join from the hot set's size.
     """
-    if rebuild not in ("auto", "local", "join"):
-        raise ValueError(
-            f"rebuild must be 'auto', 'local' or 'join', got {rebuild}")
-    hot_rel = hot_lines(df, min_docs, id_col, text_col, line_sep)
-    if rebuild == "auto":
-        # probe + selected rebuild both read this small-by-bound relation
-        hot_rel = hot_rel.cache()
-        probe = hot_rel.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.coalesce(F.sum(F.octet_length("line")), F.lit(0)).alias("b"),
-        ).collect()[0]
-        rebuild, broadcast_hot = _choose_rebuild(
-            int(probe["n"]), int(probe["b"]),
-            local_max_bytes, broadcast_max_bytes)
-    if rebuild == "local":
-        hot_set = {r["line"] for r in hot_rel.select("line").collect()}
-        return _drop_hot_lines(df, hot_set, id_col, text_col, line_sep)
-
-    hot = hot_rel.select("line")
-    if broadcast_hot:
-        hot = F.broadcast(hot)
-    lines = df.select(
-        F.col(id_col).alias("id"),
-        F.posexplode(F.split(_text(text_col), _re.escape(line_sep)))
-        .alias("pos", "line"),
-    )
-    marked = lines.join(
-        hot.withColumn("_hot", F.lit(True)), on="line", how="left")
-    return _rebuild(marked, ["id"], line_sep)
+    hot = hot_lines(df, min_docs, id_col, text_col, line_sep).select("line")
+    docs = df.select(F.col(id_col).alias("id"),
+                     _text(text_col).alias("text"))
+    return _rebuild(docs, hot, line_sep)
 
 
 def template_line_doc_frequency(df: DataFrame, host_col: str,
@@ -261,8 +182,7 @@ def strip_template_lines(df: DataFrame, host_col: str,
                          min_frac_num: int = 1, min_frac_den: int = 2,
                          min_host_docs: int = 5,
                          id_col: str = "doc_id",
-                         text_col: str = "text",
-                         broadcast_templates: bool = True) -> DataFrame:
+                         text_col: str = "text") -> DataFrame:
     """Remove per-host template lines: any line occurring in >=
     ``min_frac_num/min_frac_den`` of a host's documents, for hosts with at
     least ``min_host_docs`` documents.  The fraction is compared as
@@ -272,12 +192,10 @@ def strip_template_lines(df: DataFrame, host_col: str,
     Output: (id, host, clean_text, n_lines, n_removed).  The template set
     per host is tiny (a site has few boilerplate lines), but the TOTAL is
     hosts × that — at a 10^12-document crawl with tens of millions of
-    hosts it can outgrow a broadcast.  ``broadcast_templates=False``
-    switches the removal join to a (host, line)-keyed shuffle join (both
-    sides already keyed; no skew — a host's template rows are few); the
-    default broadcast is right whenever the template relation fits the
-    usual ~8 GB broadcast ceiling.  Results are identical either way
-    (pinned in tests).
+    hosts it can outgrow a broadcast.  Spark picks the (host, line)-keyed
+    removal join from the template relation's size (``_rebuild``):
+    broadcast while it fits, a shuffle join past it (both sides already
+    keyed; no skew — a host's template rows are few).
     """
     tmpl = template_line_doc_frequency(df, host_col, id_col, text_col)
     hot = (
@@ -286,16 +204,10 @@ def strip_template_lines(df: DataFrame, host_col: str,
             & (F.col("n_docs") * F.lit(min_frac_den)
                >= F.col("host_docs") * F.lit(min_frac_num)))
         .select("host", "line"))
-    if broadcast_templates:
-        hot = F.broadcast(hot)
-    lines = df.select(
-        F.col(id_col).alias("id"),
-        F.col(host_col).alias("host"),
-        F.posexplode(F.split(_text(text_col), "\n")).alias("pos", "line"),
-    )
-    marked = lines.join(hot.withColumn("_hot", F.lit(True)),
-                        on=["host", "line"], how="left")
-    return _rebuild(marked, ["id", "host"])
+    docs = df.select(F.col(id_col).alias("id"),
+                     F.col(host_col).alias("host"),
+                     _text(text_col).alias("text"))
+    return _rebuild(docs, hot)
 
 
 # ---------------------------------------------------------------------------

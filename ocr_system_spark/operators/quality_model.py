@@ -7,9 +7,10 @@ because it runs at crawl scale.  Two paths:
 
 * ``linear_score(df, weights)`` — the real operator: per-token weights
   arrive as a (term, weight) relation (exported from any trained linear /
-  fastText-style model), broadcast to the corpus token stream, summed per
-  document.  One corpus-sized explode + broadcast join + map-side-combined
-  sum: no shuffle of the corpus beyond the per-doc aggregation.
+  fastText-style model), joined to the corpus token stream, summed per
+  document.  One corpus-sized explode + term join (Spark broadcasts the
+  weight table whenever it fits) + map-side-combined sum: no shuffle of
+  the corpus beyond the per-doc aggregation.
 * ``hashed_linear_score(df)`` — the same dataflow with a DETERMINISTIC
   stub weight function (md5-hex-derived integer in [-1000, 1000]) instead
   of a trained table, so correctness of the scoring plumbing is
@@ -225,20 +226,18 @@ def quality_tiers_bucketed(scored: DataFrame, score_col: str = "score",
 def linear_score(df: DataFrame, weights: DataFrame,
                  id_col: str = "doc_id", text_col: str = "text",
                  default_weight: int = 0,
-                 threshold: int = 0,
-                 broadcast_weights: bool = True) -> DataFrame:
+                 threshold: int = 0) -> DataFrame:
     """Per-document linear score against a trained (term, weight) relation
     (integer weights — export a float model quantized; one row per term,
     or the join fans out).  Out-of-vocabulary tokens take
-    ``default_weight``.  The weight table is broadcast by default (linear
-    text models are ≤ a few hundred MB quantized);
-    ``broadcast_weights=False`` shuffles the pre-aggregated token counts
-    on term instead, for vocabularies past the broadcast ceiling."""
+    ``default_weight``.  Spark picks the term join from the weight
+    table's size: a broadcast while it fits (linear text models are ≤ a
+    few hundred MB quantized), else a shuffle of the pre-aggregated token
+    counts on term."""
     tok = _tokens(df, id_col, text_col)
     tf = tok.groupBy("id", "term").agg(
         F.count(F.lit(1)).alias("tf"))
-    w_side = F.broadcast(weights) if broadcast_weights else weights
-    joined = tf.join(w_side, on="term", how="left")
+    joined = tf.join(weights, on="term", how="left")
     w = F.coalesce(F.col("weight"), F.lit(default_weight))
     return (
         joined.groupBy("id")

@@ -9,24 +9,16 @@ fields per file and never ranks anything (`ocr/pipeline.py`); this
 module adds the Okapi BM25 ranking tier over the pinned cross-engine
 token stream (`functions/tokens.py`).
 
-Two strategies, test-pinned identical (the `lines.py` rebuild-strategy
-precedent):
-
-* ``strategy="scan"`` (default) — the query-term list is BOUNDED by
-  contract (a query workload, not a corpus), so per-doc term
-  frequencies for exactly those terms are computed INSIDE one JVM
-  array expression (``filter(transform(terms, ...), tf > 0)``) during a
-  single corpus scan.  The corpus is never exploded to an (id, term)
-  relation and NEVER shuffles: the only exchanges are over the
-  matched rows (Σ_t df(t) — query-workload-sized), the qterm-sized df
-  aggregate, and the per-query top-k.  A slim (id, dl, matches)
-  projection is cached for the two passes (stats + scoring); at 10^12
-  docs that cache is one long + a few structs per doc.
-* ``strategy="postings"`` — materializes the classic (id, term, tf, dl)
-  inverted-index relation first (:func:`postings`).  Two corpus-sized
-  shuffles; the right shape when the "queries" are thousands+ of terms
-  (df aggregation amortizes) or when the postings artifact itself is
-  the product.
+The query-term list is BOUNDED by contract (a query workload, not a
+corpus), so per-doc term frequencies for exactly those terms are
+computed INSIDE one JVM array expression
+(``filter(transform(terms, ...), tf > 0)``) during a single corpus
+scan.  The corpus is never exploded to an (id, term) relation and NEVER
+shuffles: the only exchanges are over the matched rows (Σ_t df(t) —
+query-workload-sized), the qterm-sized df aggregate, and the per-query
+top-k.  A slim (id, dl, matches) projection is cached for the two
+passes (stats + scoring); at 10^12 docs that cache is one long + a few
+structs per doc.
 
 Determinism contract: per (query-term, doc) contribution is computed in
 IEEE doubles with a PINNED operation order (the oracle SQL mirrors the
@@ -42,7 +34,7 @@ partitioning.  Ties break by ascending doc id.
 with N = corpus docs with ≥1 token, L = total token count (so ``dl·N/L``
 is the dl/avgdl ratio without a separately rounded avgdl), k1 = 1.2,
 b = 0.75.  N and L are one bounded 1-row driver collect (the `lm.py` V
-contract), as is the distinct query-term list for the scan strategy.
+contract), as is the distinct query-term list.
 
 Per-query top-k is a keyed window that Spark executes as map-side
 WindowGroupLimit (partial top-k before the shuffle, the
@@ -55,25 +47,13 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ocr_system_spark.functions.tokens import exploded_terms, lower_ascii_tokens
+from ocr_system_spark.functions.tokens import lower_ascii_tokens
 
-__all__ = ["postings", "bm25_topk"]
+__all__ = ["bm25_topk"]
 
 SCORE_MICROS = 1_000_000
 K1 = 1.2
 B = 0.75
-
-
-def postings(corpus: DataFrame, id_col: str = "doc_id",
-             text_col: str = "text") -> DataFrame:
-    """(id, term, tf, dl) — term frequencies with the per-doc token count
-    replicated onto every posting (a window over the (id, term) relation,
-    id-keyed, map-side aggregated).  Empty/null docs drop out."""
-    tf = (exploded_terms(corpus, id_col, text_col)
-          .groupBy("id", "term")
-          .agg(F.count(F.lit(1)).cast("long").alias("tf")))
-    return tf.withColumn(
-        "dl", F.sum("tf").over(Window.partitionBy("id")).cast("long"))
 
 
 def _contrib_micro(n_docs: int, total_len: int) -> Column:
@@ -105,8 +85,7 @@ def _empty_result(queries: DataFrame, corpus: DataFrame,
 
 
 def bm25_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
-              id_col: str = "doc_id", text_col: str = "text",
-              strategy: str = "scan") -> DataFrame:
+              id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """Top-``k`` documents per query by BM25: (query_id, id, n_terms,
     score_micro, rn) with rn the 1-based rank (score desc, id asc) and
     ``n_terms`` the count of distinct query terms the doc matched.
@@ -116,71 +95,51 @@ def bm25_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
     operator does not take; ``.distinct()`` upstream if your workload
     repeats terms).  Terms are matched against the pinned token alphabet,
     so cased/raw query strings should pass through
-    ``lower_ascii_tokens`` first.  See the module docstring for the two
-    ``strategy`` values; both return identical rows (test-pinned)."""
+    ``lower_ascii_tokens`` first.  See the module docstring for the
+    single-scan plan."""
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
-    if strategy not in ("scan", "postings"):
-        raise ValueError(f"unknown strategy {strategy!r}")
 
     from pyspark import StorageLevel
 
     q = queries.select("query_id", "term")
-
-    if strategy == "postings":
-        p = postings(corpus, id_col, text_col).persist(
-            StorageLevel.MEMORY_AND_DISK)
-        # stats reuse the window's id-partitioning: the per-id agg below
-        # needs no exchange, and nothing expands for a distinct count
-        stats = (p.groupBy("id").agg(F.first("dl").alias("dl"))
-                 .groupBy().agg(F.count(F.lit(1)).cast("long").alias("n"),
-                                F.sum("dl").cast("long").alias("l"))
-                 .first())
-        n_docs, total_len = int(stats["n"] or 0), int(stats["l"] or 0)
-        if n_docs == 0:
-            return _empty_result(queries, corpus, id_col)
-        df_rel = p.groupBy("term").agg(
-            F.count(F.lit(1)).cast("long").alias("df"))
-        matched = (p.join(F.broadcast(q), "term")
-                   .join(df_rel, "term"))
-    else:
-        # bounded-workload contract: the distinct term list is a 1-row-
-        # per-term driver collect (the lm.py V idiom) and rides into one
-        # JVM array expression — the corpus is scanned once, never
-        # exploded corpus-wide, never shuffled
-        terms = sorted({r["term"] for r in q.select("term").distinct()
-                        .collect() if r["term"] is not None})
-        if not terms:
-            return _empty_result(queries, corpus, id_col)
-        qarr = F.array(*[F.lit(t) for t in terms])
-        toks = lower_ascii_tokens(F.col(text_col))
-        hits = F.filter(
-            F.transform(
-                qarr,
-                lambda t: F.struct(
-                    t.alias("term"),
-                    F.size(F.filter(F.col("_toks"), lambda x: x == t))
-                    .cast("long").alias("tf"))),
-            lambda s: s["tf"] > 0)
-        slim = (corpus
-                .select(F.col(id_col).alias("id"), toks.alias("_toks"))
-                .select("id", F.size("_toks").cast("long").alias("dl"),
-                        hits.alias("_hits"))
-                .filter(F.col("dl") > 0)
-                .persist(StorageLevel.MEMORY_AND_DISK))
-        stats = slim.groupBy().agg(
-            F.count(F.lit(1)).cast("long").alias("n"),
-            F.sum("dl").cast("long").alias("l")).first()
-        n_docs, total_len = int(stats["n"] or 0), int(stats["l"] or 0)
-        if n_docs == 0:
-            return _empty_result(queries, corpus, id_col)
-        m = (slim.select("id", "dl", F.explode("_hits").alias("h"))
-             .select("id", "dl", F.col("h.term").alias("term"),
-                     F.col("h.tf").alias("tf")))
-        df_rel = m.groupBy("term").agg(
-            F.count(F.lit(1)).cast("long").alias("df"))
-        matched = (m.join(F.broadcast(df_rel), "term")
-                   .join(F.broadcast(q), "term"))
+    # bounded-workload contract: the distinct term list is a 1-row-
+    # per-term collect (the lm.py V idiom) and rides into one
+    # JVM array expression — the corpus is scanned once, never
+    # exploded corpus-wide, never shuffled
+    terms = sorted({r["term"] for r in q.select("term").distinct()
+                    .collect() if r["term"] is not None})
+    if not terms:
+        return _empty_result(queries, corpus, id_col)
+    qarr = F.array(*[F.lit(t) for t in terms])
+    toks = lower_ascii_tokens(F.col(text_col))
+    hits = F.filter(
+        F.transform(
+            qarr,
+            lambda t: F.struct(
+                t.alias("term"),
+                F.size(F.filter(F.col("_toks"), lambda x: x == t))
+                .cast("long").alias("tf"))),
+        lambda s: s["tf"] > 0)
+    slim = (corpus
+            .select(F.col(id_col).alias("id"), toks.alias("_toks"))
+            .select("id", F.size("_toks").cast("long").alias("dl"),
+                    hits.alias("_hits"))
+            .filter(F.col("dl") > 0)
+            .persist(StorageLevel.MEMORY_AND_DISK))
+    stats = slim.groupBy().agg(
+        F.count(F.lit(1)).cast("long").alias("n"),
+        F.sum("dl").cast("long").alias("l")).first()
+    n_docs, total_len = int(stats["n"] or 0), int(stats["l"] or 0)
+    if n_docs == 0:
+        return _empty_result(queries, corpus, id_col)
+    m = (slim.select("id", "dl", F.explode("_hits").alias("h"))
+         .select("id", "dl", F.col("h.term").alias("term"),
+                 F.col("h.tf").alias("tf")))
+    df_rel = m.groupBy("term").agg(
+        F.count(F.lit(1)).cast("long").alias("df"))
+    matched = (m.join(F.broadcast(df_rel), "term")
+               .join(F.broadcast(q), "term"))
 
     scored = (matched
               .select("query_id", "id",
@@ -190,7 +149,7 @@ def bm25_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
                    F.sum("c").cast("long").alias("score_micro")))
     w = Window.partitionBy("query_id").orderBy(
         F.col("score_micro").desc(), F.col("id").asc())
-    # the slim/postings cache stays referenced by this plan; Spark's
+    # the slim cache stays referenced by this plan; Spark's
     # reference-based ContextCleaner releases it (the lm.py contract)
     return (scored.withColumn("rn", F.row_number().over(w))
             .filter(F.col("rn") <= k))

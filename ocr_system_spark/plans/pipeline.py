@@ -121,16 +121,14 @@ def run_extraction(
     dynamic_config: Optional[Dict[str, List[str]]] = None,
     resume: bool = True,
     max_buckets: Optional[int] = None,
-    repartition_to: Optional[int] = None,
 ) -> dict:
     """Run (or resume) the extraction job. Returns a summary dict.
 
     ``max_buckets`` caps how many remaining buckets are processed this
     invocation — the kill-mid-run simulation hook for resume tests.
-    ``repartition_to`` is the initial partition count of the bucket
-    exchange (default ``min(n_buckets + skew_buckets, 256)``). AQE then
-    coalesces or splits those partitions by their runtime byte size, so it
-    is not the number of tasks.
+    The bucket exchange starts at ``min(n_buckets + skew_buckets, 256)``
+    partitions. AQE then coalesces or splits those partitions by their
+    runtime byte size, so that is not the number of tasks.
     """
     bucketed = with_buckets(pages, n_buckets, skew_bytes, skew_buckets)
 
@@ -148,7 +146,7 @@ def run_extraction(
         target_buckets = all_buckets[:max_buckets]
         remaining_df = remaining_df.filter(F.col("bucket_id").isin(*map(int, target_buckets)) if target_buckets else F.lit(False))
 
-    nparts = repartition_to or min(n_buckets + skew_buckets, 256)
+    nparts = min(n_buckets + skew_buckets, 256)
     remaining_df = remaining_df.hint("rebalance", nparts, "bucket_id")
 
     results = extract_all(remaining_df, dynamic_config)

@@ -21,9 +21,11 @@ pure function of (base version content, batches 1..k).
 
 Scale: the merge is a full-outer join of two pre-aggregated count
 relations on the line key (map-side combined on both sides); the cleaning
-pass is ``operators/lines._drop_hot_lines``, the same row-local broadcast
-kernel ``remove_duplicate_lines(rebuild="local")`` runs, driven by the
-bounded hot set.  Rewriting
+pass is ``operators/lines._rebuild``, the same JVM mark join plus
+per-document re-aggregation ``remove_duplicate_lines`` runs, against the
+predecessor version's hot lines read from the store — the hot set is
+never collected, and Spark picks broadcast or shuffle for the join from
+its size.  Rewriting
 the counts relation per batch is the sandbox stand-in for an aggregating
 MERGE INTO on an Iceberg table — the loop logic is unchanged.
 """
@@ -36,7 +38,7 @@ from typing import Optional
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ocr_system_spark.operators.lines import _drop_hot_lines, line_doc_frequency
+from ocr_system_spark.operators.lines import _rebuild, _text, line_doc_frequency
 from ocr_system_spark.plans import index_store
 
 __all__ = ["process_lines_batch", "start_hot_line_stream",
@@ -138,14 +140,14 @@ def process_lines_batch(
                 f"value this checkpoint's batch sequence started with")
         prev = None
 
-    # hot set as of the predecessor version — bounded, collected once
+    # hot lines as of the predecessor version (a fresh store has none);
+    # never the version this batch overwrites, so a replay cleans alike
     if prev is None:
-        hot = set()
+        hot = spark.createDataFrame([], "line string")
     else:
-        hot = {r["line"] for r in
-               prev.filter(F.col("n_docs") >= min_docs)
-                   .select("line").collect()}
-    cleaned = _drop_hot_lines(batch_df, hot, id_col, text_col)
+        hot = prev.filter(F.col("n_docs") >= min_docs).select("line")
+    cleaned = _rebuild(batch_df.select(F.col(id_col).alias("id"),
+                                       _text(text_col).alias("text")), hot)
     (cleaned.write.mode("overwrite")
      .parquet(os.path.join(clean_dir, f"batch={batch_id}")))
 

@@ -82,9 +82,9 @@ def test_partition_count_invariance(spark, small_pages, tmp_path):
     """Same results at different bucket counts / parallelism (the correctness
     half of the scaling claim, SURVEY §5.2.5)."""
     a = P.run_extraction(spark, pages_df(spark, small_pages), str(tmp_path / "a"),
-                         run_id="ra", n_buckets=8, repartition_to=4)
+                         run_id="ra", n_buckets=8)
     b = P.run_extraction(spark, pages_df(spark, small_pages), str(tmp_path / "b"),
-                         run_id="rb", n_buckets=32, repartition_to=16)
+                         run_id="rb", n_buckets=32)
     ra = P.read_results(spark, str(tmp_path / "a")).drop("bucket_id").toPandas() \
         .sort_values("url").reset_index(drop=True)
     rb = P.read_results(spark, str(tmp_path / "b")).drop("bucket_id").toPandas() \

@@ -299,8 +299,7 @@ def _decontaminate_bloom(spark):
 
 def _remove_duplicate_lines(spark):
     from ocr_system_spark.operators.lines import remove_duplicate_lines
-    return remove_duplicate_lines(_fresh_docs(spark), min_docs=2,
-                                  rebuild="local")
+    return remove_duplicate_lines(_fresh_docs(spark), min_docs=2)
 
 
 def _with_custom_column(spark):
@@ -336,7 +335,8 @@ _PER_ROW_KERNELS = [
     ("winnow_fingerprints", _textstats("winnow_fingerprints"), 1),
     ("with_simhash", _with_simhash, 1),
     ("normalize_text", _normalize_text, 1),
-    ("remove_duplicate_lines_local", _remove_duplicate_lines, 1),
+    # the line rebuild is a JVM mark join: no Python node at all
+    ("remove_duplicate_lines_local", _remove_duplicate_lines, 0),
     ("bpe_encode", _bpe_encode, 1),
     ("ivf_assign", _ivf_assign, 1),
     ("with_custom_column", _with_custom_column, 1),

@@ -2,6 +2,8 @@
 edge cases, and physical-plan pins."""
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
@@ -25,6 +27,48 @@ def _docs(spark, rows):
 def _plan(df) -> str:
     return df._sc._jvm.PythonSQLUtils.explainString(
         df._jdf.queryExecution(), "formatted")
+
+
+def _final_plan(df) -> str:
+    """The plan AQE settled on: run the query, then read its plan.  An
+    unhinted join over an aggregate has no static size estimate, so the
+    broadcast-or-shuffle choice shows only after the runtime re-plan."""
+    df.collect()
+    return _plan(df)
+
+
+def ref_remove_duplicate_lines(df, min_docs, id_col="doc_id",
+                               text_col="text", line_sep="\n"):
+    """Plain-Python reference for ``remove_duplicate_lines``: split each
+    document on the separator, drop the non-blank lines found in >=
+    ``min_docs`` documents, rejoin, count.  Sorted (id, clean_text,
+    n_lines, n_removed) tuples."""
+    docs = [(r[id_col], (r[text_col] or "").split(line_sep))
+            for r in df.select(id_col, text_col).collect()]
+    n_docs = {}
+    for _, ls in docs:
+        for line in {l for l in ls if l.strip(" ") != ""}:
+            n_docs[line] = n_docs.get(line, 0) + 1
+    hot = {l for l, n in n_docs.items() if n >= min_docs}
+    out = []
+    for i, ls in docs:
+        kept = [l for l in ls if l not in hot]
+        out.append((i, line_sep.join(kept), len(ls), len(ls) - len(kept)))
+    return sorted(out)
+
+
+@contextmanager
+def _no_auto_broadcast(spark):
+    """Plan every join as a shuffle join: with the auto-broadcast
+    threshold off, Catalyst (and AQE, which inherits it) never
+    broadcasts the hot side, so the large-large join shape runs."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        yield
+    finally:
+        spark.conf.set(key, prev)
 
 
 class TestLineDocFrequency:
@@ -79,12 +123,13 @@ class TestRemoveDuplicateLines:
 
     def test_all_rebuild_paths_identical(self, spark):
         df = _docs(spark, [(i, "common\nmine %d" % i) for i in range(4)])
-        local = sorted(remove_duplicate_lines(df, min_docs=3).collect())
-        join = sorted(remove_duplicate_lines(
-            df, min_docs=3, rebuild="join").collect())
-        shuffle = sorted(remove_duplicate_lines(
-            df, min_docs=3, rebuild="join", broadcast_hot=False).collect())
-        assert local == join == shuffle
+        want = ref_remove_duplicate_lines(df, min_docs=3)
+        bcast = sorted(map(tuple, remove_duplicate_lines(
+            df, min_docs=3).collect()))
+        with _no_auto_broadcast(spark):
+            shuffle = sorted(map(tuple, remove_duplicate_lines(
+                df, min_docs=3).collect()))
+        assert want == bcast == shuffle
 
     def test_paragraph_granularity(self, spark):
         """line_sep='\\n\\n' dedups PARAGRAPHS (the CCNet granularity):
@@ -105,77 +150,64 @@ class TestRemoveDuplicateLines:
         out_l = {r["id"]: r for r in remove_duplicate_lines(
             df, min_docs=3).collect()}
         assert out_l[0]["clean_text"] == "\nunique zero"
-        # join path agrees at paragraph granularity
-        out_j = {r["id"]: r for r in remove_duplicate_lines(
-            df, min_docs=3, line_sep="\n\n", rebuild="join").collect()}
-        assert {k: (v["clean_text"], v["n_removed"])
-                for k, v in out.items()} \
-            == {k: (v["clean_text"], v["n_removed"])
-                for k, v in out_j.items()}
-
-    def test_auto_strategy_thresholds(self):
-        """Pure decision table: the measured hot-set BYTES pick the
-        strategy against the two thresholds, both switchovers pinned."""
-        from ocr_system_spark.operators.lines import _choose_rebuild
-        assert _choose_rebuild(10, 100, 1000, 10_000) == ("local", True)
-        assert _choose_rebuild(10, 1000, 1000, 10_000) == ("local", True)
-        assert _choose_rebuild(10, 1001, 1000, 10_000) == ("join", True)
-        assert _choose_rebuild(10, 10_000, 1000, 10_000) == ("join", True)
-        assert _choose_rebuild(10, 10_001, 1000, 10_000) == ("join", False)
-        # empty hot set stays on the cheapest path
-        assert _choose_rebuild(0, 0, 1000, 10_000) == ("local", True)
+        # the plain-Python reference agrees at both granularities
+        assert sorted(map(tuple, out.values())) \
+            == ref_remove_duplicate_lines(df, min_docs=3, line_sep="\n\n")
+        assert sorted(map(tuple, out_l.values())) \
+            == ref_remove_duplicate_lines(df, min_docs=3)
 
     def test_auto_switches_and_results_identical(self, spark):
-        """Drive auto through all three regimes with tiny thresholds:
-        results are byte-identical across every selected strategy."""
-        df = _docs(spark, [(i, "common line\nmine %d" % i)
-                           for i in range(4)])
-        want = sorted(remove_duplicate_lines(
-            df, min_docs=3, rebuild="local").collect())
-        # hot set = {"common line"} = 11 bytes
-        as_local = sorted(remove_duplicate_lines(
-            df, min_docs=3, local_max_bytes=11,
-            broadcast_max_bytes=100).collect())
-        as_bcast_join = sorted(remove_duplicate_lines(
-            df, min_docs=3, local_max_bytes=10,
-            broadcast_max_bytes=100).collect())
-        as_shuffle_join = sorted(remove_duplicate_lines(
-            df, min_docs=3, local_max_bytes=4,
-            broadcast_max_bytes=10).collect())
-        assert want == as_local == as_bcast_join == as_shuffle_join
+        """Broadcast and shuffled mark joins, at line and paragraph
+        granularity, with blank, repeated and null-text documents: every
+        arm returns the reference's rows."""
+        df = spark.createDataFrame(
+            [(i, "common line\n\nmine %d\ncommon line" % i)
+             for i in range(4)]
+            + [(4, None), (5, "  \n\ncommon line"), (6, "")],
+            "doc_id long, text string")
+        for sep in ("\n", "\n\n"):
+            want = ref_remove_duplicate_lines(df, min_docs=3, line_sep=sep)
+            bcast = sorted(map(tuple, remove_duplicate_lines(
+                df, min_docs=3, line_sep=sep).collect()))
+            with _no_auto_broadcast(spark):
+                shuffle = sorted(map(tuple, remove_duplicate_lines(
+                    df, min_docs=3, line_sep=sep).collect()))
+            assert want == bcast == shuffle, sep
 
     def test_auto_plan_reflects_selected_strategy(self, spark):
+        """Spark, not the caller, picks the mark join: a broadcast for a
+        small hot set, a sort-merge join once broadcasting is off.  No
+        Python node on either plan."""
         df = _docs(spark, [(i, "common line\nmine %d" % i)
                            for i in range(4)])
-        # forced past local: the plan is the JVM mark join
-        p = _plan(remove_duplicate_lines(
-            df, min_docs=3, local_max_bytes=1, broadcast_max_bytes=100))
+        p = _final_plan(remove_duplicate_lines(df, min_docs=3))
         assert "BroadcastHashJoin" in p
-        # past both thresholds: shuffle join, no broadcast HINT (at test
-        # scale Catalyst still auto-broadcasts the tiny side, so disable
-        # that to observe the large-large shape the strategy selects)
-        thresh_key = "spark.sql.autoBroadcastJoinThreshold"
-        prev = spark.conf.get(thresh_key)
-        try:
-            spark.conf.set(thresh_key, "-1")
-            p2 = _plan(remove_duplicate_lines(
-                df, min_docs=3, local_max_bytes=1, broadcast_max_bytes=2))
-            assert "BroadcastHashJoin" not in p2 and "SortMergeJoin" in p2
-        finally:
-            spark.conf.set(thresh_key, prev)
-        # comfortably under: row-local Arrow rebuild, no join at all
-        p3 = _plan(remove_duplicate_lines(df, min_docs=3))
-        assert "Join" not in p3
+        assert "MapInArrow" not in p and "ArrowEvalPython" not in p
+        with _no_auto_broadcast(spark):
+            p2 = _plan(remove_duplicate_lines(df, min_docs=3))
+        assert "BroadcastHashJoin" not in p2 and "SortMergeJoin" in p2
+        assert "MapInArrow" not in p2 and "ArrowEvalPython" not in p2
 
-    def test_invalid_rebuild_mode_raises(self, spark):
-        df = _docs(spark, [(0, "x")])
-        import pytest as _pytest
-        with _pytest.raises(ValueError):
-            remove_duplicate_lines(df, min_docs=2, rebuild="nope")
+    def test_building_starts_no_job(self, spark):
+        """Building the transform runs nothing: no probe aggregate and no
+        hot-set collect before the caller's action."""
+        sc = spark.sparkContext
+        group = "remove_duplicate_lines_build"
+        df = _docs(spark, [(i, "common\nmine %d" % i) for i in range(4)])
+        sc.setJobGroup(group, "build only")
+        try:
+            out = remove_duplicate_lines(df, min_docs=3)
+            built = len(sc.statusTracker().getJobIdsForGroup(group))
+            out.count()
+            acted = len(sc.statusTracker().getJobIdsForGroup(group))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert built == 0
+        assert acted > 0   # the tracker does see this group's jobs
 
     def test_join_plan_broadcasts_hot_set_no_nested_loop(self, spark):
         df = _docs(spark, [(i, "common\nmine %d" % i) for i in range(4)])
-        p = _plan(remove_duplicate_lines(df, min_docs=3, rebuild="join"))
+        p = _final_plan(remove_duplicate_lines(df, min_docs=3))
         assert "BroadcastHashJoin" in p
         assert "CartesianProduct" not in p
         assert "BroadcastNestedLoopJoin" not in p
@@ -209,8 +241,12 @@ class TestStripTemplateLines:
             (3, "a", "c3"), (4, "a", "c4"),
         ])
         bc = sorted(strip_template_lines(df, host_col="host").collect())
-        sh = sorted(strip_template_lines(
-            df, host_col="host", broadcast_templates=False).collect())
+        with _no_auto_broadcast(spark):
+            shuffled = strip_template_lines(df, host_col="host")
+            # the (host, line) removal join shuffles; the one-row-per-host
+            # join inside template_line_doc_frequency keeps its hint
+            assert "SortMergeJoin" in _plan(shuffled)
+            sh = sorted(shuffled.collect())
         assert bc == sh
 
     def test_fraction_is_integer_exact(self, spark):

@@ -206,13 +206,25 @@ class TestLinearScore:
         w = spark.createDataFrame(
             [Row(term="good", weight=5), Row(term="bad", weight=-7)])
         bc = sorted(linear_score(df, w).collect())
-        sh = sorted(linear_score(df, w, broadcast_weights=False).collect())
+        key = "spark.sql.autoBroadcastJoinThreshold"
+        prev = spark.conf.get(key)
+        spark.conf.set(key, "-1")
+        try:
+            shuffled = linear_score(df, w)
+            assert "BroadcastHashJoin" not in _plan(shuffled)
+            sh = sorted(shuffled.collect())
+        finally:
+            spark.conf.set(key, prev)
         assert bc == sh
 
     def test_broadcast_join_no_nested_loop(self, spark):
         df = _docs(spark, [(0, "a b")])
         w = spark.createDataFrame([Row(term="a", weight=1)])
-        p = _plan(linear_score(df, w))
+        scored = linear_score(df, w)
+        # unhinted: AQE picks the broadcast from the runtime size, so
+        # read the plan it settled on after running the query
+        scored.collect()
+        p = _plan(scored)
         assert "BroadcastHashJoin" in p
         assert "CartesianProduct" not in p
         assert "BroadcastNestedLoopJoin" not in p

@@ -15,7 +15,7 @@ from ocr_system_spark.operators.linkgraph import (
     host_edges,
     pagerank,
 )
-from ocr_system_spark.operators.retrieval import bm25_topk, postings
+from ocr_system_spark.operators.retrieval import bm25_topk
 
 
 def _edges(spark, rows):
@@ -212,13 +212,6 @@ def _py_bm25(corpus, queries, k):
     return sorted(out)
 
 
-class TestPostings:
-    def test_tf_and_dl(self, spark):
-        rows = postings(_docs(spark, [(0, "a b a"), (1, "")])).collect()
-        got = {(r["id"], r["term"]): (r["tf"], r["dl"]) for r in rows}
-        assert got == {(0, "a"): (2, 3), (0, "b"): (1, 3)}
-
-
 class TestBm25:
     QUERIES = [(0, "cat"), (0, "mat"), (1, "dog"), (2, "zebra")]
 
@@ -275,39 +268,11 @@ class TestBm25:
         assert "CartesianProduct" not in plan
         assert "BroadcastNestedLoopJoin" not in plan
 
-    def test_strategies_identical(self, spark):
-        d = _docs(spark, CORPUS)
-        q = _queries(spark, self.QUERIES)
-        scan = sorted(map(tuple, bm25_topk(d, q, k=10).collect()))
-        post = sorted(map(tuple,
-                          bm25_topk(d, q, k=10, strategy="postings")
-                          .collect()))
-        assert scan == post and scan
-
-    def test_postings_strategy_mirror(self, spark):
-        got = sorted((r["query_id"], r["id"], r["n_terms"],
-                      r["score_micro"], r["rn"])
-                     for r in bm25_topk(_docs(spark, CORPUS),
-                                        _queries(spark, self.QUERIES),
-                                        k=10, strategy="postings")
-                     .collect())
-        assert got == _py_bm25(CORPUS, self.QUERIES, 10)
-
     def test_scan_plan_never_shuffles_corpus_by_id(self, spark):
-        """The scan strategy's exchanges are matched-rows-sized (score
-        agg, df agg, top-k) — never a corpus-wide id-keyed shuffle (the
-        postings window's hashpartitioning(id) must be absent)."""
+        """The scan's exchanges are matched-rows-sized (score agg, df
+        agg, top-k) — never a corpus-wide id-keyed shuffle (no
+        hashpartitioning(id) over the corpus)."""
         plan = (bm25_topk(_docs(spark, CORPUS),
                           _queries(spark, self.QUERIES), k=3)
                 ._jdf.queryExecution().executedPlan().toString())
         assert "hashpartitioning(id#" not in plan
-        post = (bm25_topk(_docs(spark, CORPUS),
-                          _queries(spark, self.QUERIES), k=3,
-                          strategy="postings")
-                ._jdf.queryExecution().executedPlan().toString())
-        assert "hashpartitioning(id#" in post   # the shape it avoids
-
-    def test_strategy_validated(self, spark):
-        with pytest.raises(ValueError):
-            bm25_topk(_docs(spark, CORPUS),
-                      _queries(spark, self.QUERIES), strategy="nope")

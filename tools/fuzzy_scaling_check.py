@@ -4,8 +4,7 @@ components → quality keep-best, at two parallelism levels (the honest
 2→8 gate span) on one box.
 
 The north-rule gate evidence (BENCH/BASELINE.md) covers the
-map-dominated extraction job; tools/lines_scaling_check.py covers the
-aggregation-heavy line-dedup job.  This tool covers the JOIN-heavy path:
+map-dominated extraction job.  This tool covers the JOIN-heavy path:
 band self-join + two id-keyed verification joins + iterative component
 propagation + a component-keyed window — the shuffle shapes a 100-TB
 global dedup actually runs.

@@ -1,14 +1,13 @@
-"""Scaling evidence for the BM25 retrieval path: inverted-index build +
-query scoring + per-query top-k at two parallelism levels (the honest
-2->8 gate span) on one box.
+"""Scaling evidence for the BM25 retrieval path: single-scan term
+matching + query scoring + per-query top-k at two parallelism levels
+(the honest 2->8 gate span) on one box.
 
 The north-rule gate evidence (BENCH/BASELINE.md) covers the fused
-extraction job (map-dominated) and the line-dedup job (shuffle-
-dominated); this tool adds the retrieval shape — explode-heavy corpus
-scan, (id, term) aggregation, broadcast query join, vocabulary-keyed df
-join, and the WindowGroupLimit top-k.  Same discipline as
-tools/lines_scaling_check.py: one untimed warm pass per level, two
-timed passes, per-level wall = minimum (co-tenant box).
+extraction job (map-dominated); this tool adds the retrieval shape —
+one corpus scan matching the bounded query-term list, a matched-rows
+df aggregate, broadcast query join, and the WindowGroupLimit top-k.
+Same discipline as tools/scaling_bench.py: one untimed warm pass per
+level, two timed passes, per-level wall = minimum (co-tenant box).
 
 Prints one JSON line; record results in BENCH/BASELINE.md.
 """
