@@ -1096,6 +1096,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         from ocr_system_spark.operators.dedup import (
             incremental_minhash_pairs, minhash_signatures,
             update_minhash_index)
+        from ocr_system_spark.persist import persist
         d = tables.load(spark, sf_dir, "documents").select("doc_id", "text")
         words = F.split(F.trim(F.col("text")), r"\s+")
         batch = d.filter(F.col("doc_id") % 5 == 0).select(
@@ -1105,8 +1106,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         ).union(d.filter(F.col("doc_id") % 5 == 1).select(
             (F.col("doc_id") + 200000).alias("doc_id"),
             F.array_join(F.reverse(words), " ").alias("text")))
-        index_sig = minhash_signatures(d, "doc_id").cache()
-        batch_sig = minhash_signatures(batch, "doc_id").cache()
+        index_sig = persist(minhash_signatures(d, "doc_id"))
+        batch_sig = persist(minhash_signatures(batch, "doc_id"))
         pairs = incremental_minhash_pairs(batch_sig, index_sig,
                                           include_batch_pairs=True)
         return update_minhash_index(index_sig, batch_sig, pairs).select("id")

@@ -62,6 +62,7 @@ def contamination_hits(
         _shingle_rows(corpus.select(id_col, text_col), text_col, n)
         .select(F.col(id_col).alias("id"), F.explode("sh_hashes").alias("h"))
     )
+    # bound: the benchmark's distinct shingles (test sets, not corpora)
     hits = c.join(F.broadcast(_bench_shingles(benchmark, bench_text_col, n)),
                   "h", "left_semi")
     return hits.groupBy("id").agg(F.count(F.lit(1)).alias("n_hits"))
@@ -85,6 +86,7 @@ def decontaminate(
     dirty_ids = (
         _shingle_rows(corpus.select(id_col, text_col), text_col, n)
         .select(F.col(id_col), F.explode("sh_hashes").alias("h"))
+        # bound: the benchmark's distinct shingles (test sets, not corpora)
         .join(F.broadcast(_bench_shingles(benchmark, bench_text_col, n)),
               "h", "left_semi")
         .select(id_col).distinct()

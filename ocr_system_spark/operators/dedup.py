@@ -47,6 +47,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ocr_system_spark.persist import persist
+
 from ._rowmap import map_rows
 
 # 2^31-1 (Mersenne prime). Using a 31-bit hash universe keeps every
@@ -125,13 +127,13 @@ def ngram_jaccard_pairs(
     # nothing below. Cached: read by the frequency aggregate, the
     # salted-group probe, and the exploded join side — one kernel run
     # instead of three.
-    base = _shingle_rows(
+    base = persist(_shingle_rows(
         df.select(
             F.col(key_col).alias("id"),
             F.col(block_col).alias("blk") if block_col else F.lit(0).alias("blk"),
             F.col(text_col).alias("text")),
         "text", n,
-    ).withColumnRenamed("sh_hashes", "shingles").cache()
+    ).withColumnRenamed("sh_hashes", "shingles"))
     # frequent-shingle guard: the hot set is tiny by construction (shingles
     # in > max_group docs), so collect it per block and broadcast; subtract
     # from the arrays BEFORE sizing so n_sh matches the joined universe.
@@ -140,12 +142,10 @@ def ngram_jaccard_pairs(
     # Only the OVERSIZED-group tail of `freq` is ever consumed (the hot
     # drop set and the salting relation), and it is bounded by
     # total_shingles/min(salt_cap, max_group). Cache the tail so the
-    # corpus-scale explode+groupBy behind it executes ONCE instead of
-    # once per consumer (hot broadcast, salting emptiness probe, salted
-    # join broadcast) — guide §2.4/§5; released by the reference-based
-    # ContextCleaner like every other operator-scoped cache here.
-    tail = freq.filter(
-        F.col("g") > min(int(salt_cap), int(max_group))).cache()
+    # corpus-scale explode+groupBy behind it executes ONCE instead of once
+    # per consumer (hot broadcast, salting probe, salted join broadcast).
+    tail = persist(freq.filter(
+        F.col("g") > min(int(salt_cap), int(max_group))))
     hot = (tail.filter(F.col("g") > max_group)
            .groupBy("blk").agg(F.collect_list("shingle").alias("hot")))
     sh = (
@@ -298,10 +298,9 @@ def _oversized_groups(rows: DataFrame, keys: list, salt_cap: int,
     it is TINY and read twice (the one-job emptiness probe and the salted
     join's broadcast side)."""
     if big is None:
-        big = (rows.groupBy(*keys)
-               .agg(F.count(F.lit(1)).alias("gsz"))
-               .filter(F.col("gsz") > salt_cap)
-               .cache())
+        big = persist(rows.groupBy(*keys)
+                      .agg(F.count(F.lit(1)).alias("gsz"))
+                      .filter(F.col("gsz") > salt_cap))
     return None if big.isEmpty() else big
 
 
@@ -310,6 +309,7 @@ def _with_chunk_count(rows: DataFrame, big: DataFrame, keys: list,
     """``rows`` plus ``m``, the number of chunks its key group is salted
     into: m=⌈G/cap⌉ for the oversized groups in ``big`` (*keys, gsz), 1
     for every other group."""
+    # bound: one row per group above salt_cap, ≤ len(rows) / salt_cap
     return (rows.join(F.broadcast(big.select(*keys, "gsz")), list(keys), "left")
             .withColumn("m", F.coalesce(
                 F.ceil(F.col("gsz") / salt_cap), F.lit(1)).cast("int")))
@@ -471,8 +471,8 @@ def incremental_minhash_pairs(
     rows = k // bands
     # both band relations cached: bb feeds the cross join and the
     # within-batch leg; ib feeds the hot-bucket probe and the cross join
-    bb = band_rows(batch_sig, bands, rows).cache()
-    ib = band_rows(index_sig, bands, rows).cache()
+    bb = persist(band_rows(batch_sig, bands, rows))
+    ib = persist(band_rows(index_sig, bands, rows))
     # the INDEX side's oversized buckets, read by both legs' broadcast joins
     keys = ["band", "bhash"]
     big = _oversized_groups(ib, keys, salt_cap)
@@ -556,7 +556,6 @@ def minhash_lsh_pairs(
     min_jaccard_pct: int = 70,
     seed: int = 1234567,
     salt_cap: int = 1000,
-    eager_cleanup: bool = False,
 ) -> DataFrame:
     """Near-duplicate pairs via MinHash banding + exact verification.
 
@@ -576,26 +575,17 @@ def minhash_lsh_pairs(
     its G²/2 pairs in ONE task. Buckets larger than the cap are split into
     m=⌈G/cap⌉ hash chunks and the join runs per chunk-pair (i ≤ j), so the
     same pairs emerge from m(m+1)/2 bounded tasks — no pair is lost.
-
-    ``eager_cleanup=True`` materializes the (small) result and unpersists
-    the two intermediate caches before returning — for long-lived jobs
-    where cache pressure matters more than laziness.
     """
     rows = k // bands
     # cache the hashed shingle sets + signatures: read three times (both
     # sides of the band self-join + the verification joins) and the fused
     # shingle/minhash kernel is the dominant cost. Cached payload is longs,
     # not strings.
-    sh = minhash_signatures(df, key_col, text_col, n, k, seed).cache()
-    exploded = band_rows(sh, bands, rows).cache()
+    sh = persist(minhash_signatures(df, key_col, text_col, n, k, seed))
+    exploded = persist(band_rows(sh, bands, rows))
 
     cand = _salted_band_candidates(exploded, salt_cap)
-    verified = _verify_jaccard(cand, sh, sh, "id_a", "id_b", min_jaccard_pct)
-    if eager_cleanup:
-        verified = verified.localCheckpoint(eager=True)
-        sh.unpersist()
-        exploded.unpersist()
-    return verified
+    return _verify_jaccard(cand, sh, sh, "id_a", "id_b", min_jaccard_pct)
 
 
 # ---------------------------------------------------------------------------
@@ -665,9 +655,8 @@ def simhash_pairs(
     ONE task."""
     # cached: read three times (sub-key explode + both verify sides) and
     # the signature kernel is the dominant cost; payload is (id, long)
-    sh = (with_simhash(df.select(F.col(key_col).alias("id"), text_col), text_col)
-          .select("id", "simhash")
-          .cache())
+    sh = persist(with_simhash(df.select(F.col(key_col).alias("id"), text_col),
+                              text_col).select("id", "simhash"))
     keyed = sh.select(
         "id",
         F.explode(F.array(*[

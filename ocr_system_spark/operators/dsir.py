@@ -57,6 +57,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ocr_system_spark.functions.tokens import lower_ascii_tokens
+from ocr_system_spark.persist import persist
 
 __all__ = ["hashed_features", "bucket_counts", "dsir_logweight",
            "dsir_resample", "feature_bucket_expr", "gumbel_micro_expr"]
@@ -125,16 +126,11 @@ def dsir_logweight(score_df: DataFrame, target_df: DataFrame,
     raw_feats = (hashed_features(raw_df, id_col, text_col, n_buckets)
                  if raw_df is not None else
                  hashed_features(score_df, id_col, text_col, n_buckets))
-    from pyspark import StorageLevel
-
     # The fitted models are ≤ n_buckets rows; persist them so the total
     # collects below don't force a second corpus scan when the join
-    # re-reads them (released by the reference-based ContextCleaner, the
-    # quality_tiers_bucketed precedent).
-    tgt = (bucket_counts(tgt_feats)
-           .persist(StorageLevel.MEMORY_AND_DISK))
-    raw = (bucket_counts(raw_feats)
-           .persist(StorageLevel.MEMORY_AND_DISK))
+    # re-reads them.
+    tgt = persist(bucket_counts(tgt_feats))
+    raw = persist(bucket_counts(raw_feats))
     # Grand totals are 1-row bounded driver collects (the BPE-argmax /
     # IVF-centroid contract): lazy 1-row relations would need cross /
     # constant-key joins, which Catalyst plans as the
@@ -144,6 +140,7 @@ def dsir_logweight(score_df: DataFrame, target_df: DataFrame,
     nq_ = int(raw.agg(F.sum("c").alias("n")).first()["n"] or 0)
 
     doc = hashed_features(score_df, id_col, text_col, n_buckets)
+    # bound: each model has ≤ n_buckets rows
     j = (doc.join(F.broadcast(tgt.withColumnRenamed("c", "cp")),
                   ["bucket"], "left")
             .join(F.broadcast(raw.withColumnRenamed("c", "cq")),

@@ -174,8 +174,9 @@ def template_line_doc_frequency(df: DataFrame, host_col: str,
         F.count(F.lit(1)).alias("_n"))
     freq = per_doc.groupBy("host", "line").agg(
         F.count(F.lit(1)).alias("n_docs"))
-    # hosts are the natural broadcast side: one row per host
-    return freq.join(F.broadcast(host_docs), on="host")
+    # one row per host: tens of millions at crawl scale, so Spark, not a
+    # hint, picks broadcast or shuffle from its size
+    return freq.join(host_docs, on="host")
 
 
 def strip_template_lines(df: DataFrame, host_col: str,

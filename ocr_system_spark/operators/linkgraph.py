@@ -48,6 +48,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ocr_system_spark.persist import persist
+
 __all__ = ["host_edges", "pagerank", "anchor_pairs", "anchor_host_stats"]
 
 # Regex-as-spec (the functions/fields.py contract; RE2-safe subset so the
@@ -172,14 +174,10 @@ def pagerank(edges: DataFrame, n_iter: int = 5,
         raise ValueError(
             f"checkpoint_every must be >= 1, got {checkpoint_every}")
 
-    from pyspark import StorageLevel
-
-    e = (edges.select("src", "dst", F.col("w").cast("long").alias("w"))
-         .persist(StorageLevel.MEMORY_AND_DISK))
-    nodes = (e.select(F.col("src").alias("node"))
-             .union(e.select(F.col("dst").alias("node")))
-             .distinct()
-             .persist(StorageLevel.MEMORY_AND_DISK))
+    e = persist(edges.select("src", "dst", F.col("w").cast("long").alias("w")))
+    nodes = persist(e.select(F.col("src").alias("node"))
+                    .union(e.select(F.col("dst").alias("node")))
+                    .distinct())
     n = int(nodes.count())
     if n == 0:
         return nodes.select("node", F.lit(0).cast("long")
@@ -187,8 +185,7 @@ def pagerank(edges: DataFrame, n_iter: int = 5,
 
     outw = e.groupBy("src").agg(F.sum("w").cast("long").alias("outw"))
     # src-keyed edge+outweight relation, built once and reused each round
-    ew = (e.join(outw, "src")
-          .persist(StorageLevel.MEMORY_AND_DISK))
+    ew = persist(e.join(outw, "src"))
 
     init = scale // n
     base = (init * (DAMP_DEN - DAMP_NUM)) // DAMP_DEN
@@ -210,8 +207,7 @@ def pagerank(edges: DataFrame, n_iter: int = 5,
                          .cast("long").alias("rank_micro")))
         if it % checkpoint_every == 0 and it < n_iter:
             ranks = ranks.localCheckpoint(eager=True)
-    # e/nodes/ew stay persisted for the returned plan (which references
-    # them once per un-checkpointed round — identical subtrees also hit
-    # ReusedExchange); Spark's reference-based ContextCleaner releases
-    # them, the lm.py model-persist contract.
+    # e/nodes/ew stay persisted for the returned plan, which references
+    # them once per un-checkpointed round (identical subtrees also hit
+    # ReusedExchange).
     return ranks

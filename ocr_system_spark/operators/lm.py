@@ -44,6 +44,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ocr_system_spark.functions.tokens import exploded_terms, lower_ascii_tokens
+from ocr_system_spark.persist import persist
 
 __all__ = ["bigrams", "bigram_counts", "bigram_lm_score",
            "trigrams", "stupid_backoff_score"]
@@ -94,13 +95,9 @@ def bigram_lm_score(score_df: DataFrame, train_df: DataFrame,
     the floor probability is 1/V).  Each bigram type's log term is
     quantized to integer micros BEFORE the tf-weighted per-doc sum — the
     whole result is integer-exact (see module docstring)."""
-    from pyspark import StorageLevel
-
     # The model is vocabulary-sized; persist so ctx derivation and the
-    # scoring join reuse one training-corpus scan (reference-based
-    # ContextCleaner releases it, the quality_tiers_bucketed precedent).
-    model = (bigram_counts(train_df, id_col, text_col)
-             .persist(StorageLevel.MEMORY_AND_DISK))
+    # scoring join reuse one training-corpus scan.
+    model = persist(bigram_counts(train_df, id_col, text_col))
     ctx = model.groupBy("w1").agg(F.sum("c2").cast("long").alias("c1"))
     # V is a 1-row bounded driver collect (the same contract as the BPE
     # argmax and IVF centroid collects): a lazy 1-row relation would need
@@ -181,18 +178,13 @@ def stupid_backoff_score(score_df: DataFrame, train_df: DataFrame,
     two bigram roles, unigram counts, totals) are vocabulary-sized,
     broadcast under AQE with the documented shuffle fallback.  N and V
     are one bounded 1-row driver collect (the ``v`` contract above)."""
-    from pyspark import StorageLevel
-
-    tri = (trigrams(train_df, id_col, text_col)
-           .groupBy("w1", "w2", "w3")
-           .agg(F.count(F.lit(1)).cast("long").alias("c123"))
-           .persist(StorageLevel.MEMORY_AND_DISK))
-    big = (bigram_counts(train_df, id_col, text_col)
-           .persist(StorageLevel.MEMORY_AND_DISK))
-    uni = (exploded_terms(train_df, id_col, text_col)
-           .groupBy("term")
-           .agg(F.count(F.lit(1)).cast("long").alias("c"))
-           .persist(StorageLevel.MEMORY_AND_DISK))
+    tri = persist(trigrams(train_df, id_col, text_col)
+                  .groupBy("w1", "w2", "w3")
+                  .agg(F.count(F.lit(1)).cast("long").alias("c123")))
+    big = persist(bigram_counts(train_df, id_col, text_col))
+    uni = persist(exploded_terms(train_df, id_col, text_col)
+                  .groupBy("term")
+                  .agg(F.count(F.lit(1)).cast("long").alias("c")))
     totals = uni.groupBy().agg(
         F.sum("c").cast("long").alias("n"),
         F.count(F.lit(1)).cast("long").alias("v")).first()

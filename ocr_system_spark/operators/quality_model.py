@@ -29,6 +29,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ocr_system_spark.functions.tokens import exploded_terms as _tokens
+from ocr_system_spark.persist import persist
 
 __all__ = ["linear_score", "hashed_linear_score", "stub_weight_expr",
            "host_quality_blocklist", "quality_tiers",
@@ -159,16 +160,11 @@ def quality_tiers_bucketed(scored: DataFrame, score_col: str = "score",
 
     The input is read three times (distribution, boundary ids, final
     assignment), so an un-persisted upstream (e.g. the token-explode
-    scorer) would be recomputed per pass; unless the caller already
-    persisted it, the slim (id, score) projection is persisted
-    MEMORY_AND_DISK for the duration (released by Spark's reference-based
-    ContextCleaner once the returned DataFrame is dropped)."""
+    scorer) would be recomputed per pass; the slim (id, score) projection
+    is persisted instead (``ocr_system_spark.persist``)."""
     if n_tiers <= 0:
         raise ValueError(f"n_tiers must be positive, got {n_tiers}")
-    from pyspark import StorageLevel
-    if scored.storageLevel == StorageLevel.NONE:
-        scored = scored.select(id_col, score_col).persist(
-            StorageLevel.MEMORY_AND_DISK)
+    scored = persist(scored.select(id_col, score_col))
     out_cols = [F.col(id_col).alias("id"), F.col(score_col).alias("score")]
 
     dist = sorted(

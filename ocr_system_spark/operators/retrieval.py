@@ -48,6 +48,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ocr_system_spark.functions.tokens import lower_ascii_tokens
+from ocr_system_spark.persist import persist
 
 __all__ = ["bm25_topk"]
 
@@ -100,8 +101,6 @@ def bm25_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
 
-    from pyspark import StorageLevel
-
     q = queries.select("query_id", "term")
     # bounded-workload contract: the distinct term list is a 1-row-
     # per-term collect (the lm.py V idiom) and rides into one
@@ -121,12 +120,11 @@ def bm25_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
                 F.size(F.filter(F.col("_toks"), lambda x: x == t))
                 .cast("long").alias("tf"))),
         lambda s: s["tf"] > 0)
-    slim = (corpus
-            .select(F.col(id_col).alias("id"), toks.alias("_toks"))
-            .select("id", F.size("_toks").cast("long").alias("dl"),
-                    hits.alias("_hits"))
-            .filter(F.col("dl") > 0)
-            .persist(StorageLevel.MEMORY_AND_DISK))
+    slim = persist(corpus
+                   .select(F.col(id_col).alias("id"), toks.alias("_toks"))
+                   .select("id", F.size("_toks").cast("long").alias("dl"),
+                           hits.alias("_hits"))
+                   .filter(F.col("dl") > 0))
     stats = slim.groupBy().agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum("dl").cast("long").alias("l")).first()
@@ -138,6 +136,8 @@ def bm25_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
                  F.col("h.tf").alias("tf")))
     df_rel = m.groupBy("term").agg(
         F.count(F.lit(1)).cast("long").alias("df"))
+    # bound: both sides hold only the query terms (df_rel one row each,
+    # q one row per query term) — the bounded-workload contract above
     matched = (m.join(F.broadcast(df_rel), "term")
                .join(F.broadcast(q), "term"))
 
@@ -149,7 +149,5 @@ def bm25_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
                    F.sum("c").cast("long").alias("score_micro")))
     w = Window.partitionBy("query_id").orderBy(
         F.col("score_micro").desc(), F.col("id").asc())
-    # the slim cache stays referenced by this plan; Spark's
-    # reference-based ContextCleaner releases it (the lm.py contract)
     return (scored.withColumn("rn", F.row_number().over(w))
             .filter(F.col("rn") <= k))

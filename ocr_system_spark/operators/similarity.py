@@ -557,6 +557,7 @@ def lsh_topk(
         queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")),
         "qv", "q_bkt", n_tables, n_planes, dim, seed)
     cand = (
+        # bound: the query set × n_tables bucket rows (see Scale shape)
         c.join(F.broadcast(q), (F.col("c_bkt") == F.col("q_bkt"))
                & (F.col("neighbor_id") != F.col("query_id")))
         .select("query_id", "qv", "neighbor_id", "cv")

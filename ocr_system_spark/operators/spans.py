@@ -25,6 +25,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window as W, functions as F
 
+from ocr_system_spark.persist import persist
+
 from .textstats import winnow_fingerprints
 
 __all__ = ["duplicate_spans", "dup_span_doc_mass", "remove_duplicate_spans",
@@ -49,8 +51,8 @@ def _guarded_fps(df: DataFrame, id_col: str, text_col: str, k: int,
     # cached: read twice (guard aggregate + the join back) — one kernel
     # run instead of two, and downstream consumers (duplicate_spans' two
     # sides, remove_duplicate_spans' reuse) hit the same cache
-    fps = winnow_fingerprints(df, id_col=id_col, text_col=text_col,
-                              k=k, window=window).cache()
+    fps = persist(winnow_fingerprints(df, id_col=id_col, text_col=text_col,
+                                      k=k, window=window))
     ok = (fps.groupBy("fp")
           .agg(F.count_distinct(id_col).alias("n_docs"))
           .filter(F.col("n_docs") <= max_group)
@@ -133,17 +135,16 @@ def remove_duplicate_spans(
     # a union of two selects would execute the fp self-join twice inside
     # the cache materialization (guide §2.3; the connected_components
     # sym precedent)
-    hits = (
+    hits = persist(
         spans.select(F.explode(F.array(
             F.struct(F.col("id_a").alias("id"), F.col("pos_a").alias("pos")),
             F.struct(F.col("id_b").alias("id"), F.col("pos_b").alias("pos")),
         )).alias("e"))
         .select(F.col("e.id").alias("id"), F.col("e.pos").alias("pos"))
         .distinct()
-        .cache()
     )
-    norm = df.select(F.col(id_col).alias("id"),
-                     winnow_normalize_col(F.col(text_col)).alias("t")).cache()
+    norm = persist(df.select(F.col(id_col).alias("id"),
+                             winnow_normalize_col(F.col(text_col)).alias("t")))
 
     wk = W.partitionBy("id").orderBy("pos")
     prev_end = F.max(F.col("pos") + k).over(
@@ -220,7 +221,7 @@ def dup_span_doc_mass(
     # distinct (id, fp): a fp repeated inside one doc is not cross-doc
     # evidence, and distinct rows make n_docs a document count. Cached:
     # read by the per-fp count and the join back.
-    dfp = fps.select(F.col(id_col).alias("id"), "fp").distinct().cache()
+    dfp = persist(fps.select(F.col(id_col).alias("id"), "fp").distinct())
     counts = (dfp.groupBy("fp").agg(F.count(F.lit(1)).alias("n_docs")))
     return (
         dfp.join(counts, "fp")

@@ -147,18 +147,16 @@ def url_blocklist_filter(
 
     ``blocked_hosts``: a one-column ``host`` relation (lowercase
     registered domains). Public lists run to millions of rows — far past
-    an IN-literal but comfortably inside Spark's broadcast ceiling as a
-    relation, so membership is a broadcast hash join, never a shuffle of
-    the corpus by host.
+    an IN-literal, so membership is a join and Spark picks it from the
+    list's size: a broadcast while it fits the auto-broadcast threshold,
+    a shuffle join past it.
 
     Scale shape (100 TB): hosts explode into ≤ label-count suffix rows
-    (slim: id + suffix string); the broadcast semi-join marks blocked ids
-    and a left_anti on the id removes them — the only corpus shuffle is
-    the anti-join's id-keyed exchange, and AQE converts even that to a
-    broadcast when the blocked-id set is small. The soft-word score is a
-    pure JVM expression chain (no join at all). Past the broadcast
-    ceiling (~8 GB) the same code runs as a shuffled semi-join — flip the
-    hint, nothing else changes.
+    (slim: id + suffix string); the suffix join marks blocked ids and a
+    left_anti on the id removes them. With a broadcast blocklist the only
+    corpus shuffle is the anti-join's id-keyed exchange, and AQE converts
+    even that to a broadcast when the blocked-id set is small. The
+    soft-word score is a pure JVM expression chain (no join at all).
 
     Reference: the reference system has no URL layer (it enumerates local
     files, /root/reference/ocr/pdf.py); this operator covers the URL-
@@ -175,7 +173,7 @@ def url_blocklist_filter(
 
     blocked_ids = (
         base.select(id_col, F.explode(host_suffixes(F.col("host"))).alias("h"))
-        .join(F.broadcast(blocked_hosts.select(F.col("host").alias("h"))), "h")
+        .join(blocked_hosts.select(F.col("host").alias("h")), "h")
         .select(id_col))
     return (base.join(blocked_ids, id_col, "left_anti")
             .filter(F.col("n_soft_hits") <= max_soft_hits))

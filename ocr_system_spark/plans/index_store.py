@@ -34,6 +34,9 @@ from typing import Optional, Tuple
 from pyspark.sql import DataFrame, SparkSession
 
 LATEST = "_LATEST"
+# the base-version sidecar inside a stream's checkpoint directory; the
+# name predates the dedup stream, so checkpoints pinned earlier resume
+BASE_VERSION_FILE = "_HOT_LINE_BASE_VERSION"
 
 
 def _version_dir(path: str, version: int) -> str:
@@ -93,3 +96,42 @@ def write_index_version(
         json.dump({"version": version}, f)
     os.replace(tmp, os.path.join(path, LATEST))  # the atomic publish
     return version
+
+
+def load_or_pin_base_version(checkpoint_dir: str,
+                             store_path: str,
+                             base_version: Optional[int]) -> int:
+    """A stream's base version, PINNED to a sidecar file in its checkpoint
+    directory.  Both streaming loops publish ``base + batch_id + 1``, and a
+    restart resumes the batch-id sequence at n, not 0, so re-deriving the
+    base from the store's advanced latest would skip versions (and the
+    hot-line loop would merge against a missing predecessor).
+
+    Resolution order: an explicit ``base_version`` (a mismatch with the
+    pin is an error, not a silent re-base); else the pin; else the
+    store's current latest (0 for a fresh store), which is then pinned."""
+    os.makedirs(checkpoint_dir, exist_ok=True)
+    sidecar = os.path.join(checkpoint_dir, BASE_VERSION_FILE)
+    pinned: Optional[int] = None
+    if os.path.exists(sidecar):
+        with open(sidecar, "r", encoding="ascii") as f:
+            pinned = int(f.read().strip())
+    if base_version is not None:
+        if pinned is not None and pinned != base_version:
+            raise ValueError(
+                f"base_version={base_version} conflicts with the value "
+                f"{pinned} pinned at {sidecar} when this checkpoint's "
+                f"batch-id sequence started; pass base_version=None to "
+                f"resume, or use a fresh checkpoint_dir to re-base")
+        resolved = base_version
+    elif pinned is not None:
+        resolved = pinned
+    else:
+        resolved = read_latest_version(store_path) or 0
+    if pinned is None:
+        # write-then-rename so a crash mid-write can't pin garbage
+        tmp = sidecar + ".tmp"
+        with open(tmp, "w", encoding="ascii") as f:
+            f.write(str(resolved))
+        os.replace(tmp, sidecar)
+    return resolved

@@ -43,6 +43,7 @@ from pyspark.sql import DataFrame
 from ocr_system_spark.operators.dedup import (incremental_minhash_pairs,
                                               minhash_signatures,
                                               update_minhash_index)
+from ocr_system_spark.persist import persist, scoped_persist
 from ocr_system_spark.plans import index_store
 
 __all__ = ["process_dedup_batch", "start_incremental_dedup_stream"]
@@ -61,35 +62,26 @@ def process_dedup_batch(
 ) -> int:
     """One micro-batch through the loop; returns the published version.
     Exposed separately so tests (and batch backfills) can drive the exact
-    code path the stream runs, including replays."""
+    code path the stream runs, including replays.  Every relation cached
+    for the batch is released before it returns."""
     spark = batch_df.sparkSession
     target_version = base_version + batch_id + 1
-    b_sig = minhash_signatures(batch_df, id_col, text_col).cache()
-    try:
-        idx, _ = index_store.read_index(spark, store_path)
-    except FileNotFoundError:
-        idx = None
-
-    if idx is None:
-        # bootstrap: first batch dedups only against itself
-        empty = b_sig.limit(0)
-        pairs = incremental_minhash_pairs(
-            b_sig, empty, min_jaccard_pct=min_jaccard_pct,
-            include_batch_pairs=True)
-        nxt_src = empty
-    else:
-        pairs = incremental_minhash_pairs(
+    with scoped_persist():
+        b_sig = persist(minhash_signatures(batch_df, id_col, text_col))
+        try:
+            idx, _ = index_store.read_index(spark, store_path)
+        except FileNotFoundError:
+            # bootstrap: first batch dedups only against itself
+            idx = b_sig.limit(0)
+        pairs = persist(incremental_minhash_pairs(
             b_sig, idx, min_jaccard_pct=min_jaccard_pct,
-            include_batch_pairs=True)
-        nxt_src = idx
-    pairs = pairs.cache()
-    (pairs.write.mode("overwrite")
-     .parquet(os.path.join(pairs_dir, f"batch={batch_id}")))
-    nxt = update_minhash_index(nxt_src, b_sig, pairs)
-    index_store.write_index_version(
-        nxt, store_path, version=target_version, n_partitions=n_partitions)
-    b_sig.unpersist()
-    pairs.unpersist()
+            include_batch_pairs=True))
+        (pairs.write.mode("overwrite")
+         .parquet(os.path.join(pairs_dir, f"batch={batch_id}")))
+        nxt = update_minhash_index(idx, b_sig, pairs)
+        index_store.write_index_version(
+            nxt, store_path, version=target_version,
+            n_partitions=n_partitions)
     return target_version
 
 
@@ -106,12 +98,11 @@ def start_incremental_dedup_stream(
     base_version: Optional[int] = None,
 ):
     """docs stream → foreachBatch incremental dedup against the versioned
-    index store. ``base_version`` defaults to the store's current version
-    at stream start (0 for a fresh store) — it anchors the
-    batch-id→version mapping, so keep it stable across restarts of the
-    SAME checkpoint (restarts resume the batch-id sequence)."""
-    if base_version is None:
-        base_version = index_store.read_latest_version(store_path) or 0
+    index store. ``base_version`` is pinned in ``checkpoint_dir`` at
+    first start and reloaded on restarts
+    (``index_store.load_or_pin_base_version``)."""
+    base_version = index_store.load_or_pin_base_version(
+        checkpoint_dir, store_path, base_version)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         process_dedup_batch(

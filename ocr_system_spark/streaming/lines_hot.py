@@ -44,51 +44,6 @@ from ocr_system_spark.plans import index_store
 __all__ = ["process_lines_batch", "start_hot_line_stream",
            "current_hot_lines"]
 
-_BASE_VERSION_FILE = "_HOT_LINE_BASE_VERSION"
-
-
-def _load_or_pin_base_version(checkpoint_dir: str,
-                              store_path: str,
-                              base_version: Optional[int]) -> int:
-    """Resolve the stream's base version and PIN it to a sidecar file
-    inside the checkpoint directory, so restarts of the same checkpoint
-    (which resume the batch-id sequence at n, not 0) reuse the base the
-    sequence was started with.  Deriving the default from the store's
-    CURRENT latest on every start is wrong on exactly the resume path:
-    latest has advanced to base+n, so target-1 = latest+n doesn't exist
-    and a naive restart would silently merge against an empty predecessor,
-    discarding all accumulated counts.
-
-    Resolution order: an explicit ``base_version`` argument wins (and is
-    validated against any pinned value — a mismatch is a hard error, not a
-    silent re-base); else the pinned sidecar value; else the store's
-    current latest (0 for a fresh store), which is then pinned."""
-    os.makedirs(checkpoint_dir, exist_ok=True)
-    sidecar = os.path.join(checkpoint_dir, _BASE_VERSION_FILE)
-    pinned: Optional[int] = None
-    if os.path.exists(sidecar):
-        with open(sidecar, "r", encoding="ascii") as f:
-            pinned = int(f.read().strip())
-    if base_version is not None:
-        if pinned is not None and pinned != base_version:
-            raise ValueError(
-                f"base_version={base_version} conflicts with the value "
-                f"{pinned} pinned at {sidecar} when this checkpoint's "
-                f"batch-id sequence started; pass base_version=None to "
-                f"resume, or use a fresh checkpoint_dir to re-base")
-        resolved = base_version
-    elif pinned is not None:
-        resolved = pinned
-    else:
-        resolved = index_store.read_latest_version(store_path) or 0
-    if pinned is None:
-        # write-then-rename so a crash mid-write can't pin garbage
-        tmp = sidecar + ".tmp"
-        with open(tmp, "w", encoding="ascii") as f:
-            f.write(str(resolved))
-        os.replace(tmp, sidecar)
-    return resolved
-
 
 def _merge_counts(prev: Optional[DataFrame],
                   batch_counts: DataFrame) -> DataFrame:
@@ -178,12 +133,9 @@ def start_hot_line_stream(
     base_version: Optional[int] = None,
 ):
     """docs stream → foreachBatch hot-line maintenance + cleaning.
-    ``base_version`` is pinned to a sidecar file in ``checkpoint_dir`` at
-    first start (defaulting to the store's current version, 0 for a fresh
-    store) and reloaded on restarts of the SAME checkpoint, so the resumed
-    batch-id sequence keeps mapping to the version chain it started —
-    passing an explicit value that conflicts with the pin is an error."""
-    base_version = _load_or_pin_base_version(
+    ``base_version`` is pinned in ``checkpoint_dir`` at first start and
+    reloaded on restarts (``index_store.load_or_pin_base_version``)."""
+    base_version = index_store.load_or_pin_base_version(
         checkpoint_dir, store_path, base_version)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:

@@ -224,15 +224,21 @@ def test_minhash_lsh_salted_matches_unsalted(spark, docs):
     assert base == salted and base
 
 
-def test_minhash_eager_cleanup_unpersists(spark, docs):
-    both = dedup.with_near_dup_copies(docs, "doc_id")
-    before = len([r for r in spark.sparkContext._jsc.sc().getRDDStorageInfo()])
-    out = dedup.minhash_lsh_pairs(both, "doc_id", min_jaccard_pct=70,
-                                  eager_cleanup=True)
-    n = out.count()
-    after = len([r for r in spark.sparkContext._jsc.sc().getRDDStorageInfo()])
+def test_minhash_scope_releases_its_caches(spark, docs):
+    """Run inside ``scoped_persist``, minhash_lsh_pairs leaves exactly the
+    persistent RDDs it found: its signature and band caches and the
+    oversized-bucket probe are all released."""
+    from ocr_system_spark.persist import scoped_persist
+    docs.count()                        # the fixture's own cache, filled
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+    # an id offset no other test uses: a fresh plan, not a cached one
+    both = dedup.with_near_dup_copies(docs, "doc_id", id_offset=700000)
+    with scoped_persist():
+        n = dedup.minhash_lsh_pairs(both, "doc_id",
+                                    min_jaccard_pct=70).count()
     assert n > 0
-    assert after <= before + 1  # the checkpoint itself may linger; caches don't
+    assert set(jsc.getPersistentRDDs().keySet()) == before
 
 
 # minhash_signatures / band_rows against test-side references: the

@@ -243,9 +243,10 @@ class TestStripTemplateLines:
         bc = sorted(strip_template_lines(df, host_col="host").collect())
         with _no_auto_broadcast(spark):
             shuffled = strip_template_lines(df, host_col="host")
-            # the (host, line) removal join shuffles; the one-row-per-host
-            # join inside template_line_doc_frequency keeps its hint
-            assert "SortMergeJoin" in _plan(shuffled)
+            # every join shuffles, the one-row-per-host join inside
+            # template_line_doc_frequency included: no hint forces it
+            p = _plan(shuffled)
+            assert "SortMergeJoin" in p and "BroadcastHashJoin" not in p
             sh = sorted(shuffled.collect())
         assert bc == sh
 

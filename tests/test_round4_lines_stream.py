@@ -138,7 +138,7 @@ class TestBaseVersionPinning:
             q.awaitTermination(180)
 
         run_stream()
-        sidecar = os.path.join(d["ckpt"], lines_hot._BASE_VERSION_FILE)
+        sidecar = os.path.join(d["ckpt"], index_store.BASE_VERSION_FILE)
         assert os.path.exists(sidecar)
         assert open(sidecar).read().strip() == "0"
         _, v = _counts(spark, store)
@@ -156,11 +156,11 @@ class TestBaseVersionPinning:
         import pytest
         ckpt = str(tmp_path / "ckpt")
         store = str(tmp_path / "store")
-        assert lines_hot._load_or_pin_base_version(ckpt, store, None) == 0
+        assert index_store.load_or_pin_base_version(ckpt, store, None) == 0
         with pytest.raises(ValueError, match="conflicts"):
-            lines_hot._load_or_pin_base_version(ckpt, store, 7)
+            index_store.load_or_pin_base_version(ckpt, store, 7)
         # matching explicit value is fine
-        assert lines_hot._load_or_pin_base_version(ckpt, store, 0) == 0
+        assert index_store.load_or_pin_base_version(ckpt, store, 0) == 0
 
     def test_missing_noninitial_predecessor_fails_fast(self, spark,
                                                        tmp_path):

@@ -207,35 +207,42 @@ def _doc_pdf(specs):
                          "text": [" ".join(w) for _, w in specs]})
 
 
-def test_streaming_incremental_dedup_loop(spark, tmp_path):
-    """Two micro-batches through the stream: batch 0 bootstraps the index
-    (within-batch dups deduped), batch 1 dedups against batch 0's
-    SURVIVORS; versions are batch-id derived; pairs are logged per batch."""
+def _dedup_stream(spark, tmp_path, **kw):
+    """(dirs, store, run): ``run()`` drains the parquet files in
+    ``dirs["in"]`` through the incremental dedup stream, resuming the
+    same checkpoint on every call."""
     import os
     from pyspark.sql import types as T
-    from ocr_system_spark.plans import index_store
     from ocr_system_spark.streaming import incremental
 
     d = {k: str(tmp_path / k) for k in ["in", "pairs", "ckpt"]}
     os.makedirs(d["in"])
     store = str(tmp_path / "store")
-
-    # batch 0: two distinct docs + an identical within-batch dup
-    _doc_pdf([(1, _words("a")), (2, _words("b")), (3, _words("b"))]) \
-        .to_parquet(os.path.join(d["in"], "b0.parquet"), index=False)
-
     schema = T.StructType([T.StructField("doc_id", T.LongType(), False),
                            T.StructField("text", T.StringType(), True)])
 
-    def run_stream():
+    def run():
         stream = (spark.readStream.schema(schema).format("parquet")
                   .option("path", d["in"])
                   .option("maxFilesPerTrigger", "1").load())
-        q = incremental.start_incremental_dedup_stream(
-            stream, store, d["pairs"], d["ckpt"], n_partitions=4,
-            base_version=0)
-        q.awaitTermination(180)
+        incremental.start_incremental_dedup_stream(
+            stream, store, d["pairs"], d["ckpt"], **kw).awaitTermination(180)
 
+    return d, store, run
+
+
+def test_streaming_incremental_dedup_loop(spark, tmp_path):
+    """Two micro-batches through the stream: batch 0 bootstraps the index
+    (within-batch dups deduped), batch 1 dedups against batch 0's
+    SURVIVORS; versions are batch-id derived; pairs are logged per batch."""
+    import os
+    from ocr_system_spark.plans import index_store
+
+    d, store, run_stream = _dedup_stream(spark, tmp_path, n_partitions=4,
+                                         base_version=0)
+    # batch 0: two distinct docs + an identical within-batch dup
+    _doc_pdf([(1, _words("a")), (2, _words("b")), (3, _words("b"))]) \
+        .to_parquet(os.path.join(d["in"], "b0.parquet"), index=False)
     run_stream()
     idx, ver = index_store.read_index(spark, store)
     assert ver == 1                      # batch 0 -> version 0+0+1
@@ -283,6 +290,55 @@ def test_streaming_incremental_dedup_replay_idempotent(spark, tmp_path):
     assert idx.count() == 3              # no duplicated survivor rows
     pairs1 = spark.read.parquet(os.path.join(pairs_dir, "batch=1"))
     assert pairs1.count() == 1           # replaced, not appended
+
+
+def test_streaming_incremental_dedup_restart_keeps_base_version(
+        spark, tmp_path):
+    """Restarting the stream on the same checkpoint with the default
+    base_version resumes the batch-id sequence at 1 and must keep mapping
+    it onto the version chain it started: batch 1 publishes version 2
+    (pinned base 0 + 1 + 1), not latest + 1 + 1 = 3."""
+    import os
+    from ocr_system_spark.plans import index_store
+
+    d, store, run_stream = _dedup_stream(spark, tmp_path, n_partitions=2)
+    _doc_pdf([(1, _words("a")), (2, _words("b"))]) \
+        .to_parquet(os.path.join(d["in"], "b0.parquet"), index=False)
+    run_stream()
+    assert index_store.read_latest_version(store) == 1
+    _doc_pdf([(11, _words("c"))]) \
+        .to_parquet(os.path.join(d["in"], "b1.parquet"), index=False)
+    run_stream()
+    idx, ver = index_store.read_index(spark, store)
+    assert ver == 2
+    assert {r.id for r in idx.select("id").collect()} == {1, 2, 11}
+
+
+def test_process_dedup_batch_releases_its_caches(spark, tmp_path):
+    """Every relation a micro-batch caches (signatures, band rows, the
+    oversized-bucket probes, the pairs) is released when the batch
+    returns, replays included; a relation the caller cached beforehand
+    stays cached."""
+    from pyspark import StorageLevel
+    from ocr_system_spark.streaming import incremental
+
+    jsc = spark.sparkContext._jsc
+
+    def persistent_rdds():
+        return set(jsc.getPersistentRDDs().keySet())
+
+    store = str(tmp_path / "store")
+    pairs_dir = str(tmp_path / "pairs")
+    b0 = _docs_df(spark, [(1, _words("a")), (2, _words("b"))]).cache()
+    b0.count()
+    b1 = _docs_df(spark, [(10, _words("a")[1:]), (11, _words("z"))])
+    before = persistent_rdds()
+    for batch, batch_id in [(b0, 0), (b1, 1), (b1, 1)]:
+        incremental.process_dedup_batch(batch, batch_id, store, pairs_dir,
+                                        base_version=0, n_partitions=2)
+        assert persistent_rdds() == before, batch_id
+    assert b0.storageLevel != StorageLevel.NONE
+    b0.unpersist()
 
 
 # ---------------------------------------------------------------------------

@@ -37,25 +37,42 @@ class TestHostOf:
         assert got == ["a.b.co", "b.co", "co"]
 
 
+def _filtered(spark):
+    rows = [
+        (0, "https://ads.tracker.com/banner"),       # subdomain of blocked
+        (1, "https://tracker.com/x"),                # exact blocked
+        (2, "https://nottracker.com/x"),             # NOT a suffix match
+        (3, "https://shop.example/p?q=1"),           # clean
+        (4, "http://fun.win/casino"),                # 1 soft hit -> kept
+        (5, "http://fun.win/casino-poker"),          # 2 soft hits -> drop
+        (6, "http://cdn.bad.example:443/a"),         # blocked via suffix
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, url string")
+    blocked = spark.createDataFrame(
+        [("tracker.com",), ("bad.example",)], "host string")
+    return url_blocklist_filter(df, blocked, soft_words=["casino", "poker"],
+                                max_soft_hits=1)
+
+
 class TestUrlBlocklistFilter:
     @pytest.fixture(scope="class")
     def kept(self, spark):
-        rows = [
-            (0, "https://ads.tracker.com/banner"),       # subdomain of blocked
-            (1, "https://tracker.com/x"),                # exact blocked
-            (2, "https://nottracker.com/x"),             # NOT a suffix match
-            (3, "https://shop.example/p?q=1"),           # clean
-            (4, "http://fun.win/casino"),                # 1 soft hit -> kept
-            (5, "http://fun.win/casino-poker"),          # 2 soft hits -> drop
-            (6, "http://cdn.bad.example:443/a"),         # blocked via suffix
-        ]
-        df = spark.createDataFrame(rows, "doc_id long, url string")
-        blocked = spark.createDataFrame(
-            [("tracker.com",), ("bad.example",)], "host string")
-        out = url_blocklist_filter(df, blocked,
-                                   soft_words=["casino", "poker"],
-                                   max_soft_hits=1)
-        return {r["doc_id"]: r for r in out.collect()}
+        return {r["doc_id"]: r for r in _filtered(spark).collect()}
+
+    def test_shuffle_join_path_identical(self, spark, kept):
+        """With broadcasting off no hint forces the blocklist join to
+        broadcast: every join shuffles, and the kept rows are the same."""
+        key = "spark.sql.autoBroadcastJoinThreshold"
+        prev = spark.conf.get(key)
+        spark.conf.set(key, "-1")
+        try:
+            out = _filtered(spark)
+            shuffled = {r["doc_id"]: r for r in out.collect()}
+            plan = out._jdf.queryExecution().executedPlan().toString()
+        finally:
+            spark.conf.set(key, prev)
+        assert "SortMergeJoin" in plan and "BroadcastHashJoin" not in plan
+        assert shuffled == kept
 
     def test_blocklist_semantics(self, kept):
         assert sorted(kept) == [2, 3, 4]

@@ -67,21 +67,23 @@ def run_once(spark) -> dict:
         connected_components, keep_best)
     from ocr_system_spark.operators.dedup import minhash_lsh_pairs
     from ocr_system_spark.operators.textstats import with_token_counts
+    from ocr_system_spark.persist import scoped_persist
 
     both = build(spark)
-    edges = minhash_lsh_pairs(both, "doc_id", min_jaccard_pct=70,
-                              eager_cleanup=True)
-    comps = connected_components(
-        edges, nodes=both.select(F.col("doc_id").alias("id")))
-    scored = with_token_counts(both).select("doc_id", "ws_tokens")
-    kept = keep_best(scored, comps, "ws_tokens", id_col="doc_id")
-    agg = kept.agg(
-        F.count(F.lit(1)).alias("n_kept"),
-        F.sum((F.col("doc_id") >= 10_000_000).cast("long"))
-        .alias("n_copy_winners"),
-        F.sum((F.col("doc_id") != F.col("comp")).cast("long"))
-        .alias("n_non_min_id"),
-    ).collect()[0]
+    # the scope releases the operator caches before the next repetition
+    with scoped_persist():
+        edges = minhash_lsh_pairs(both, "doc_id", min_jaccard_pct=70)
+        comps = connected_components(
+            edges, nodes=both.select(F.col("doc_id").alias("id")))
+        scored = with_token_counts(both).select("doc_id", "ws_tokens")
+        kept = keep_best(scored, comps, "ws_tokens", id_col="doc_id")
+        agg = kept.agg(
+            F.count(F.lit(1)).alias("n_kept"),
+            F.sum((F.col("doc_id") >= 10_000_000).cast("long"))
+            .alias("n_copy_winners"),
+            F.sum((F.col("doc_id") != F.col("comp")).cast("long"))
+            .alias("n_non_min_id"),
+        ).collect()[0]
     n_pairs = N_DOCS // COPY_EVERY
     assert agg["n_kept"] == N_DOCS, agg
     assert agg["n_copy_winners"] == n_pairs, agg
