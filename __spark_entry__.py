@@ -2318,19 +2318,20 @@ def oracle_sql() -> dict[str, str]:
     # embed them as SQL literals (same trick as the langid profile oracle)
     # and replay the WHOLE algorithm — multi-table bucket assignment,
     # union-of-tables candidate join, exact cosine rank — independently.
-    from ocr_system_spark.operators.similarity import _hyperplanes
+    from ocr_system_spark.operators.similarity import (
+        DUP_PLANES, DUP_TABLES, LSH_TOPK_PLANES, LSH_TOPK_TABLES, _srp_planes)
 
     def _plane_lit(p):
         return "[" + ", ".join(repr(x) for x in p) + "]"
 
     _bkt_exprs = []
-    for _t in range(6):                      # n_tables=6, n_planes=4, dim=64
-        _planes = _hyperplanes(4, 64, 424242 + 1000 * _t)
+    for _t, _planes in enumerate(_srp_planes(LSH_TOPK_TABLES,
+                                             LSH_TOPK_PLANES)):
         _bits = " + ".join(
             f"(CASE WHEN list_dot_product(v, {_plane_lit(_p)}) > 0"
             f" THEN {1 << _i} ELSE 0 END)"
             for _i, _p in enumerate(_planes))
-        _bkt_exprs.append(f"({_bits} + {_t << 4})")
+        _bkt_exprs.append(f"({_bits} + {_t << LSH_TOPK_PLANES})")
     o["embedding_lsh_topk"] = f"""
         WITH e AS (
             SELECT vec_id,
@@ -2555,13 +2556,12 @@ def oracle_sql() -> dict[str, str]:
     # these specific buckets — instead of an exact all-pairs contract that
     # only held because test pairs sit at cosine ≈ 1.0.
     _dup_bkt_exprs = []
-    for _t in range(8):                      # n_tables=8, n_planes=8, dim=64
-        _planes = _hyperplanes(8, 64, 424242 + 1000 * _t)
+    for _t, _planes in enumerate(_srp_planes(DUP_TABLES, DUP_PLANES)):
         _bits = " + ".join(
             f"(CASE WHEN list_dot_product(v, {_plane_lit(_p)}) > 0"
             f" THEN {1 << _i} ELSE 0 END)"
             for _i, _p in enumerate(_planes))
-        _dup_bkt_exprs.append(f"({_bits} + {_t << 8})")
+        _dup_bkt_exprs.append(f"({_bits} + {_t << DUP_PLANES})")
     o["embedding_dup_pairs"] = f"""
         WITH u AS (
             SELECT vec_id, embedding FROM embeddings
@@ -2704,10 +2704,11 @@ def oracle_sql() -> dict[str, str]:
     # slot concat -- equality-equivalent to Spark's xxhash64 of it) ->
     # candidate pairs -> exact hash-set verification.  A marginal-Jaccard
     # pair the LSH misses is missed IDENTICALLY by both engines.
-    from ocr_system_spark.operators.dedup import _minhash_params as _mhp
+    from ocr_system_spark.operators.dedup import (
+        MINHASH_BANDS, MINHASH_K, MINHASH_ROWS, _minhash_params as _mhp)
 
-    _MH_PA = "[" + ",".join(str(a) for a, _ in _mhp(64, 1234567)) + "]"
-    _MH_PB = "[" + ",".join(str(b) for _, b in _mhp(64, 1234567)) + "]"
+    _MH_PA = "[" + ",".join(str(a) for a, _ in _mhp()) + "]"
+    _MH_PB = "[" + ",".join(str(b) for _, b in _mhp()) + "]"
     _MH_MIX = [0x9E3779B97F4A7C15, 0xBF58476D1CE4E5B9, 0x94D049BB133111EB]
 
     def _mh_mul(i: str, m: int) -> str:
@@ -2742,18 +2743,18 @@ def oracle_sql() -> dict[str, str]:
                                                 i -> {shingle})) AS sh
             FROM w{tag} WHERE len(w) >= 3),
         sig{tag} AS (SELECT id, sh,
-                   list_transform(range(1, 65), j ->
+                   list_transform(range(1, {MINHASH_K + 1}), j ->
                        list_min(list_transform(sh, h ->
                            ({_MH_HV} * pa[CAST(j AS INTEGER)]
                             + pb[CAST(j AS INTEGER)]) % 2147483647)))
                    AS sig
             FROM sh{tag}, mh_params),
         band{tag} AS (SELECT id, j,
-                   array_to_string(sig[4*CAST(j AS INTEGER)+1
-                                       :4*CAST(j AS INTEGER)+4], ',')
+                   array_to_string(sig[{MINHASH_ROWS}*CAST(j AS INTEGER)+1
+                                       :{MINHASH_ROWS}*CAST(j AS INTEGER)+{MINHASH_ROWS}], ',')
                    AS bkey
             FROM sig{tag}
-            CROSS JOIN (SELECT unnest(range(0, 16)) AS j))"""
+            CROSS JOIN (SELECT unnest(range(0, {MINHASH_BANDS})) AS j))"""
 
     _MH_SOURCES = r"""
         bi AS (SELECT doc_id AS id, trim(text) AS t FROM documents),

@@ -3,9 +3,11 @@
 One definition of "token" is shared by every term-level operator (BPE
 vocabulary, linear quality scoring, unigram frequency scoring, top-terms)
 and replayed verbatim by their DuckDB oracles: ASCII-lowercased
-(translate — the cross-engine-safe subset) runs of non-ASCII-whitespace
-(the same alphabet as the simhash/winnowing kernels,
-operators/textstats._TOKEN_RE).  Keeping it in one place is a parity
+(translate — the cross-engine-safe subset) runs of non-ASCII-whitespace.
+The Python kernels (SimHash, text statistics, BPE) compile the same
+``TOKEN_CLASS``; ``str.split()`` would also split on NBSP, U+2028 and
+U+001C–U+001F, and so break parity.  Tokens are extracted, not split, so
+whitespace-only text yields none.  Keeping it in one place is a parity
 contract: an alphabet change here must be mirrored in the oracle SQL, and
 nowhere else.
 """

@@ -17,12 +17,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-__all__ = ["chunk_documents"]
+from ocr_system_spark.functions.tokens import TOKEN_CLASS
 
-# pinned ASCII token class (see operators/textstats._TOKEN_RE) — tokens
-# are EXTRACTED (not split), so whitespace-only text cleanly yields zero
-# tokens on both engines
-_TOKEN_CLASS = "[^\t\n\f\r ]+"
+__all__ = ["chunk_documents"]
 
 
 def chunk_documents(
@@ -48,7 +45,7 @@ def chunk_documents(
     base = (
         df.select(
             F.col(id_col).alias("id"),
-            F.regexp_extract_all(text_col, F.lit(_TOKEN_CLASS), 0).alias("w"))
+            F.regexp_extract_all(text_col, F.lit(TOKEN_CLASS), 0).alias("w"))
         .withColumn("n", F.size("w"))
         .filter(F.col("n") > 0)
     )

@@ -17,7 +17,9 @@ the fixpoint loop and convergence accounting here carry over unchanged.
 
 Every round materializes via localCheckpoint: it truncates the growing
 lineage (a 10-round loop would otherwise re-execute round 1 ten times) and
-gives the convergence check a concrete relation to count against.
+gives the convergence check a concrete relation to count against. A
+round's checkpoint is released once the next one is pinned, so a call
+leaves only the returned labels' checkpoint behind.
 """
 
 from __future__ import annotations
@@ -26,6 +28,8 @@ from typing import Optional
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ocr_system_spark.persist import release_checkpoint
 
 
 def connected_components(
@@ -90,6 +94,7 @@ def connected_components(
                         F.coalesce(F.col("_m"), F.col(id_col))).alias("comp"))
         .localCheckpoint(eager=True)
     )
+    pinned = labels
 
     changed = 0
     for _ in range(max_iter):
@@ -106,11 +111,15 @@ def connected_components(
                 F.col("comp").alias("_old"),
             )
         ).localCheckpoint(eager=True)
+        release_checkpoint(pinned)
+        pinned = new_labels
         changed = new_labels.filter(F.col("comp") != F.col("_old")).count()
         labels = new_labels.drop("_old")
         if changed == 0:
             break
+    release_checkpoint(sym)
     if changed != 0:
+        release_checkpoint(pinned)
         # an unconverged label set is silently WRONG (some nodes still carry
         # a non-minimal component id) — refuse to return it
         raise RuntimeError(

@@ -47,6 +47,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ocr_system_spark.functions.tokens import TOKEN_CLASS
 from ocr_system_spark.persist import persist
 
 from ._rowmap import map_rows
@@ -55,6 +56,16 @@ from ._rowmap import map_rows
 # a*h+b term below 2^62, so the JVM-side arithmetic can never overflow a
 # long — required under Spark 4 ANSI mode (overflow is an error, not a wrap).
 MERSENNE31 = (1 << 31) - 1
+
+# The one MinHash geometry: word 3-gram shingles, 64 affine permutations
+# drawn from one seed, 16 bands of 4 rows. The oracles replay these
+# values, so a stored signature index and the batch that probes it always
+# agree.
+SHINGLE_N = 3
+MINHASH_K = 64
+MINHASH_BANDS = 16
+MINHASH_ROWS = MINHASH_K // MINHASH_BANDS
+MINHASH_SEED = 1234567
 
 
 def _word_hash(word: str) -> int:
@@ -95,16 +106,16 @@ def ngram_jaccard_pairs(
     df: DataFrame,
     key_col: str,
     text_col: str = "text",
-    n: int = 3,
     block_col: Optional[str] = None,
     min_jaccard_pct: int = 50,
     max_group: int = 1000,
     salt_cap: int = 250,
 ) -> DataFrame:
-    """All pairs with word-``n``-gram Jaccard ≥ min_jaccard_pct/100, via the
-    exact sparse-join: explode shingles, self-join on shingle (+ optional
-    blocking column), count common shingles, compare integer-only
-    (100·inter ≥ pct·union — no floating point in the decision or output).
+    """All pairs with word-``SHINGLE_N``-gram Jaccard ≥ min_jaccard_pct/100,
+    via the exact sparse-join: explode shingles, self-join on shingle
+    (+ optional blocking column), count common shingles, compare
+    integer-only (100·inter ≥ pct·union — no floating point in the decision
+    or output).
 
     ``max_group`` drops shingles shared by more than that many docs — they
     contribute no discriminative signal and are the quadratic-blowup hazard
@@ -132,7 +143,7 @@ def ngram_jaccard_pairs(
             F.col(key_col).alias("id"),
             F.col(block_col).alias("blk") if block_col else F.lit(0).alias("blk"),
             F.col(text_col).alias("text")),
-        "text", n,
+        "text", SHINGLE_N,
     ).withColumnRenamed("sh_hashes", "shingles"))
     # frequent-shingle guard: the hot set is tiny by construction (shingles
     # in > max_group docs), so collect it per block and broadcast; subtract
@@ -183,9 +194,12 @@ def ngram_jaccard_pairs(
 # MinHash + LSH
 # ---------------------------------------------------------------------------
 
-def _minhash_params(k: int, seed: int = 1234567):
-    rng = random.Random(seed)
-    return [(rng.randrange(1, MERSENNE31), rng.randrange(0, MERSENNE31)) for _ in range(k)]
+def _minhash_params() -> list:
+    """The ``MINHASH_K`` affine permutations (a, b), drawn from
+    ``MINHASH_SEED``."""
+    rng = random.Random(MINHASH_SEED)
+    return [(rng.randrange(1, MERSENNE31), rng.randrange(0, MERSENNE31))
+            for _ in range(MINHASH_K)]
 
 
 # odd 64-bit mixing multipliers (splitmix64 constants) — one per shingle
@@ -402,9 +416,8 @@ def _verify_jaccard(cand: DataFrame, left: DataFrame, right: DataFrame,
     )
 
 
-def minhash_signatures(df: DataFrame, key_col: str, text_col: str = "text",
-                       n: int = 3, k: int = 64,
-                       seed: int = 1234567) -> DataFrame:
+def minhash_signatures(df: DataFrame, key_col: str,
+                       text_col: str = "text") -> DataFrame:
     """The persistable MinHash signature relation: (id, sh_hashes, minhash)
     — one Arrow kernel pass per input row, rows with no shingle dropped
     inside the kernel. ``id`` keeps the type of ``key_col``.
@@ -413,30 +426,29 @@ def minhash_signatures(df: DataFrame, key_col: str, text_col: str = "text",
     verification joins)."""
     return _shingle_rows(
         df.select(F.col(key_col).alias("id"), F.col(text_col).alias("text")),
-        "text", n, _minhash_params(k, seed))
+        "text", SHINGLE_N, _minhash_params())
 
 
-def band_rows(sig: DataFrame, bands: int = 16, rows: int = 4) -> DataFrame:
+def band_rows(sig: DataFrame) -> DataFrame:
     """LSH band rows (id, band, bhash) from a signature relation — pure
     JVM expressions over the ``minhash`` array (xxhash64 of each band's
-    ``rows`` signature slots), so deriving band rows from a stored
+    ``MINHASH_ROWS`` signature slots), so deriving band rows from a stored
     signature table costs no Python and no extra kernel run. The
     expression goes to the JVM as one SQL string: built from ``F.*``
     calls it costs one py4j round trip per node (~2,200 for 16×4)."""
     structs = ", ".join(
         f"named_struct('band', {j}, 'bhash', xxhash64(concat_ws(',', "
-        + ", ".join(f"cast(element_at(minhash, {j * rows + r + 1}) as string)"
-                    for r in range(rows))
+        + ", ".join("cast(element_at(minhash, "
+                    f"{j * MINHASH_ROWS + r + 1}) as string)"
+                    for r in range(MINHASH_ROWS))
         + ")))"
-        for j in range(bands))
+        for j in range(MINHASH_BANDS))
     return sig.selectExpr("id", f"inline(array({structs}))")
 
 
 def incremental_minhash_pairs(
     batch_sig: DataFrame,
     index_sig: DataFrame,
-    k: int = 64,
-    bands: int = 16,
     min_jaccard_pct: int = 70,
     include_batch_pairs: bool = False,
     salt_cap: int = 1000,
@@ -468,11 +480,10 @@ def incremental_minhash_pairs(
     bounded tasks instead of one. The probe is one tiny aggregate and the
     plain 2-key join runs when no bucket is hot (the common case). The
     verify join is id-keyed and exact."""
-    rows = k // bands
     # both band relations cached: bb feeds the cross join and the
     # within-batch leg; ib feeds the hot-bucket probe and the cross join
-    bb = persist(band_rows(batch_sig, bands, rows))
-    ib = persist(band_rows(index_sig, bands, rows))
+    bb = persist(band_rows(batch_sig))
+    ib = persist(band_rows(index_sig))
     # the INDEX side's oversized buckets, read by both legs' broadcast joins
     keys = ["band", "bhash"]
     big = _oversized_groups(ib, keys, salt_cap)
@@ -550,11 +561,7 @@ def minhash_lsh_pairs(
     df: DataFrame,
     key_col: str,
     text_col: str = "text",
-    n: int = 3,
-    k: int = 64,
-    bands: int = 16,
     min_jaccard_pct: int = 70,
-    seed: int = 1234567,
     salt_cap: int = 1000,
 ) -> DataFrame:
     """Near-duplicate pairs via MinHash banding + exact verification.
@@ -562,9 +569,10 @@ def minhash_lsh_pairs(
     LSH prunes the pair space (band-hash equality buckets); surviving
     candidates are verified with exact shingle-set intersection, so the
     output carries exact integer (inter, uni) — byte-stable across engines.
-    With k=64, bands=16 (rows=4) the probability a true 0.7-Jaccard pair
-    misses every band is (1−0.7⁴)¹⁶ ≈ 1.2%, and for the ≥0.9 near-dups this
-    operator targets it is < 1e-8.
+    With ``MINHASH_BANDS`` = 16 bands of ``MINHASH_ROWS`` = 4 the
+    probability a true 0.7-Jaccard pair misses every band is
+    (1−0.7⁴)¹⁶ ≈ 1.2%, and for the ≥0.9 near-dups this operator targets
+    it is < 1e-8.
 
     Verification runs over the per-doc 64-bit shingle-hash arrays, never
     the raw shingle strings — the same (inter, uni) w.h.p. (collisions
@@ -576,13 +584,12 @@ def minhash_lsh_pairs(
     m=⌈G/cap⌉ hash chunks and the join runs per chunk-pair (i ≤ j), so the
     same pairs emerge from m(m+1)/2 bounded tasks — no pair is lost.
     """
-    rows = k // bands
     # cache the hashed shingle sets + signatures: read three times (both
     # sides of the band self-join + the verification joins) and the fused
     # shingle/minhash kernel is the dominant cost. Cached payload is longs,
     # not strings.
-    sh = persist(minhash_signatures(df, key_col, text_col, n, k, seed))
-    exploded = persist(band_rows(sh, bands, rows))
+    sh = persist(minhash_signatures(df, key_col, text_col))
+    exploded = persist(band_rows(sh))
 
     cand = _salted_band_candidates(exploded, salt_cap)
     return _verify_jaccard(cand, sh, sh, "id_a", "id_b", min_jaccard_pct)
@@ -593,11 +600,7 @@ def minhash_lsh_pairs(
 # ---------------------------------------------------------------------------
 
 SIMHASH_BITS = 64
-
-# Tokens are ASCII-whitespace-separated runs — pinned to the alphabet RE2
-# and Python `re` agree on, so the DuckDB oracle's regexp_extract_all sees
-# the identical token stream.
-_SIMHASH_TOKEN_RE = re.compile(r"[^\t\n\f\r ]+")
+_SIMHASH_TOKEN_RE = re.compile(TOKEN_CLASS)
 
 
 def _simhash_batch(texts: list) -> np.ndarray:

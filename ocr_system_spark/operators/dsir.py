@@ -59,24 +59,20 @@ from pyspark.sql import functions as F
 from ocr_system_spark.functions.tokens import lower_ascii_tokens
 from ocr_system_spark.persist import persist
 
+from .sampling import hex_prefix_value
+
 __all__ = ["hashed_features", "bucket_counts", "dsir_logweight",
            "dsir_resample", "feature_bucket_expr", "gumbel_micro_expr"]
 
 LOG_MICROS = 1_000_000
-_HEX = "0123456789abcdef"
 _HASH_DOMAIN = 16 ** 4
 
 
 def feature_bucket_expr(feat: Column, n_buckets: int) -> Column:
     """Bucket id in [0, n_buckets) for a feature string: the first four
-    hex digits of md5(feat) decoded by string position (instr — the
-    cross-engine-safe decode of `stub_weight_expr`), mod n_buckets."""
-    h = F.md5(F.encode(feat, "UTF-8"))
-
-    def digit(i: int) -> Column:
-        return F.instr(F.lit(_HEX), F.substring(h, i, 1)) - 1
-
-    val = digit(1) * 4096 + digit(2) * 256 + digit(3) * 16 + digit(4)
+    hex digits of md5(feat) (``sampling.hex_prefix_value``), mod
+    n_buckets."""
+    val = hex_prefix_value(F.md5(F.encode(feat, "UTF-8")), 4)
     return (val % n_buckets).cast("long")
 
 
@@ -169,13 +165,8 @@ def gumbel_micro_expr(id_col: Column) -> Column:
     strictly inside (0, 1), the draw is reproducible forever per id, and
     the salt decorrelates it from the split lottery
     (`sampling.with_split`), which hashes the bare id."""
-    h = F.md5(F.encode(F.concat(F.lit("gumbel:"),
-                                id_col.cast("string")), "UTF-8"))
-
-    def digit(i: int) -> Column:
-        return F.instr(F.lit(_HEX), F.substring(h, i, 1)) - 1
-
-    val = digit(1) * 4096 + digit(2) * 256 + digit(3) * 16 + digit(4)
+    val = hex_prefix_value(F.md5(F.encode(
+        F.concat(F.lit("gumbel:"), id_col.cast("string")), "UTF-8")), 4)
     u = (val + 1) / F.lit(float(_HASH_DOMAIN + 1))
     return F.round(-F.log(-F.log(u)) * LOG_MICROS).cast("long")
 

@@ -40,6 +40,8 @@ import re as _re
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ocr_system_spark.functions.tokens import TOKEN_CLASS
+
 
 # A line participates in dedup / template detection only if it has visible
 # content.  Blank lines are preserved verbatim by the removal transforms.
@@ -249,7 +251,7 @@ def c4_clean(df: DataFrame, id_col: str = "doc_id",
         ends = F.lit(False)
         for term in _TERMINALS:
             ends = ends | t.endswith(term)
-        nwords = F.size(F.regexp_extract_all(t, F.lit(r"[^\t\n\f\r ]+"), 0))
+        nwords = F.size(F.regexp_extract_all(t, F.lit(TOKEN_CLASS), 0))
         return (ends & (nwords >= F.lit(min_line_words))
                 & ~low.contains("javascript"))
 

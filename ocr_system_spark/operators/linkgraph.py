@@ -12,7 +12,7 @@ Spark relational algebra — the classic "Pregel as iterated join" shape.
 
 Determinism contract (the same integer-quantization idiom as
 `operators/lm.py` / `operators/dsir.py`): ranks live in integer
-micro-units of a fixed total mass ``scale`` (default 10^12), damping is
+micro-units of a fixed total mass ``RANK_SCALE`` (10^12), damping is
 the exact rational 17/20, and every division is non-negative integer
 division (Spark ``div`` ≡ DuckDB ``//`` on non-negative operands).  A
 float PageRank is order-dependent under Spark's partial aggregation;
@@ -23,7 +23,7 @@ unrolls all iterations as CTEs, the `bpe_train` precedent).
 Semantics (documented variant): per iteration
 
     r'(v) = base + (17 · Σ_{(u,v)∈E} (r(u)·w(u,v)) div outw(u)) div 20
-    base  = ((scale div N) · 3) div 20
+    base  = ((RANK_SCALE div N) · 3) div 20
 
 i.e. standard weighted PageRank with damping 0.85, where the mass of
 DANGLING hosts (no outlinks) is dropped rather than redistributed —
@@ -38,9 +38,10 @@ by :func:`host_edges` — billions of rows, not the 10^12 document rows),
 and the RANK relation is host-sized.  Each iteration is one src-keyed
 join (rank joins edges+outweight on the src host) and one dst-keyed
 aggregation — two bounded shuffles whose keys are hosts, never
-documents; AQE broadcasts the rank side while it fits.  Rounds
-localCheckpoint (the `connected_components` precedent) so iteration k
-does not replay iterations 1..k-1.
+documents; AQE broadcasts the rank side while it fits.  Every
+``CHECKPOINT_EVERY`` rounds the ranks are localCheckpointed (the
+`connected_components` precedent), so a long run does not replay all
+earlier rounds; a run shorter than that compiles into one Spark job.
 """
 
 from __future__ import annotations
@@ -68,6 +69,7 @@ HOST_PATTERN = "^https?://([^/]+)"
 RANK_SCALE = 10**12
 DAMP_NUM = 17
 DAMP_DEN = 20
+CHECKPOINT_EVERY = 8
 
 
 def anchor_pairs(pages: DataFrame, id_col: str = "doc_id",
@@ -147,9 +149,7 @@ def host_edges(links: DataFrame, src_col: str = "src",
             .agg(F.count(F.lit(1)).cast("long").alias("w")))
 
 
-def pagerank(edges: DataFrame, n_iter: int = 5,
-             scale: int = RANK_SCALE,
-             checkpoint_every: int = 8) -> DataFrame:
+def pagerank(edges: DataFrame, n_iter: int = 5) -> DataFrame:
     """(node, rank_micro) — ``n_iter`` rounds of integer-exact weighted
     PageRank (damping 17/20) over an ``(src, dst, w)`` edge relation
     (see module docstring for the exact recurrence and the dangling-mass
@@ -157,22 +157,9 @@ def pagerank(edges: DataFrame, n_iter: int = 5,
 
     The node count is a bounded 1-row driver collect (the `lm.py` V /
     BPE-argmax contract); a lazy scalar relation would plan as the
-    BroadcastNestedLoopJoin the fleet-wide plan gate bans.
-
-    ``checkpoint_every``: rounds between lineage-truncating eager
-    localCheckpoints.  Short runs (n_iter < cadence) compile the whole
-    iteration chain into ONE Spark job — no per-round job-submission
-    latency or intermediate materialization; long runs still truncate
-    lineage periodically so round k never replays rounds 1..k-1 more
-    than a bounded number of times.  The result is identical either way
-    (pytest-pinned)."""
+    BroadcastNestedLoopJoin the fleet-wide plan gate bans."""
     if n_iter < 1:
         raise ValueError(f"n_iter must be >= 1, got {n_iter}")
-    if scale <= 0:
-        raise ValueError(f"scale must be positive, got {scale}")
-    if checkpoint_every < 1:
-        raise ValueError(
-            f"checkpoint_every must be >= 1, got {checkpoint_every}")
 
     e = persist(edges.select("src", "dst", F.col("w").cast("long").alias("w")))
     nodes = persist(e.select(F.col("src").alias("node"))
@@ -187,7 +174,7 @@ def pagerank(edges: DataFrame, n_iter: int = 5,
     # src-keyed edge+outweight relation, built once and reused each round
     ew = persist(e.join(outw, "src"))
 
-    init = scale // n
+    init = RANK_SCALE // n
     base = (init * (DAMP_DEN - DAMP_NUM)) // DAMP_DEN
     ranks = nodes.select(
         "node", F.lit(init).cast("long").alias("rank_micro"))
@@ -205,7 +192,7 @@ def pagerank(edges: DataFrame, n_iter: int = 5,
                           + F.expr(f"({DAMP_NUM} * coalesce(inc, 0))"
                                    f" div {DAMP_DEN}"))
                          .cast("long").alias("rank_micro")))
-        if it % checkpoint_every == 0 and it < n_iter:
+        if it % CHECKPOINT_EVERY == 0 and it < n_iter:
             ranks = ranks.localCheckpoint(eager=True)
     # e/nodes/ew stay persisted for the returned plan, which references
     # them once per un-checkpointed round (identical subtrees also hit

@@ -31,25 +31,17 @@ from pyspark.sql import functions as F
 from ocr_system_spark.functions.tokens import exploded_terms as _tokens
 from ocr_system_spark.persist import persist
 
+from .sampling import hex_prefix_value
+
 __all__ = ["linear_score", "hashed_linear_score", "stub_weight_expr",
            "host_quality_blocklist", "quality_tiers",
            "quality_tiers_bucketed"]
 
-_HEX = "0123456789abcdef"
-
-
 def stub_weight_expr(term: Column) -> Column:
     """Deterministic stand-in weight for a term: the first four hex digits
     of md5(term) as a base-16 integer, mapped to [-1000, 1000] via
-    ``% 2001 - 1000``.  Hex digits decode via string position (instr), so
-    any engine with md5 + instr reproduces the weight without numeric
-    hex-parsing builtins."""
-    h = F.md5(F.encode(term, "UTF-8"))
-
-    def digit(i: int) -> Column:
-        return F.instr(F.lit(_HEX), F.substring(h, i, 1)) - 1
-
-    val = (digit(1) * 4096 + digit(2) * 256 + digit(3) * 16 + digit(4))
+    ``% 2001 - 1000`` (``sampling.hex_prefix_value``)."""
+    val = hex_prefix_value(F.md5(F.encode(term, "UTF-8")), 4)
     return (val % 2001 - 1000).cast("long")
 
 

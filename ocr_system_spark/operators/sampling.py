@@ -31,13 +31,26 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 __all__ = ["cap_per_group", "with_split", "mixture_sample", "md5_key",
-           "budget_sample", "training_order"]
+           "hex_prefix_value", "budget_sample", "training_order"]
 
 
 def md5_key(col: Column) -> Column:
     """Lowercase-hex md5 of the value's string form — the deterministic
     lottery ticket used by both operators (and by the IVF sampler)."""
     return F.md5(col.cast("string").cast("binary"))
+
+
+def hex_prefix_value(hex_str: Column, n_digits: int) -> Column:
+    """The first ``n_digits`` digits of a lowercase-hex string (an md5) as
+    a base-16 integer.  Each digit decodes by its position in
+    '0123456789abcdef' (instr), so any engine with md5 + instr reproduces
+    the value without numeric hex-parsing builtins."""
+    val = None
+    for i in range(1, n_digits + 1):
+        d = F.instr(F.lit("0123456789abcdef"), F.substring(hex_str, i, 1)) - 1
+        term = d * 16 ** (n_digits - i) if i < n_digits else d
+        val = term if val is None else val + term
+    return val
 
 
 def cap_per_group(
@@ -220,11 +233,8 @@ def training_order(
 
     if not 0 < n_shards <= 256:
         raise ValueError(f"n_shards must be in (0, 256], got {n_shards}")
-    hexd = "0123456789abcdef"
     tk = md5_key(F.col(id_col))
-    d1 = F.instr(F.lit(hexd), F.substring(tk, 1, 1)) - 1
-    d2 = F.instr(F.lit(hexd), F.substring(tk, 2, 1)) - 1
-    shard = ((d1 * 16 + d2) % n_shards).cast("int")
+    shard = (hex_prefix_value(tk, 2) % n_shards).cast("int")
     w = W.partitionBy("shard").orderBy(F.col("_tk").asc(),
                                        F.col(id_col).asc())
     return (df.withColumn("_tk", tk)

@@ -28,6 +28,7 @@ from pyspark.sql import types as T
 from pyspark.sql import Window as W
 
 from ._rowmap import map_rows
+from .sampling import md5_key
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -61,25 +62,19 @@ def _collect_matrix(queries: DataFrame, id_col: str, vec_col: str):
     return ids, mat
 
 
-def _md5_sample_key(id_col: str) -> Column:
-    """Deterministic pseudo-random ordering key: lowercase-hex md5 of the
-    id's decimal string. Engine-portable (DuckDB ``md5(CAST(id AS
-    VARCHAR))`` produces the identical string) and — unlike an id-stride
-    filter — independent of the id SPACE: gappy / non-contiguous ids
-    (post-dedup corpora, sharded id ranges) sample just as uniformly.
-    A global ORDER BY this key + LIMIT n compiles to TakeOrderedAndProject
-    (per-partition partial top-n, no global sort) — scale-safe."""
-    return F.md5(F.col(id_col).cast("string").cast("binary"))
-
-
 def _sample_centroids(emb: DataFrame, n_centroids: int, id_col: str,
                       vec_col: str) -> list:
     """n_centroids deterministic sample vectors, cell-numbered by ascending
     id (engine-stable). Raises when the corpus is empty; clamps (with the
     clamp visible to the caller via the returned length) when the corpus
-    has fewer rows than requested cells."""
+    has fewer rows than requested cells.
+
+    The sample is the first n_centroids rows in md5-of-id order: unlike an
+    id-stride filter it does not depend on the id SPACE (gappy ids sample
+    just as uniformly), and ORDER BY + LIMIT compiles to
+    TakeOrderedAndProject (per-partition partial top-n, no global sort)."""
     rows = (emb.select(id_col, vec_col)
-            .orderBy(_md5_sample_key(id_col), F.col(id_col))
+            .orderBy(md5_key(F.col(id_col)), F.col(id_col))
             .limit(n_centroids).collect())
     if not rows:
         raise ValueError(
@@ -185,7 +180,6 @@ def ivf_topk(
     n_probe: int = 4,
     centroids=None,
     cell_cap: Optional[int] = None,
-    max_subcells: int = 16,
 ) -> DataFrame:
     """IVF approximate top-k — the scale path for clustered corpora.
 
@@ -202,7 +196,7 @@ def ivf_topk(
     one cell — viral templates, near-constant embeddings) would otherwise
     degrade a probe of that cell to near-brute-force. Cells whose
     occupancy exceeds the cap are re-split into n_sub = ⌈occupancy/cap⌉
-    (≤ ``max_subcells``) HASH chunks of their member ids, and a query
+    (≤ ``IVF_MAX_SUBCELLS``) HASH chunks of their member ids, and a query
     probing a hot cell probes only ``n_probe`` of its chunks (rotation
     chosen per query id) — so the candidate mass per probed hot cell
     drops from `occupancy` to ≈ occupancy·n_probe/n_sub, GUARANTEED by
@@ -217,7 +211,7 @@ def ivf_topk(
     un-skewed corpora (the oracle replays the None path)."""
     return _rank_scored(
         ivf_scored(emb, queries, k, id_col, vec_col, n_centroids, n_probe,
-                   centroids, cell_cap, max_subcells), k)
+                   centroids, cell_cap), k)
 
 
 def ivf_scored(
@@ -230,7 +224,6 @@ def ivf_scored(
     n_probe: int = 4,
     centroids=None,
     cell_cap: Optional[int] = None,
-    max_subcells: int = 16,
 ) -> DataFrame:
     """The pre-window scored relation of ``ivf_topk`` — exposed so volume
     tests can pin the candidate mass (the hot-cell guard's contract)."""
@@ -248,8 +241,7 @@ def ivf_scored(
         hist = (_with_cell(emb.select(vec_col), vec_col, cents, drop=vec_col)
                 .groupBy("cell").agg(F.count(F.lit(1)).alias("n")).collect())
         hot_plan = plan_hot_cells(
-            {int(r["cell"]): int(r["n"]) for r in hist},
-            cell_cap, max_subcells)
+            {int(r["cell"]): int(r["n"]) for r in hist}, cell_cap)
 
     # which (cell[, chunk]) keys does each query probe?
     q_cells = np.argsort(-(q_mat @ cents.T), axis=1)[:, :n_probe]   # (nq, p)
@@ -294,17 +286,16 @@ def ivf_scored(
     return _scored_df(emb, run, id_col, vec_col)
 
 
-_SUB_STRIDE = 1024       # chunk ids pack below this — max_subcells ceiling
+IVF_MAX_SUBCELLS = 16    # hash chunks a hot cell splits into, at most
+_SUB_STRIDE = 1024       # chunk ids pack below this
 _GOLDEN64 = np.uint64(0x9E3779B97F4A7C15)
 
 
-def plan_hot_cells(hist: dict, cell_cap: int, max_subcells: int) -> dict:
+def plan_hot_cells(hist: dict, cell_cap: int) -> dict:
     """{cell: n_chunks} for cells whose occupancy exceeds the cap:
-    n_chunks = ⌈occupancy/cap⌉ capped at max_subcells (and at the key
-    stride). Exposed for the volume test pinning the guard's bound."""
-    if max_subcells > _SUB_STRIDE:
-        raise ValueError(f"max_subcells must be <= {_SUB_STRIDE}")
-    return {c: min(-(-n // cell_cap), max_subcells)
+    n_chunks = ⌈occupancy/cap⌉ capped at ``IVF_MAX_SUBCELLS``. Exposed for
+    the volume test pinning the guard's bound."""
+    return {c: min(-(-n // cell_cap), IVF_MAX_SUBCELLS)
             for c, n in hist.items() if n > cell_cap}
 
 
@@ -420,7 +411,6 @@ def train_ivf_centroids(
     iters: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    quant_bits: int = IVF_QUANT_BITS,
 ) -> List[List[float]]:
     """Distributed Lloyd refinement of the IVF centroids — the training
     step ``ivf_topk`` names as its production path.
@@ -437,14 +427,14 @@ def train_ivf_centroids(
     shuffle is ≤ n_centroids·dim rows regardless of corpus size. Only the
     n_centroids×dim centroid matrix ever reaches the driver.
 
-    Cross-engine exactness: vectors are quantized to 2^-quant_bits before
-    summing (integer sums are order-independent and exact), and each new
-    centroid dim is (sum/count)/2^quant_bits — two IEEE-exact-input
+    Cross-engine exactness: vectors are quantized to 2^-IVF_QUANT_BITS
+    before summing (integer sums are order-independent and exact), and each
+    new centroid dim is (sum/count)/2^IVF_QUANT_BITS — two IEEE-exact-input
     divisions, so an independent engine replaying the same arithmetic gets
     BIT-IDENTICAL centroids (assignment argmax ties broken toward the
     lower cell on both sides). Cells that lose all members keep their
     previous centroid."""
-    quant = 1 << quant_bits
+    quant = 1 << IVF_QUANT_BITS
     cents = _sample_centroids(emb, n_centroids, id_col, vec_col)
     if len(cents) < n_centroids:
         # fewer corpus rows than requested cells: every row IS a centroid
@@ -472,14 +462,27 @@ def train_ivf_centroids(
     return cents
 
 
-def _hyperplanes(n_planes: int, dim: int, seed: int = 424242) -> List[List[float]]:
-    rng = random.Random(seed)
-    return [[rng.gauss(0.0, 1.0) for _ in range(dim)] for _ in range(n_planes)]
+# The SRP geometries. Both operators hash SRP_DIM-element vectors against
+# Gaussian hyperplanes; table t draws its planes from SRP_SEED + 1000·t.
+# The oracles replay these planes as literals.
+SRP_DIM = 64
+SRP_SEED = 424242
+LSH_TOPK_TABLES, LSH_TOPK_PLANES = 6, 4
+DUP_TABLES, DUP_PLANES = 8, 8
+
+
+def _srp_planes(n_tables: int, n_planes: int) -> List[List[List[float]]]:
+    """Per table, its ``n_planes`` hyperplanes of ``SRP_DIM`` elements."""
+    planes = []
+    for t in range(n_tables):
+        rng = random.Random(SRP_SEED + 1000 * t)
+        planes.append([[rng.gauss(0.0, 1.0) for _ in range(SRP_DIM)]
+                       for _ in range(n_planes)])
+    return planes
 
 
 def _srp_bucket_rows(df: DataFrame, vec_col: str, out_col: str,
-                     n_tables: int, n_planes: int, dim: int,
-                     seed: int) -> DataFrame:
+                     n_tables: int, n_planes: int) -> DataFrame:
     """``df`` with one row per SRP bucket id ``out_col`` of ``vec_col``:
     n_tables rows per vector, one per independent hash table.
 
@@ -497,13 +500,12 @@ def _srp_bucket_rows(df: DataFrame, vec_col: str, out_col: str,
     therefore identical rounding, identical sign) as the JVM
     ``aggregate``'s sequential fold. JVM edge semantics reproduced:
     a NaN dot compares ``> 0`` true under Spark's NaN-is-largest rule
-    (``| np.isnan``); a NULL vector, a length≠dim vector or a vector with
+    (``| np.isnan``); a NULL vector, a length≠SRP_DIM vector or a vector with
     a NULL element has no bucket (zip_with pads with nulls → null dot →
     null bucket, which an ``explode`` drops), so its row is dropped."""
     planes = np.array(
-        [p for t in range(n_tables)
-         for p in _hyperplanes(n_planes, dim, seed + 1000 * t)],
-        dtype=np.float64)                               # (T·P, dim)
+        [p for table in _srp_planes(n_tables, n_planes) for p in table],
+        dtype=np.float64)                               # (T·P, SRP_DIM)
     offsets = np.array([t << n_planes for t in range(n_tables)],
                        dtype=np.int64)
     weights = (np.int64(1) << np.arange(n_planes, dtype=np.int64))
@@ -511,9 +513,10 @@ def _srp_bucket_rows(df: DataFrame, vec_col: str, out_col: str,
     def kernel(batch):
         arr = batch.column(vec_col).to_pylist()
         ok = [i for i, v in enumerate(arr)
-              if v is not None and len(v) == dim and None not in v]
+              if v is not None and len(v) == SRP_DIM and None not in v]
         bkts = np.empty((len(ok), n_tables), dtype=np.int32)
-        for s in range(0, len(ok), 512):        # bound the (b, T·P, dim) slab
+        # bound the (b, T·P, SRP_DIM) slab: T·P ≤ 64, so ≤ 512·64·64·8 B
+        for s in range(0, len(ok), 512):
             blk = ok[s:s + 512]
             m = np.array([arr[i] for i in blk], dtype=np.float64)  # exact f32→f64
             prods = m[:, None, :] * planes[None, :, :]             # (b, T·P, dim)
@@ -532,13 +535,10 @@ def lsh_topk(
     k: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    n_tables: int = 6,
-    n_planes: int = 4,
-    dim: int = 64,
-    seed: int = 424242,
 ) -> DataFrame:
     """Approximate top-k via MULTI-TABLE SRP LSH: a vector belongs to one
-    bucket per table; query candidates are the union over tables (classic
+    bucket per table (``LSH_TOPK_TABLES`` tables of ``LSH_TOPK_PLANES``
+    planes); query candidates are the union over tables (classic
     L-table LSH — single-probe recall on moderate-similarity neighbors is
     poor, union-of-tables trades candidate count for recall). Candidates
     are deduped before scoring, then ranked exactly. Recall vs
@@ -548,28 +548,24 @@ def lsh_topk(
     the bucket join is a BroadcastHashJoin on bucket equality). That is
     right while the query set fits a broadcast (~millions of rows); for a
     query set at corpus scale, drop the broadcast hint so the join becomes
-    a shuffle on the bucket id, and grow n_planes with log2(N) to keep
-    per-bucket occupancy bounded (same salting rules as cosine_dup_pairs)."""
+    a shuffle on the bucket id, and raise ``LSH_TOPK_PLANES`` with
+    log2(N) to keep per-bucket occupancy bounded (same salting rules as
+    cosine_dup_pairs)."""
     c = _srp_bucket_rows(
         emb.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")),
-        "cv", "c_bkt", n_tables, n_planes, dim, seed)
+        "cv", "c_bkt", LSH_TOPK_TABLES, LSH_TOPK_PLANES)
     q = _srp_bucket_rows(
         queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")),
-        "qv", "q_bkt", n_tables, n_planes, dim, seed)
+        "qv", "q_bkt", LSH_TOPK_TABLES, LSH_TOPK_PLANES)
     cand = (
-        # bound: the query set × n_tables bucket rows (see Scale shape)
+        # bound: the query set × LSH_TOPK_TABLES bucket rows (see Scale shape)
         c.join(F.broadcast(q), (F.col("c_bkt") == F.col("q_bkt"))
                & (F.col("neighbor_id") != F.col("query_id")))
         .select("query_id", "qv", "neighbor_id", "cv")
         .dropDuplicates(["query_id", "neighbor_id"])
     )
-    scored = cand.withColumn("score", cosine(F.col("qv"), F.col("cv")))
-    w = W.partitionBy("query_id").orderBy(F.col("score").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.col("rank").cast("int").alias("rank"))
-    )
+    return _rank_scored(
+        cand.withColumn("score", cosine(F.col("qv"), F.col("cv"))), k)
 
 
 def cosine_dup_pairs_lsh(
@@ -577,32 +573,29 @@ def cosine_dup_pairs_lsh(
     min_cosine: float = 0.95,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    n_tables: int = 8,
-    n_planes: int = 8,
-    dim: int = 64,
-    seed: int = 424242,
 ) -> DataFrame:
     """(id_a, id_b) pairs with cosine ≥ threshold, via SRP-LSH blocking +
     exact verification — the same candidate-then-verify shape as
     minhash_lsh_pairs, so the plan is a bucket-equality hash join, never a
     nested-loop all-pairs product.
 
-    Candidates are pairs sharing ≥1 of ``n_tables`` independent SRP buckets;
+    Candidates are pairs sharing ≥1 of ``DUP_TABLES`` independent SRP buckets;
     every candidate is verified with the exact cosine, so precision is
     exact. Recall: a pair at angle θ splits on one plane with prob θ/π, so
-    it shares a table's bucket with prob (1−θ/π)^n_planes and is missed by
-    ALL tables with prob (1−(1−θ/π)^n_planes)^n_tables — for near-dups at
-    cosine ≥ 0.99 (θ ≤ 8.1°, the regime this operator targets) that is
-    < 1e-8 at the defaults; at the 0.95 boundary itself it is ~1.2%.
+    it shares a table's bucket with prob (1−θ/π)^P and is missed by ALL
+    tables with prob (1−(1−θ/π)^P)^T — for near-dups at cosine ≥ 0.99
+    (θ ≤ 8.1°, the regime this operator targets) that is < 1e-8 at
+    T = ``DUP_TABLES`` = 8, P = ``DUP_PLANES`` = 8; at the 0.95 boundary
+    itself it is ~1.2%.
 
-    Scale note (10^12 rows): ``n_planes`` sets bucket granularity — grow it
-    with log2(N) so expected bucket occupancy stays bounded (e.g. 24 planes
-    → 16.7M buckets/table), and cap/salt residual hot buckets the same way
-    minhash_lsh_pairs salts band buckets.
+    Scale note (10^12 rows): ``DUP_PLANES`` sets bucket granularity — raise
+    it with log2(N) so expected bucket occupancy stays bounded (e.g. 24
+    planes → 16.7M buckets/table), and cap/salt residual hot buckets the
+    same way minhash_lsh_pairs salts band buckets.
     """
     b = _srp_bucket_rows(
         emb.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vv")),
-        "vv", "bkt", n_tables, n_planes, dim, seed)
+        "vv", "bkt", DUP_TABLES, DUP_PLANES)
     l, r = b.alias("l"), b.alias("r")
     cand = (
         l.join(r, (F.col("l.bkt") == F.col("r.bkt"))

@@ -9,16 +9,11 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ocr_system_spark.functions import textstats as K
+from ocr_system_spark.functions.tokens import TOKEN_CLASS
 
 from ._rowmap import map_rows
 
-# Tokens are runs of non-ASCII-whitespace — the SAME pinned alphabet as the
-# SimHash kernel (operators/dedup._SIMHASH_TOKEN_RE) and the winnowing
-# normalizer, so Python, Spark SQL, and RE2-based engines all see the
-# identical token stream. Python str.split() would additionally split on
-# NBSP / U+2028 / \x1c-\x1f, silently breaking cross-engine parity on
-# documents containing non-ASCII whitespace.
-_TOKEN_RE = re.compile(r"[^\t\n\f\r ]+")
+_TOKEN_RE = re.compile(TOKEN_CLASS)
 
 
 def _frame_kernel(batch_fn, text_col: str):

@@ -8,6 +8,10 @@ session owns it until ``clearCache()``: dropping the DataFrame releases
 nothing, because the CacheManager keeps the cached relation reachable.
 Operators return lazy results and never open a scope; code that runs its
 own actions (a streaming micro-batch, a tool's run) does.
+
+A ``localCheckpoint`` result is a persisted RDD, not a CacheManager entry,
+so ``clearCache()`` does not reach it: its maker releases it with
+``release_checkpoint`` once nothing reads it.
 """
 
 from __future__ import annotations
@@ -42,3 +46,11 @@ def scoped_persist() -> Iterator[None]:
     finally:
         for df in reversed(stack.pop()):
             df.unpersist()
+
+
+def release_checkpoint(df: DataFrame) -> None:
+    """Drop the blocks of ``df``, a ``localCheckpoint`` result.  This is
+    what ``RDD.unpersist`` does, without its warning that a local
+    checkpoint cannot be recomputed, which would print once per release."""
+    rdd = df._jdf.queryExecution().analyzed().rdd()
+    df.sparkSession.sparkContext._jsc.sc().unpersistRDD(rdd.id(), False)

@@ -120,3 +120,27 @@ def test_components_ignore_edges_outside_nodes(spark):
     got = {r.id: r.comp
            for r in connected_components(e, nodes=nodes).collect()}
     assert got == {1: 1, 2: 1}
+
+
+def test_components_release_superseded_checkpoints(spark):
+    """Each round's checkpoint is released once the next is pinned, and
+    the symmetrized edges before returning: a converged call leaves one
+    persistent RDD, the returned labels, and a call that raises leaves
+    none. ``clearCache()`` cannot reach a local checkpoint."""
+    import pytest as _pytest
+    jsc = spark.sparkContext._jsc
+
+    def persistent():
+        return set(jsc.getPersistentRDDs().keySet())
+
+    edges = [(i, i + 1) for i in range(6)]      # path: needs ≥2 rounds
+    e = spark.createDataFrame(edges, "id_a long, id_b long")
+    before = persistent()
+    labels = connected_components(e)
+    assert len(persistent() - before) == 1
+    assert {r.comp for r in labels.collect()} == {0}
+
+    before = persistent()
+    with _pytest.raises(RuntimeError, match="did not converge"):
+        connected_components(e, max_iter=1)
+    assert persistent() - before == set()

@@ -85,7 +85,7 @@ def emb(spark):
 def test_lsh_topk_recall_vs_brute_force(spark, emb):
     queries = emb.filter(F.col("vec_id") < 20)
     brute = similarity.brute_force_topk(emb, queries, k=5).toPandas()
-    approx = similarity.lsh_topk(emb, queries, k=5, n_tables=6, n_planes=4).toPandas()
+    approx = similarity.lsh_topk(emb, queries, k=5).toPandas()
     bset = set(zip(brute["query_id"], brute["neighbor_id"]))
     aset = set(zip(approx["query_id"], approx["neighbor_id"]))
     recall = len(bset & aset) / len(bset)
@@ -106,7 +106,7 @@ def test_lsh_topk_near_dup_recall_is_total(spark, emb):
         F.transform("embedding", lambda x: x * F.lit(1.01)).alias("embedding"))
     corpus = e.union(scaled)
     approx = similarity.lsh_topk(corpus, corpus.filter(F.col("vec_id") >= 100000),
-                                 k=1, n_tables=6, n_planes=4).toPandas()
+                                 k=1).toPandas()
     hits = sum(1 for _, r in approx.iterrows()
                if r["neighbor_id"] == r["query_id"] - 100000 and r["rank"] == 1)
     assert hits == 20, approx
@@ -148,16 +148,17 @@ def test_cosine_dup_pairs_finds_scaled_copies(spark, emb):
 
 def test_srp_bucket_null_element_is_null_nan_element_is_all_ones(spark):
     """A NULL vector element makes the JVM dot NULL, so the vector has no
-    bucket, as a NULL vector has none; a NaN element makes every dot NaN,
-    which compares > 0 (Spark's NaN-is-largest rule), so every plane bit
-    is set."""
-    rows = [(0, [1.0, None, 2.0, 3.0]),
-            (1, [1.0, float("nan"), 2.0, 3.0]),
-            (2, None)]
+    bucket, as a NULL vector or one of the wrong length has none; a NaN
+    element makes every dot NaN, which compares > 0 (Spark's
+    NaN-is-largest rule), so every plane bit is set."""
+    pad = [2.0] * (similarity.SRP_DIM - 2)
+    rows = [(0, [1.0, None] + pad),
+            (1, [1.0, float("nan")] + pad),
+            (2, None),
+            (3, [1.0, 2.0, 3.0])]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     got = sorted((r.vec_id, r.b) for r in similarity._srp_bucket_rows(
-        df, "embedding", "b", n_tables=2, n_planes=3, dim=4,
-        seed=7).collect())
+        df, "embedding", "b", n_tables=2, n_planes=3).collect())
     assert got == [(1, 0b111), (1, (1 << 3) + 0b111)]
 
 
@@ -270,7 +271,7 @@ def test_hashed_shingles_preserve_string_shingle_semantics(spark, docs):
     rows = list(enumerate(MIXED_TEXTS, start=-len(MIXED_TEXTS)))
     rows += [(r.doc_id, r.text) for r in docs.limit(40).collect()]
     d = spark.createDataFrame(rows, "doc_id long, text string")
-    h = dedup.minhash_signatures(d, "doc_id", n=3).collect()
+    h = dedup.minhash_signatures(d, "doc_id").collect()
     strs = {i: _string_shingles(t, 3) for i, t in rows}
     strs = {i: s for i, s in strs.items() if s}
     hsh = {r.id: set(r.sh_hashes) for r in h}
@@ -285,8 +286,8 @@ def test_hashed_shingles_preserve_string_shingle_semantics(spark, docs):
                 assert len(strs[a] & strs[b]) == len(hsh[a] & hsh[b]), (a, b)
 
 
-def _ref_signatures(rows, n, k=64, seed=1234567):
-    params = dedup._minhash_params(k, seed)
+def _ref_signatures(rows, n):
+    params = dedup._minhash_params()
     a = np.array([x for x, _ in params], dtype=np.int64)[None, :]
     b = np.array([x for _, x in params], dtype=np.int64)[None, :]
     out = {}
@@ -299,12 +300,19 @@ def _ref_signatures(rows, n, k=64, seed=1234567):
     return out
 
 
-@pytest.mark.parametrize("n", [3, 7])
+@pytest.mark.parametrize("n", [dedup.SHINGLE_N, 7])
 def test_minhash_signatures_match_row_reference(spark, docs, n):
+    """``minhash_signatures`` at its pinned shingle size; other sizes reach
+    the same kernel through ``_shingle_rows``, as ``decontaminate`` does."""
     rows = list(enumerate(MIXED_TEXTS, start=-len(MIXED_TEXTS)))
     rows += [(r.doc_id, r.text) for r in docs.limit(60).collect()]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    sig = dedup.minhash_signatures(df, "doc_id", n=n)
+    if n == dedup.SHINGLE_N:
+        sig = dedup.minhash_signatures(df, "doc_id")
+    else:
+        sig = dedup._shingle_rows(
+            df.select(F.col("doc_id").alias("id"), "text"), "text", n,
+            dedup._minhash_params())
     assert [(f.name, f.dataType.simpleString(), f.nullable)
             for f in sig.schema.fields] == [
         ("id", "bigint", True), ("sh_hashes", "array<bigint>", True),
@@ -329,10 +337,11 @@ def _ref_band_rows(sig, bands, rows):
                     F.col("b.bhash").alias("bhash")))
 
 
-@pytest.mark.parametrize("bands,rows", [(16, 4), (8, 8)])
+@pytest.mark.parametrize("bands,rows",
+                         [(dedup.MINHASH_BANDS, dedup.MINHASH_ROWS)])
 def test_band_rows_match_column_reference(spark, docs, bands, rows):
     sig = dedup.minhash_signatures(docs, "doc_id")
-    got = dedup.band_rows(sig, bands, rows)
+    got = dedup.band_rows(sig)
     exp = _ref_band_rows(sig, bands, rows)
     assert got.schema == exp.schema
     assert sorted(got.collect()) == sorted(exp.collect())

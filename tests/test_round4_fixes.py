@@ -69,14 +69,11 @@ def test_ivf_topk_gappy_ids_bootstrap(spark):
 # ---------------------------------------------------------------------------
 
 def test_plan_hot_cells_math():
-    plan = similarity.plan_hot_cells(
-        {0: 300, 1: 10, 2: 33}, cell_cap=32, max_subcells=16)
+    plan = similarity.plan_hot_cells({0: 300, 1: 10, 2: 33}, cell_cap=32)
     assert plan == {0: 10, 2: 2}                # ceil(300/32)=10, ceil(33/32)=2
-    # max_subcells caps the chunk count
-    plan = similarity.plan_hot_cells({0: 10_000}, 32, 16)
-    assert plan == {0: 16}
-    with pytest.raises(ValueError):
-        similarity.plan_hot_cells({}, 32, 100_000)
+    # IVF_MAX_SUBCELLS caps the chunk count
+    plan = similarity.plan_hot_cells({0: 10_000}, 32)
+    assert plan == {0: similarity.IVF_MAX_SUBCELLS}
 
 
 def test_id_chunk_balanced_and_deterministic():
@@ -118,7 +115,7 @@ def test_ivf_cell_cap_bounds_probed_candidates(spark):
     assign = np.argmax(mat @ cents.T, axis=1)
     hist = {int(c): int(n) for c, n in
             zip(*np.unique(assign, return_counts=True))}
-    plan = similarity.plan_hot_cells(hist, cap, 16)
+    plan = similarity.plan_hot_cells(hist, cap)
     assert plan, "skew construction failed to produce a hot cell"
     for c, n_sub in plan.items():
         in_c = ids[assign == c]

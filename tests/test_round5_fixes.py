@@ -43,7 +43,7 @@ HIT_DOCS = [
 
 
 def _sig_bands(words):
-    params = _minhash_params(64, 1234567)
+    params = _minhash_params()
     a = np.array([x for x, _ in params], dtype=np.int64)[None, :]
     b = np.array([x for _, x in params], dtype=np.int64)[None, :]
     arr = _hashed_shingles_one(words, 3, {})
