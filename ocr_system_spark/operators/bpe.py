@@ -23,8 +23,8 @@ Training (``bpe_train``, classic word-type-weighted BPE):
 Encoding (``bpe_encode``) applies the merge table to each token in learn
 order, one leftmost-disjoint pass per merge, in an Arrow kernel.
 
-SQL replay layout.  The oracles in ``__spark_entry__.oracle_sql()``
-replay training and encoding with literal string ``replace``: a symbol
+SQL replay layout.  The oracles (``registry/mixture.py``) replay
+training and encoding with literal string ``replace``: a symbol
 sequence is ONE string with the unit separator U+001F — ONE separator at
 each end, TWO between adjacent symbols ("\\x1f c1 \\x1f\\x1f c2
 \\x1f\\x1f \\x1e \\x1f") — and merging (l, r) is one replace of

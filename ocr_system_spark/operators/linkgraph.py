@@ -41,7 +41,8 @@ aggregation — two bounded shuffles whose keys are hosts, never
 documents; AQE broadcasts the rank side while it fits.  Every
 ``CHECKPOINT_EVERY`` rounds the ranks are localCheckpointed (the
 `connected_components` precedent), so a long run does not replay all
-earlier rounds; a run shorter than that compiles into one Spark job.
+earlier rounds, and releases the checkpoint before it once the new one
+is pinned; a run shorter than that compiles into one Spark job.
 """
 
 from __future__ import annotations
@@ -49,7 +50,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ocr_system_spark.persist import persist
+from ocr_system_spark.persist import persist, release_checkpoint
 
 __all__ = ["host_edges", "pagerank", "anchor_pairs", "anchor_host_stats"]
 
@@ -178,6 +179,7 @@ def pagerank(edges: DataFrame, n_iter: int = 5) -> DataFrame:
     base = (init * (DAMP_DEN - DAMP_NUM)) // DAMP_DEN
     ranks = nodes.select(
         "node", F.lit(init).cast("long").alias("rank_micro"))
+    pinned = None
     for it in range(1, n_iter + 1):
         contrib = (ew.join(ranks.withColumnRenamed("node", "src"), "src")
                    .select("dst",
@@ -194,6 +196,10 @@ def pagerank(edges: DataFrame, n_iter: int = 5) -> DataFrame:
                          .cast("long").alias("rank_micro")))
         if it % CHECKPOINT_EVERY == 0 and it < n_iter:
             ranks = ranks.localCheckpoint(eager=True)
+            # the new checkpoint holds every rank the old one fed it
+            if pinned is not None:
+                release_checkpoint(pinned)
+            pinned = ranks
     # e/nodes/ew stay persisted for the returned plan, which references
     # them once per un-checkpointed round (identical subtrees also hit
     # ReusedExchange).

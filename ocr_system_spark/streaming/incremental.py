@@ -45,6 +45,7 @@ from ocr_system_spark.operators.dedup import (incremental_minhash_pairs,
                                               update_minhash_index)
 from ocr_system_spark.persist import persist, scoped_persist
 from ocr_system_spark.plans import index_store
+from ocr_system_spark.streaming._writer import start_checkpointed
 
 __all__ = ["process_dedup_batch", "start_incremental_dedup_stream"]
 
@@ -110,10 +111,5 @@ def start_incremental_dedup_stream(
             id_col=id_col, text_col=text_col,
             min_jaccard_pct=min_jaccard_pct, n_partitions=n_partitions)
 
-    writer = (
-        docs_stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_checkpointed(docs_stream.writeStream.foreachBatch(process),
+                              checkpoint_dir, available_now)

@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ocr_system_spark.plans.pipeline import extract_all, with_buckets
+from ocr_system_spark.streaming._writer import start_checkpointed
 
 PAGES_SCHEMA = T.StructType([
     T.StructField("url", T.StringType(), False),
@@ -60,15 +61,9 @@ def start_extraction_stream(
     streaming checkpoint). ``available_now`` drains what exists and stops —
     the batch-refresh mode; pass False for a long-running tail."""
     results = extract_all(with_buckets(pages_stream, n_buckets=n_buckets))
-    writer = (
-        results.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    writer = (results.writeStream.format("parquet")
+              .option("path", out_dir).outputMode("append"))
+    return start_checkpointed(writer, checkpoint_dir, available_now)
 
 
 def start_metrics_stream(
@@ -91,15 +86,9 @@ def start_metrics_stream(
         .select(F.col("w.start").alias("window_start"),
                 F.col("w.end").alias("window_end"), "lang", "docs", "bytes")
     )
-    writer = (
-        agg.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    writer = (agg.writeStream.format("parquet")
+              .option("path", out_dir).outputMode("append"))
+    return start_checkpointed(writer, checkpoint_dir, available_now)
 
 
 def start_dedup_stream(
@@ -126,12 +115,6 @@ def start_dedup_stream(
         .withWatermark("warc_ts", watermark)
         .dropDuplicatesWithinWatermark(["text_hash"])
     )
-    writer = (
-        deduped.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    writer = (deduped.writeStream.format("parquet")
+              .option("path", out_dir).outputMode("append"))
+    return start_checkpointed(writer, checkpoint_dir, available_now)

@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 
 from ocr_system_spark.operators.lines import _rebuild, _text, line_doc_frequency
 from ocr_system_spark.plans import index_store
+from ocr_system_spark.streaming._writer import start_checkpointed
 
 __all__ = ["process_lines_batch", "start_hot_line_stream",
            "current_hot_lines"]
@@ -144,10 +145,5 @@ def start_hot_line_stream(
             min_docs, id_col=id_col, text_col=text_col,
             n_partitions=n_partitions)
 
-    writer = (
-        docs_stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_checkpointed(docs_stream.writeStream.foreachBatch(process),
+                              checkpoint_dir, available_now)

@@ -96,11 +96,24 @@ class TestPagerank:
     def test_checkpoint_cadence_identical(self, spark):
         """A run that crosses the checkpoint cadence gives the exact ranks:
         the cadence is a lineage/latency knob, never a semantics knob."""
-        n_iter = CHECKPOINT_EVERY + 1
-        got = {r["node"]: r["rank_micro"]
-               for r in pagerank(_edges(spark, EDGES), n_iter=n_iter)
-               .collect()}
-        assert got == _py_pagerank(EDGES, n_iter)
+        for n_iter in (CHECKPOINT_EVERY + 1, 2 * CHECKPOINT_EVERY + 1):
+            got = {r["node"]: r["rank_micro"]
+                   for r in pagerank(_edges(spark, EDGES), n_iter=n_iter)
+                   .collect()}
+            assert got == _py_pagerank(EDGES, n_iter)
+
+    def test_releases_superseded_checkpoints(self, spark):
+        """A checkpoint is released once the next one is pinned: a run
+        that checkpoints twice leaves one persistent RDD, the last
+        checkpoint, after ``clearCache()`` (which cannot reach a local
+        checkpoint) drops the call's cached edges and nodes."""
+        jsc = spark.sparkContext._jsc
+        before = set(jsc.getPersistentRDDs().keySet())
+        cyc = [("a", "b", 1), ("b", "c", 1), ("c", "a", 1)]
+        pagerank(_edges(spark, cyc),
+                 n_iter=2 * CHECKPOINT_EVERY + 1).collect()
+        spark.catalog.clearCache()
+        assert len(set(jsc.getPersistentRDDs().keySet()) - before) == 1
 
 
 class TestAnchorPairs:

@@ -2,7 +2,10 @@
 its oracle_sql() on DuckDB over the same sf dir; compare row count, column
 names, and an order-insensitive value hash (mimics CORRECTNESS_r{N}.json).
 
-Usage: python tools/check_oracles.py [sf_dir] [query ...]
+Usage: python tools/check_oracles.py [sf_dir] [query|family ...]
+
+A family is a module of ``registry/`` (e.g. ``lines``) and stands for all
+of its queries.
 """
 
 from __future__ import annotations
@@ -43,7 +46,10 @@ def value_hash(rows: list[str]) -> str:
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    only = set(sys.argv[2:])
+    families = {f.__name__.rsplit(".", 1)[1]: f for f in entrymod.FAMILIES}
+    only = set()
+    for arg in sys.argv[2:]:
+        only |= set(families[arg].queries()) if arg in families else {arg}
 
     con = duckdb.connect()
     for t in TABLES:
