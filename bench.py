@@ -68,11 +68,14 @@ def main() -> None:
     from ocr_system_spark.operators import dedup, similarity
     from ocr_system_spark.operators.extract import extract_fields
     from ocr_system_spark.plans.pipeline import extract_all, with_buckets
-    from ocr_system_spark.session import get_spark
+    from ocr_system_spark.session import TIERED_JIT_CONF, get_spark
     from ocr_system_spark.sources.tables import load
 
+    # Tiered C1+C2, not get_spark's C1-only default: one session runs every
+    # leaf 3 times, long enough for C2's code to pay back (BASELINE.md).
     spark = get_spark(cores=CPUS, app_name="bench",
-                      shuffle_partitions=max(CPUS, 8))
+                      shuffle_partitions=max(CPUS, 8),
+                      extra_conf=TIERED_JIT_CONF)
 
     timings: dict[str, float] = {}
     spread: dict[str, list] = {}
@@ -282,6 +285,7 @@ def main() -> None:
         "sf": SF_DIR.rstrip("/").split("sf")[-1],
         **extras,
         "cpus": CPUS,
+        "driver_jit": "tiered",
     }))
     spark.stop()
 

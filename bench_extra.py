@@ -39,10 +39,12 @@ def main() -> None:
     args = ap.parse_args()
 
     import __spark_entry__ as entrymod
-    from ocr_system_spark.session import get_spark
+    from ocr_system_spark.session import TIERED_JIT_CONF, get_spark
 
+    # the same tiered driver JIT as bench.py, so the timings compare
     spark = get_spark(cores=CPUS, app_name="bench_extra",
-                      shuffle_partitions=max(CPUS, 8))
+                      shuffle_partitions=max(CPUS, 8),
+                      extra_conf=TIERED_JIT_CONF)
     qmap = entrymod.queries()
 
     for name in args.plans:

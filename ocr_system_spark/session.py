@@ -3,11 +3,32 @@
 Local-mode testing uses ``local[N]`` threads; the same config block is what
 we would pass to ``spark-submit`` on a real cluster (AQE on, Arrow on,
 shuffle partitions sized to cores).
+
+The driver JVM compiles with C1 only (``-XX:TieredStopAtLevel=1``) by
+default. The engine's unit of work is a one-shot batch job, and HotSpot's C2
+compiler costs a cold job about half of its CPU, on code that the job does
+not run long enough to pay back. In ``local[N]`` the driver JVM also runs
+every task. Measured with ``perfbench`` on a 4-core host
+(``BENCH/BASELINE.md``, 10 paired seeds): the cold job's docs per CPU-second
+went from 39.8 to 78.3 on extraction and from 43.1 to 81.5 on dedup, with
+warm throughput within its spread. A session that lives for minutes and
+runs the same operators again and again is the other case: there C2's code
+pays back, and under C1 the warm ``bench.py`` suite went from 14-17 s to
+20 s (``window_topk``, ``agg_pricing`` about twice as slow) and the test
+suite from 372-443 s to 553-604 s. Such sessions pass
+``extra_conf=TIERED_JIT_CONF`` (``bench.py``, ``bench_extra.py`` and the
+test suite do). It works because the option goes in
+``spark.driver.defaultJavaOptions``, which Spark places before
+``spark.driver.extraJavaOptions``, and HotSpot keeps the last value of a
+repeated flag. Executors are long-lived on a cluster and run those
+operators for hours, so ``spark.executor.*JavaOptions`` stay untouched and
+executors keep tiered C1+C2 compilation.
 """
 
 from __future__ import annotations
 
 import os
+import tempfile
 from pathlib import Path
 
 from pyspark.sql import SparkSession
@@ -25,7 +46,6 @@ def ensure_package_on_executors(spark: SparkSession) -> None:
     if getattr(spark, "_ocr_system_spark_shipped", False):
         return
     import hashlib
-    import tempfile
     import zipfile
 
     pkg_dir = os.path.join(_REPO_ROOT, "ocr_system_spark")
@@ -66,6 +86,37 @@ def _default_driver_memory() -> str:
     except (AttributeError, ValueError, OSError):
         return "16g"
     return f"{min(total // 2 >> 20, 16 << 10)}m"
+
+
+# Below this much free space at session start, /dev/shm takes no shuffle or
+# spill: tmpfs pages are RAM, so a nearly full tmpfs would take memory from
+# the driver heap. A round figure, not derived from a measured shuffle
+# volume, and checked only once: it guards a tmpfs that is already nearly
+# full, not one that a session fills.
+_SHM_MIN_FREE_BYTES = 2 << 30
+
+# extra_conf for a long-lived session: tiered C1+C2 in the driver JVM
+# instead of the C1-only default (see the module docstring).
+TIERED_JIT_CONF = {"spark.driver.extraJavaOptions": "-XX:TieredStopAtLevel=4"}
+
+
+def _local_dir() -> str:
+    """Where shuffle and spill files go. ``SPARK_LOCAL_DIRS`` wins; otherwise
+    RAM-backed ``/dev/shm`` when it has ``_SHM_MIN_FREE_BYTES`` free (on a
+    host with one local disk, that disk's fixed bandwidth serializes
+    shuffles; tmpfs models a cluster's per-node local SSDs), else the disk
+    temp dir. ``SPARK_GRAFT_DISK_SHUFFLE=1`` opts out of tmpfs."""
+    if "SPARK_LOCAL_DIRS" in os.environ:
+        return os.environ["SPARK_LOCAL_DIRS"]
+    if not os.environ.get("SPARK_GRAFT_DISK_SHUFFLE"):
+        try:
+            st = os.statvfs("/dev/shm")
+        except OSError:
+            pass  # no /dev/shm on this host
+        else:
+            if st.f_bavail * st.f_frsize >= _SHM_MIN_FREE_BYTES:
+                return "/dev/shm/spark_local"
+    return tempfile.gettempdir()
 
 
 def get_spark(
@@ -135,23 +186,17 @@ def get_spark(
         # Idempotent per-bucket overwrite for checkpoint-resume (plans/resume.py).
         .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
         .config("spark.executorEnv.PYTHONPATH", os.environ["PYTHONPATH"])
-        # Shuffle/spill through RAM-backed tmpfs when present: the sandbox
-        # has ONE local disk whose fixed bandwidth otherwise serializes
-        # shuffles; tmpfs models a cluster's per-node local SSDs. Opt out
-        # with SPARK_GRAFT_DISK_SHUFFLE=1.
-        .config(
-            "spark.local.dir",
-            os.environ.get(
-                "SPARK_LOCAL_DIRS",
-                "/dev/shm/spark_local"
-                if os.path.isdir("/dev/shm")
-                and not os.environ.get("SPARK_GRAFT_DISK_SHUFFLE")
-                else os.path.join(os.sep, "tmp"),
-            ),
-        )
+        .config("spark.local.dir", _local_dir())
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory",
                 os.environ.get("SPARK_GRAFT_DRIVER_MEM", _default_driver_memory()))
+        # C1 only in the driver JVM (see the module docstring). perfbench,
+        # 4 cores: cold-job CPU 18.3 -> 10.4 CPU-s on extraction and
+        # 29.6 -> 14.0 on dedup; JIT CPU per warm job 3.9 -> 0.7 and
+        # 5.9 -> 0.8 CPU-s. defaultJavaOptions comes before
+        # extraJavaOptions, so TIERED_JIT_CONF there wins. Executors
+        # keep C2.
+        .config("spark.driver.defaultJavaOptions", "-XX:TieredStopAtLevel=1")
     )
     if extra_conf:
         for k, v in extra_conf.items():

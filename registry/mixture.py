@@ -144,9 +144,11 @@ def queries() -> dict[str, Builder]:
         """Data MIXING: per-tier deterministic sampling rates over the
         quality tiers (tier 1 kept at 2/16, tier 2 at 8/16, tiers 3-4
         fully) — the md5-lottery rate filter composed on the tier
-        relation; zero additional shuffle."""
+        relation; zero additional shuffle. The tiers come from the
+        bucketed form (bit-identical to the ntile window), so no task
+        holds the whole corpus."""
         d = tables.load(spark, sf_dir, "documents").select("doc_id", "text")
-        tiers = quality_tiers(hashed_linear_score(d), n_tiers=4)
+        tiers = quality_tiers_bucketed(hashed_linear_score(d), n_tiers=4)
         kept = mixture_sample(tiers, group_col="tier",
                               rate_sixteenths={1: 2, 2: 8, 3: 16, 4: 16},
                               id_col="id")

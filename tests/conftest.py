@@ -24,8 +24,10 @@ def golden_fields() -> pd.DataFrame:
 
 @pytest.fixture(scope="session")
 def spark():
-    from ocr_system_spark.session import get_spark
+    from ocr_system_spark.session import TIERED_JIT_CONF, get_spark
 
-    s = get_spark(cores=4, app_name="ocr_system_spark_tests", shuffle_partitions=8)
+    # one JVM for the whole suite: tiered C1+C2 pays back over its minutes
+    s = get_spark(cores=4, app_name="ocr_system_spark_tests", shuffle_partitions=8,
+                  extra_conf=TIERED_JIT_CONF)
     yield s
     s.stop()

@@ -45,14 +45,12 @@ def child(cores: int, pages_path: str) -> None:
     from ocr_system_spark.plans.pipeline import extract_all, with_buckets
     from ocr_system_spark.session import get_spark
 
-    import tempfile as _tf
-    # Shuffle through RAM-backed storage: one local disk is a sandbox
-    # artifact (fixed ~4s regardless of cores); a real cluster's shuffle
-    # bandwidth scales with node count, which tmpfs models far better.
-    shm = "/dev/shm" if os.path.isdir("/dev/shm") else _tf.gettempdir()
+    # get_spark shuffles through /dev/shm when it has room: a single local
+    # disk costs a fixed ~4 s regardless of cores, while a real cluster's
+    # shuffle bandwidth scales with node count, which tmpfs models far
+    # better.
     spark = get_spark(cores=cores, app_name=f"scale{cores}",
-                      shuffle_partitions=max(cores * 2, 8),
-                      extra_conf={"spark.local.dir": os.path.join(shm, "spark_scale")})
+                      shuffle_partitions=max(cores * 2, 8))
     # The generator writes ONE parquet file → a 1-partition scan. Re-spread
     # to a FIXED partition count (same at both levels, outside the timing)
     # so the timed job starts from identically-partitioned cached input —
