@@ -6,7 +6,7 @@ only) as an idiomatic PySpark pipeline:
 
 * pages table ``(url, warc_ts, html:binary, text, lang)`` in, results table
   out — the reference's "folder of PDFs → CSV of extracted fields" dataflow
-  re-expressed as ``spark.read.parquet → mapInPandas(extract) → write``;
+  re-expressed as ``spark.read.parquet → mapInArrow(extract) → write``;
 * the reference's regex field-extraction layer (its ``ocr/extract.py``,
   ``ocr/dynamic.py``, ``ocr/postprocess.py``) reproduced byte-identically in
   vectorized, compile-once batch kernels (:mod:`ocr_system_spark.functions.fields`);

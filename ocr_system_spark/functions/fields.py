@@ -5,7 +5,7 @@ Reimplements the reference extractor's per-row string semantics —
 F6), /root/reference/ocr/dynamic.py (dynamic fields F9, license
 normalize/extract F10/F11, first-page licenses F13) and
 /root/reference/ocr/postprocess.py (derived column F14) — as batch kernels
-over pandas Series.
+over text columns.
 
 Design differences from the reference (deliberate, performance-only; the
 observable output is byte-identical and pinned by tests/test_fields_golden.py):
@@ -13,8 +13,10 @@ observable output is byte-identical and pinned by tests/test_fields_golden.py):
 * every regex is compiled exactly once per executor process at module import
   (the reference recompiles per row per call — ocr/extract.py:29-31,
   ocr/dynamic.py:60 — an anti-pattern we do not replicate);
-* all kernels take/return pandas Series so they slot into Arrow-batched
-  ``mapInPandas`` stages with zero per-row Python at the Spark layer;
+* the batch kernels read a text column through ``.tolist()`` (an Arrow
+  array or a pandas Series) and return plain lists, one per output column,
+  so they slot into Arrow-batched ``mapInArrow`` stages with zero per-row
+  Python at the Spark layer;
 * Python's ``re`` engine is used on purpose: Java/RE2 regex dialects differ
   (inline verbose flags, lookahead nuances, ``\\u2080-\\u2089`` classes), and
   byte-identity with the reference is a hard requirement — never "optimize"
@@ -26,9 +28,7 @@ from __future__ import annotations
 import re
 from typing import Dict, Iterable, List, Optional, Tuple
 
-import numpy as np
-import pandas as pd
-
+from ocr_system_spark.functions import columns
 from ocr_system_spark.functions.patterns import (
     ADDRESS_PATTERN,
     DEFAULT_PATTERNS,
@@ -246,67 +246,52 @@ def extract_dynamic_fields_one(
 
 
 # --------------------------------------------------------------------------
-# batch kernels (pandas Series in → pandas columns out)
+# batch kernels (a text column in → one list per output column out)
 # --------------------------------------------------------------------------
 
-def _as_str_list(texts: pd.Series) -> List[str]:
-    return ["" if t is None or (isinstance(t, float) and np.isnan(t)) else t
-            for t in texts.tolist()]
+def _as_str_list(values) -> List[str]:
+    """'' for each missing value: None, or the NaN of a pandas column."""
+    return ["" if t is None or t != t else t for t in values]
 
 
-def extract_static_fields(texts: pd.Series) -> pd.DataFrame:
-    rows = [extract_static_fields_one(t) for t in _as_str_list(texts)]
-    return pd.DataFrame(
-        rows, columns=["license_id", "date", "reference_id"], index=texts.index,
-        dtype=object,
-    )
+def extract_static_fields(texts) -> Dict[str, List[Optional[str]]]:
+    rows = [extract_static_fields_one(t) for t in _as_str_list(texts.tolist())]
+    return columns(rows, ["license_id", "date", "reference_id"])
 
 
-def extract_address(texts: pd.Series) -> pd.Series:
-    return pd.Series(
-        [extract_address_one(t) for t in _as_str_list(texts)],
-        index=texts.index, dtype=object, name="address",
-    )
+def extract_address(texts) -> List[Optional[str]]:
+    return [extract_address_one(t) for t in _as_str_list(texts.tolist())]
 
 
-def extract_date_range(texts: pd.Series) -> pd.DataFrame:
-    rows = [extract_date_range_one(t) for t in _as_str_list(texts)]
-    return pd.DataFrame(
-        rows, columns=["start_date", "end_date"], index=texts.index, dtype=object,
-    )
+def extract_date_range(texts) -> Dict[str, List[Optional[str]]]:
+    rows = [extract_date_range_one(t) for t in _as_str_list(texts.tolist())]
+    return columns(rows, ["start_date", "end_date"])
 
 
-def extract_licenses_first_page(texts: pd.Series) -> pd.Series:
-    return pd.Series(
-        [extract_licenses_first_page_one(t) for t in _as_str_list(texts)],
-        index=texts.index, dtype=object, name="licenses",
-    )
+def extract_licenses_first_page(texts) -> List[str]:
+    return [extract_licenses_first_page_one(t)
+            for t in _as_str_list(texts.tolist())]
 
 
-def derived_summary(licenses: pd.Series, addresses: pd.Series) -> pd.Series:
-    return pd.Series(
-        [derived_summary_one(l, a)
-         for l, a in zip(_as_str_list(licenses), _as_str_list(addresses))],
-        index=licenses.index, dtype=object, name="renew_times",
-    )
+def derived_summary(licenses: List[str],
+                    addresses: List[Optional[str]]) -> List[str]:
+    return [derived_summary_one(l, a)
+            for l, a in zip(_as_str_list(licenses), _as_str_list(addresses))]
 
 
 def extract_dynamic_fields(
-    texts: pd.Series, compiled: Dict[str, List[re.Pattern]]
-) -> pd.DataFrame:
-    fields = list(compiled.keys())
-    rows = [extract_dynamic_fields_one(t, compiled) for t in _as_str_list(texts)]
-    return pd.DataFrame(
-        [[r[f] for f in fields] for r in rows],
-        columns=fields, index=texts.index, dtype=object,
-    )
+    texts, compiled: Dict[str, List[re.Pattern]]
+) -> Dict[str, List[str]]:
+    rows = [extract_dynamic_fields_one(t, compiled)
+            for t in _as_str_list(texts.tolist())]
+    return {f: [r[f] for r in rows] for f in compiled}
 
 
-def notes_for(license_id: pd.Series, date: pd.Series, reference_id: pd.Series) -> pd.Series:
+def notes_for(license_id: List[Optional[str]], date: List[Optional[str]],
+              reference_id: List[Optional[str]]) -> List[Optional[str]]:
     """Errors-as-data notes column: 'No patterns matched' when the whole
     static projection came up empty (reference: ocr/pipeline.py:71-73)."""
-    vals = [
+    return [
         "No patterns matched" if (l is None and d is None and r is None) else None
-        for l, d, r in zip(license_id.tolist(), date.tolist(), reference_id.tolist())
+        for l, d, r in zip(license_id, date, reference_id)
     ]
-    return pd.Series(vals, index=license_id.index, dtype=object, name="notes")

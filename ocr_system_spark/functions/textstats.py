@@ -6,10 +6,11 @@ Two tiers per operator:
   pyspark.sql.functions, oracle-checkable against DuckDB);
 * a batch-kernel form here (character n-gram language ID, winnowing
   fingerprints), run once per row over Arrow batches by the pass-through
-  map in ``operators/_rowmap``. These are still oracle-checkable: the
-  langid oracle is SQL GENERATED from the same profile constants, and
-  the winnowing hash is a codepoint polynomial an independent SQL engine
-  can recompute from scratch.
+  map in ``operators/_rowmap``; each reads its text column through
+  ``.tolist()`` and returns one list per output column. These are still
+  oracle-checkable: the langid oracle is SQL GENERATED from the same
+  profile constants, and the winnowing hash is a codepoint polynomial an
+  independent SQL engine can recompute from scratch.
 """
 
 from __future__ import annotations
@@ -19,7 +20,8 @@ import re
 from typing import Dict, List, Tuple
 
 import numpy as np
-import pandas as pd
+
+from ocr_system_spark.functions import columns
 
 # ---------------------------------------------------------------------------
 # language ID: character-trigram profiles (tiny, built-in, deterministic)
@@ -61,9 +63,8 @@ def langid_one(text: str) -> str:
     return best_lang
 
 
-def langid_batch(texts: pd.Series) -> pd.Series:
-    return pd.Series([langid_one(t) for t in texts.tolist()],
-                     index=texts.index, dtype=object)
+def langid_batch(texts) -> List[str]:
+    return [langid_one(t) for t in texts.tolist()]
 
 
 # ---------------------------------------------------------------------------
@@ -79,7 +80,7 @@ _STOPWORDS = frozenset(
 )
 
 
-def quality_features_batch(texts: pd.Series) -> pd.DataFrame:
+def quality_features_batch(texts) -> Dict[str, list]:
     rows: List[Tuple[int, int, int, float, float]] = []
     for t in texts.tolist():
         t = t or ""
@@ -97,20 +98,17 @@ def quality_features_batch(texts: pd.Series) -> pd.DataFrame:
             round(punct / n_chars, 6) if n_chars else 0.0,
             round(upper / alpha, 6) if alpha else 0.0,
         ))
-    return pd.DataFrame(
-        rows,
-        columns=["n_chars", "n_words", "n_stopwords", "punct_ratio", "upper_ratio"],
-        index=texts.index,
-    )
+    return columns(rows, ["n_chars", "n_words", "n_stopwords", "punct_ratio",
+                           "upper_ratio"])
 
 
-def token_count_batch(texts: pd.Series) -> pd.DataFrame:
+def token_count_batch(texts) -> Dict[str, List[int]]:
     """Whitespace tokens + BPE-ish subword tokens per text."""
     rows = []
     for t in texts.tolist():
         t = t or ""
         rows.append((len(_WORD_RE.findall(t)), len(_BPEISH_RE.findall(t))))
-    return pd.DataFrame(rows, columns=["ws_tokens", "bpeish_tokens"], index=texts.index)
+    return columns(rows, ["ws_tokens", "bpeish_tokens"])
 
 
 # ---------------------------------------------------------------------------
@@ -162,8 +160,6 @@ def winnow_fingerprint_one(text: str, k: int = 8, window: int = 4) -> List[Tuple
     return [(int(p), int(h[p])) for p in sel]
 
 
-def winnow_fingerprint_batch(texts: pd.Series, k: int = 8, window: int = 4) -> pd.Series:
-    return pd.Series(
-        [winnow_fingerprint_one(t, k, window) for t in texts.tolist()],
-        index=texts.index, dtype=object,
-    )
+def winnow_fingerprint_batch(texts, k: int = 8,
+                             window: int = 4) -> List[List[Tuple[int, int]]]:
+    return [winnow_fingerprint_one(t, k, window) for t in texts.tolist()]

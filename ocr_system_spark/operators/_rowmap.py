@@ -1,5 +1,6 @@
 """The one way a per-row Python kernel joins a DataFrame: a pass-through
-``mapInArrow``.
+``mapInArrow``; and ``rows_batch``, the Arrow batch a stage that emits its
+own rows yields to ``mapInArrow``.
 
 A Python map is a plan barrier. A projected pandas UDF is not: Spark
 pushes a filter over its output (``size(col) > 0``, written or inferred
@@ -23,8 +24,8 @@ def map_rows(df: DataFrame, kernel: Callable, out: Sequence[T.StructField],
     """``df`` with the ``out`` columns ``kernel`` computes per Arrow batch.
 
     ``kernel(batch)`` gets each ``pa.RecordBatch`` of ``df`` and returns
-    ``(rows, values)``: ``values`` holds one array (or list, numpy array,
-    pandas Series) per ``out`` field; ``rows`` is None when they align 1:1
+    ``(rows, values)``: ``values`` holds one array (or list, numpy array)
+    per ``out`` field; ``rows`` is None when they align 1:1
     with the batch, else the index of the input row behind each output
     row, so a kernel can drop a row or emit it several times.
 
@@ -56,3 +57,11 @@ def map_rows(df: DataFrame, kernel: Callable, out: Sequence[T.StructField],
             yield pa.RecordBatch.from_arrays(cols, names=schema.names)
 
     return df.mapInArrow(run, schema)
+
+
+def rows_batch(rows: Sequence[tuple], schema: T.StructType) -> pa.RecordBatch:
+    """Row tuples → one Arrow batch of ``schema``'s columns."""
+    cols = list(zip(*rows)) or [()] * len(schema)
+    return pa.RecordBatch.from_arrays(
+        [pa.array(c, to_arrow_type(f.dataType)) for c, f in zip(cols, schema)],
+        names=schema.names)

@@ -5,14 +5,14 @@ The reference runs four separate passes over its cached text table — dynamic
 fields, first-page licenses, a dict-join back, then address+date-range per
 row (/root/reference/gui/app.py:464-501, an O(n²) re-lookup). Here all
 extractors read the same ``text`` column once inside a single
-``mapInPandas`` stage: one scan, no join, no shuffle.
+``mapInArrow`` stage: one scan, no join, no shuffle.
 """
 
 from __future__ import annotations
 
-from typing import Dict, Iterator, List, Optional
+from typing import Dict, List, Optional
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
@@ -38,36 +38,26 @@ def result_schema(dynamic_fields: Optional[List[str]] = None) -> T.StructType:
 
 
 def extract_fields_batch(
-    pdf: pd.DataFrame,
+    batch,
     dynamic_config: Optional[Dict[str, List[str]]] = None,
-) -> pd.DataFrame:
-    """Pure-pandas kernel: url+text in, full result row out. Unit-testable
-    without a JVM; called from the mapInPandas closure below."""
-    texts = pdf["text"]
-    static = fields.extract_static_fields(texts)
-    address = fields.extract_address(texts)
-    date_range = fields.extract_date_range(texts)
-    licenses = fields.extract_licenses_first_page(texts)
-    renew = fields.derived_summary(licenses, address)
-    notes = fields.notes_for(static["license_id"], static["date"], static["reference_id"])
-    out = pd.DataFrame({
-        "url": pdf["url"],
-        "license_id": static["license_id"],
-        "date": static["date"],
-        "reference_id": static["reference_id"],
-        "address": address,
-        "start_date": date_range["start_date"],
-        "end_date": date_range["end_date"],
-        "licenses": licenses,
-        "renew_times": renew,
-        "notes": notes,
-    })
+) -> pa.RecordBatch:
+    """Batch kernel: url+text in, full result row out. ``batch`` is anything
+    whose columns have ``.tolist()`` (an Arrow record batch or a pandas
+    frame), so it is unit-testable without a JVM."""
+    texts = batch["text"]
+    out = {"url": batch["url"].tolist(), **fields.extract_static_fields(texts)}
+    out["address"] = fields.extract_address(texts)
+    out.update(fields.extract_date_range(texts))
+    out["licenses"] = fields.extract_licenses_first_page(texts)
+    out["renew_times"] = fields.derived_summary(out["licenses"], out["address"])
+    out["notes"] = fields.notes_for(out["license_id"], out["date"],
+                                    out["reference_id"])
     if dynamic_config:
         compiled = fields.compile_field_patterns(dynamic_config)
-        dyn = fields.extract_dynamic_fields(texts, compiled)
-        for c in dyn.columns:
-            out[c] = dyn[c]
-    return out
+        out.update(fields.extract_dynamic_fields(texts, compiled))
+    names = ["url", *RESULT_FIELDS, *(dynamic_config or ())]
+    return pa.RecordBatch.from_arrays(
+        [pa.array(out[n], pa.string()) for n in names], names=names)
 
 
 def has_data_filter(results: DataFrame,
@@ -92,11 +82,12 @@ def with_custom_column(
 ) -> DataFrame:
     """The reference's scalar-UDF extension point (`compute_new_column`,
     ocr/postprocess.py:8): a user-supplied per-row function over the result
-    row, here as an Arrow-batched slot — fn(pandas.DataFrame) -> pandas.Series."""
+    row, here as an Arrow-batched slot — fn(pyarrow.RecordBatch) -> one
+    string (or None) per row, as a list or an Arrow array."""
     in_cols = [c for c in results.columns if c != "spans"]
 
     def kernel(batch):
-        return None, [fn(batch.select(in_cols).to_pandas()).astype(object)]
+        return None, [fn(batch.select(in_cols))]
 
     return map_rows(results, kernel, [T.StructField(name, T.StringType())])
 
@@ -111,10 +102,9 @@ def extract_fields(
     select before the UDF — html bytes never cross the Python boundary here.
     """
     dyn_fields = list(dynamic_config.keys()) if dynamic_config else None
-    schema = result_schema(dyn_fields)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield extract_fields_batch(pdf, dynamic_config)
+    def run(batches):
+        for batch in batches:
+            yield extract_fields_batch(batch, dynamic_config)
 
-    return pages.select("url", "text").mapInPandas(run, schema=schema)
+    return pages.select("url", "text").mapInArrow(run, result_schema(dyn_fields))

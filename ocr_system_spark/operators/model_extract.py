@@ -5,7 +5,7 @@ model file is never shipped and both PyInstaller specs exclude torch/tf —
 /root/reference/t5_extractor.py:50-57, EPL-OCR.spec:13). What survives as a
 spec is the SHAPE: per-field prompt → model decode → per-field regex
 validation of the decode. This module provides that shape as an
-iterator-of-batches ``mapInPandas`` model UDF:
+iterator-of-batches ``mapInArrow`` model UDF:
 
 * the model loads ONCE per executor Python worker (outside the batch loop —
   the pattern that matters for real model serving);
@@ -21,9 +21,9 @@ iterator-of-batches ``mapInPandas`` model UDF:
 from __future__ import annotations
 
 import re
-from typing import Dict, Iterator, List
+from typing import Dict, List
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
@@ -77,17 +77,17 @@ def model_extract(
         + [T.StructField(f, T.StringType(), True) for f in fields]
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(batches):
         decode = load_model()  # once per worker, NOT per batch
-        for pdf in batches:
-            out = {id_col: pdf[id_col].astype(str)}
+        for batch in batches:
+            cols = [[str(v) for v in batch.column(id_col).to_pylist()]]
+            contexts = [(t or "")[:PROMPT_CLIP]
+                        for t in batch.column(text_col).to_pylist()]
             for f in fields:
-                vals = []
-                for t in pdf[text_col].tolist():
-                    context = (t or "")[:PROMPT_CLIP]
-                    d = decode(f, context)
-                    vals.append(d if d and validators[f].match(d) else None)
-                out[f] = pd.Series(vals, index=pdf.index, dtype=object)
-            yield pd.DataFrame(out)
+                decodes = (decode(f, c) for c in contexts)
+                cols.append([d if d and validators[f].match(d) else None
+                             for d in decodes])
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(c, pa.string()) for c in cols], names=schema.names)
 
-    return df.select(id_col, text_col).mapInPandas(run, schema=schema)
+    return df.select(id_col, text_col).mapInArrow(run, schema)

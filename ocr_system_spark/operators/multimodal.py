@@ -10,13 +10,12 @@ real decoder is a one-function change inside the batch kernel.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ._rowmap import rows_batch
 
 MEDIA_FEATURES_SCHEMA = T.StructType([
     T.StructField("id", T.LongType(), False),
@@ -43,11 +42,12 @@ def decode_media_features(df: DataFrame, id_col: str = "id",
     """media binary → per-item features. Batched: one numpy pass per Arrow
     batch; the per-item loop touches only array slicing."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(batches):
         decoder = _try_real_decoder() or "bytestats"
-        for pdf in batches:
+        for batch in batches:
             rows = []
-            for i, b, mt in zip(pdf[id_col], pdf[media_col], pdf[type_col]):
+            for i, b, mt in zip(*(batch.column(c).to_pylist()
+                                  for c in (id_col, media_col, type_col))):
                 if b is None or len(b) == 0:
                     rows.append((int(i), mt, 0, None, None, decoder))
                     continue
@@ -56,18 +56,17 @@ def decode_media_features(df: DataFrame, id_col: str = "id",
                     # container has no codec libs, so the branch is
                     # intentionally unreachable — see _try_real_decoder.
                     raise NotImplementedError("real media decode not available")
-                arr = np.frombuffer(bytes(b), dtype=np.uint8)
+                arr = np.frombuffer(b, dtype=np.uint8)
                 counts = np.bincount(arr, minlength=256).astype(np.float64)
                 p = counts[counts > 0] / arr.size
                 entropy = float(-(p * np.log2(p)).sum())
                 rows.append((int(i), mt, int(arr.size),
                              round(float(arr.mean()), 6), round(entropy, 6),
                              decoder))
-            yield pd.DataFrame(rows, columns=[f.name for f in MEDIA_FEATURES_SCHEMA])
+            yield rows_batch(rows, MEDIA_FEATURES_SCHEMA)
 
-    return df.select(id_col, media_col, type_col).mapInPandas(
-        run, schema=MEDIA_FEATURES_SCHEMA
-    )
+    return df.select(id_col, media_col, type_col).mapInArrow(
+        run, MEDIA_FEATURES_SCHEMA)
 
 
 def frame_sample_stub(df: DataFrame, id_col: str = "id", media_col: str = "media",
@@ -82,17 +81,18 @@ def frame_sample_stub(df: DataFrame, id_col: str = "id", media_col: str = "media
         T.StructField("frame", T.BinaryType(), True),
     ])
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
+    def run(batches):
+        for batch in batches:
             rows = []
-            for i, b in zip(pdf[id_col], pdf[media_col]):
-                b = bytes(b) if b is not None else b""
+            for i, b in zip(batch.column(id_col).to_pylist(),
+                            batch.column(media_col).to_pylist()):
+                b = b or b""
                 step = max(1, len(b) // n_frames)
                 for f in range(n_frames):
                     rows.append((int(i), f, b[f * step:(f + 1) * step]))
-            yield pd.DataFrame(rows, columns=["id", "frame_idx", "frame"])
+            yield rows_batch(rows, schema)
 
-    return df.select(id_col, media_col).mapInPandas(run, schema=schema)
+    return df.select(id_col, media_col).mapInArrow(run, schema)
 
 
 def resize_stub(df: DataFrame, id_col: str = "id", media_col: str = "media",
@@ -109,21 +109,21 @@ def resize_stub(df: DataFrame, id_col: str = "id", media_col: str = "media",
         T.StructField("resized_bytes", T.LongType(), False),
     ])
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
+    def run(batches):
+        for batch in batches:
             rows = []
-            for i, b in zip(pdf[id_col], pdf[media_col]):
-                b = bytes(b) if b is not None else b""
+            for i, b in zip(batch.column(id_col).to_pylist(),
+                            batch.column(media_col).to_pylist()):
+                b = b or b""
                 if len(b) <= target_bytes:
                     out = b
                 else:
                     step = -(-len(b) // target_bytes)  # ceil div
                     out = b[::step]
                 rows.append((int(i), out, len(b), len(out)))
-            yield pd.DataFrame(
-                rows, columns=["id", "resized", "orig_bytes", "resized_bytes"])
+            yield rows_batch(rows, schema)
 
-    return df.select(id_col, media_col).mapInPandas(run, schema=schema)
+    return df.select(id_col, media_col).mapInArrow(run, schema)
 
 
 def documents_as_media(df: DataFrame, id_col: str = "doc_id",

@@ -2,7 +2,7 @@
 
 Dispatches each page's binary payload on a magic-byte sniff — ``%PDF`` → PDF
 layout pass, leading ``<`` → HTML main-content extraction — inside one
-``mapInPandas`` stage. Unsupported/garbage payloads flow through the
+``mapInArrow`` stage. Unsupported/garbage payloads flow through the
 errors-as-data path: NULL ``extracted_text`` + ``extract_ok=false`` (+ a note),
 the distributed analog of the reference's try/except → notes column
 (/root/reference/ocr/pipeline.py:85-92). No subprocess, no model, no
@@ -11,10 +11,12 @@ per-row Python at the Spark layer.
 
 from __future__ import annotations
 
-from typing import List, Optional, Tuple
+from typing import List, Optional
 
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_type
 
 from ocr_system_spark.functions import html_extract, pdf_layout
 
@@ -24,6 +26,7 @@ SPAN_TYPE = T.ArrayType(
         T.StructField("end", T.IntegerType(), False),
     ])
 )
+_SPAN_ARROW = to_arrow_type(SPAN_TYPE)
 
 
 def _sniff(payload: Optional[bytes]) -> str:
@@ -37,11 +40,12 @@ def _sniff(payload: Optional[bytes]) -> str:
     return "unknown"
 
 
-def extract_text_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Pure-pandas kernel: (url, html) in → (url, extracted_text, spans,
-    payload_kind, n_bytes, extract_ok) out."""
+def extract_text_batch(batch) -> pa.RecordBatch:
+    """Batch kernel: (url, html) in → (url, extracted_text, spans,
+    payload_kind, n_bytes, extract_ok) out. ``batch`` is anything whose
+    columns have ``.tolist()`` (an Arrow record batch or a pandas frame)."""
     payloads: List[Optional[bytes]] = [
-        bytes(b) if b is not None else None for b in pdf["html"].tolist()
+        bytes(b) if b is not None else None for b in batch["html"].tolist()
     ]
     kinds = [_sniff(b) for b in payloads]
 
@@ -52,32 +56,35 @@ def extract_text_batch(pdf: pd.DataFrame) -> pd.DataFrame:
     ]
     html_out = html_extract.extract_main_batch(html_in)
 
+    # spans go into flat offset/start/end arrays: per-span dicts cost ~3x
     texts: List[Optional[str]] = []
-    spans_col: List[Optional[List[Tuple[int, int]]]] = []
-    ok: List[bool] = []
+    offsets, starts, ends = [0], [], []
     for i, (b, k) in enumerate(zip(payloads, kinds)):
+        t, spans = None, ()
         if k == "html":
             t, spans = html_out[i]
-            texts.append(t)
-            spans_col.append([{"start": s, "end": e} for s, e in spans] if t is not None else None)
-            ok.append(t is not None)
         elif k == "pdf":
             try:
                 t, spans = pdf_layout.extract_pdf_text_one(b)
-            except Exception:
-                t, spans = None, []
-            texts.append(t)
-            spans_col.append([{"start": s, "end": e} for s, e in spans] if t is not None else None)
-            ok.append(t is not None)
-        else:
-            texts.append(None)
-            spans_col.append(None)
-            ok.append(False)
-    return pd.DataFrame({
-        "url": pdf["url"],
-        "extracted_text": pd.Series(texts, index=pdf.index, dtype=object),
-        "spans": pd.Series(spans_col, index=pdf.index, dtype=object),
-        "payload_kind": pd.Series(kinds, index=pdf.index, dtype=object),
-        "n_bytes": [len(b) if b else 0 for b in payloads],
+            except Exception:  # malformed PDF: fails as data
+                pass
+        texts.append(t)
+        if t is not None:
+            starts.extend(s for s, _ in spans)
+            ends.extend(e for _, e in spans)
+        offsets.append(len(starts))
+    ok = pa.array([t is not None for t in texts])
+    spans_col = pa.ListArray.from_arrays(
+        pa.array(offsets, pa.int32()),
+        pa.StructArray.from_arrays(
+            [pa.array(starts, pa.int32()), pa.array(ends, pa.int32())],
+            fields=list(_SPAN_ARROW.value_type)),
+        type=_SPAN_ARROW, mask=pc.invert(ok))
+    return pa.RecordBatch.from_pydict({
+        "url": pa.array(batch["url"].tolist(), pa.string()),
+        "extracted_text": pa.array(texts, pa.string()),
+        "spans": spans_col,
+        "payload_kind": pa.array(kinds, pa.string()),
+        "n_bytes": pa.array([len(b) if b else 0 for b in payloads], pa.int64()),
         "extract_ok": ok,
     })

@@ -18,10 +18,10 @@ exact.
 from __future__ import annotations
 
 import random
-from typing import Iterator, List, Optional
+from typing import List, Optional
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -84,7 +84,7 @@ def _sample_centroids(emb: DataFrame, n_centroids: int, id_col: str,
     return [[float(x) for x in r[1]] for r in rows]
 
 
-def _partial_topk_frame(ids, q_ids, scores, k) -> pd.DataFrame:
+def _partial_topk_frame(ids, q_ids, scores, k) -> pa.RecordBatch:
     """Per-query partial top-k WITHIN one scored block: keep only rows whose
     score ties-or-beats the block's k-th best for that query (score ties are
     all kept, so the global (score desc, id asc) winner set is preserved —
@@ -101,11 +101,9 @@ def _partial_topk_frame(ids, q_ids, scores, k) -> pd.DataFrame:
     else:
         keep = ~self_mask
     rows, cols = np.nonzero(keep)
-    return pd.DataFrame({
-        "neighbor_id": ids[rows],
-        "query_id": q_ids[cols],
-        "score": s[rows, cols],
-    })
+    return pa.RecordBatch.from_arrays(
+        [pa.array(ids[rows]), pa.array(q_ids[cols]), pa.array(s[rows, cols])],
+        names=_SCORED_SCHEMA.names)
 
 
 def brute_force_topk(
@@ -118,7 +116,7 @@ def brute_force_topk(
     """(query_id, neighbor_id, rank) — exact cosine top-k.
 
     The query set is small by definition: it is collected to the driver and
-    closed over as a normalized numpy matrix (the mapInPandas analog of a
+    closed over as a normalized numpy matrix (the mapInArrow analog of a
     broadcast join). Each corpus Arrow batch is scored with ONE matmul
     (batch×dim @ dim×queries) — a JVM zip_with/aggregate formulation exists
     but higher-order lambdas evaluate interpreted and measured ~10× slower.
@@ -137,7 +135,15 @@ _SCORED_SCHEMA = T.StructType([
 
 
 def _scored_df(emb: DataFrame, run, id_col: str, vec_col: str) -> DataFrame:
-    return emb.select(id_col, vec_col).mapInPandas(run, schema=_SCORED_SCHEMA)
+    return emb.select(id_col, vec_col).mapInArrow(run, _SCORED_SCHEMA)
+
+
+def _ids_and_vectors(batch: pa.RecordBatch, id_col: str, vec_col: str,
+                     dtype=np.float64):
+    """A batch's int64 ids and its vectors as a (rows, dim) matrix."""
+    ids = batch.column(id_col).to_numpy(zero_copy_only=False).astype(np.int64)
+    vecs = batch.column(vec_col).to_numpy(zero_copy_only=False).tolist()
+    return ids, np.array(vecs, dtype=dtype)
 
 
 def _rank_scored(scored: DataFrame, k: int) -> DataFrame:
@@ -160,10 +166,9 @@ def brute_force_scored(
     volume regression test can pin its size to ≈ batches·k·nq rows."""
     q_ids, q_mat = _collect_matrix(queries, id_col, vec_col)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            mat = np.array(pdf[vec_col].tolist(), dtype=np.float64)
+    def run(batches):
+        for batch in batches:
+            ids, mat = _ids_and_vectors(batch, id_col, vec_col)
             mat /= np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-12)
             yield _partial_topk_frame(ids, q_ids, mat @ q_mat.T, k)
 
@@ -259,10 +264,9 @@ def ivf_scored(
     key_to_queries = {key: np.unique(np.array(qs, dtype=np.int64))
                       for key, qs in key_to_queries.items()}
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            mat = np.array(pdf[vec_col].tolist(), dtype=np.float64)
+    def run(batches):
+        for batch in batches:
+            ids, mat = _ids_and_vectors(batch, id_col, vec_col)
             mat /= np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-12)
             assign = np.argmax(mat @ cents.T, axis=1)               # (batch,)
             eff = assign * _SUB_STRIDE
@@ -270,7 +274,6 @@ def ivf_scored(
                 in_c = np.nonzero(assign == c)[0]
                 if in_c.size:
                     eff[in_c] += _id_chunk(ids[in_c], n_sub)
-            frames = []
             for key, qs in key_to_queries.items():
                 in_cell = np.nonzero(eff == key)[0]
                 if in_cell.size == 0:
@@ -278,10 +281,7 @@ def ivf_scored(
                 scores = mat[in_cell] @ q_mat[qs].T                 # (m, |qs|)
                 # partial top-k per (batch, cell, query): bounds the window
                 # shuffle to ≈ blocks·k rows instead of the probed-cell mass
-                frames.append(_partial_topk_frame(
-                    ids[in_cell], q_ids[qs], scores, k))
-            if frames:
-                yield pd.concat(frames, ignore_index=True)
+                yield _partial_topk_frame(ids[in_cell], q_ids[qs], scores, k)
 
     return _scored_df(emb, run, id_col, vec_col)
 
@@ -363,10 +363,9 @@ def brute_force_topk_int8(
     corpus = with_int8_embedding(emb, vec_col).select(
         F.col(id_col).alias("id"), "q8")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf["id"].to_numpy(dtype=np.int64)
-            mat = np.array(pdf["q8"].tolist(), dtype=np.int64)
+    def run(batches):
+        for batch in batches:
+            ids, mat = _ids_and_vectors(batch, "id", "q8", np.int64)
             na2 = (mat * mat).sum(axis=1)
             # zero-norm corpus vectors are DROPPED, not scored -inf: a
             # -inf row kept by a short block would enter the ranked window
@@ -380,7 +379,7 @@ def brute_force_topk_int8(
             denom = np.sqrt(na2.astype(np.float64))
             yield _partial_topk_frame(ids, q_ids, dots / denom[:, None], k)
 
-    scored = corpus.mapInPandas(run, schema=_SCORED_SCHEMA)
+    scored = corpus.mapInArrow(run, _SCORED_SCHEMA)
     return _rank_scored(scored, k)
 
 

@@ -16,17 +16,9 @@ from ._rowmap import map_rows
 _TOKEN_RE = re.compile(TOKEN_CLASS)
 
 
-def _frame_kernel(batch_fn, text_col: str):
-    """A 1:1 kernel from a pandas batch function returning a frame."""
-    def kernel(batch):
-        frame = batch_fn(batch.column(text_col).to_pandas())
-        return None, [frame[c] for c in frame.columns]
-    return kernel
-
-
 def with_langid(df: DataFrame, text_col: str = "text", out_col: str = "lang_pred") -> DataFrame:
     def kernel(batch):
-        return None, [K.langid_batch(batch.column(text_col).to_pandas())]
+        return None, [K.langid_batch(batch.column(text_col))]
 
     return map_rows(df, kernel, [T.StructField(out_col, T.StringType())])
 
@@ -41,8 +33,10 @@ QUALITY_SCHEMA = T.StructType([
 
 
 def with_quality(df: DataFrame, text_col: str = "text") -> DataFrame:
-    return map_rows(df, _frame_kernel(K.quality_features_batch, text_col),
-                    QUALITY_SCHEMA)
+    def kernel(batch):
+        return None, K.quality_features_batch(batch.column(text_col)).values()
+
+    return map_rows(df, kernel, QUALITY_SCHEMA)
 
 
 TOKENS_SCHEMA = T.StructType([
@@ -52,8 +46,10 @@ TOKENS_SCHEMA = T.StructType([
 
 
 def with_token_counts(df: DataFrame, text_col: str = "text") -> DataFrame:
-    return map_rows(df, _frame_kernel(K.token_count_batch, text_col),
-                    TOKENS_SCHEMA)
+    def kernel(batch):
+        return None, K.token_count_batch(batch.column(text_col)).values()
+
+    return map_rows(df, kernel, TOKENS_SCHEMA)
 
 
 REPETITION_SCHEMA = T.StructType([
@@ -128,8 +124,7 @@ def winnow_fingerprints(df: DataFrame, id_col: str = "doc_id",
     comparison all work on plain columns."""
     def kernel(batch):
         rows, pos, fp = [], [], []
-        fps = K.winnow_fingerprint_batch(batch.column(text_col).to_pandas(),
-                                         k, window)
+        fps = K.winnow_fingerprint_batch(batch.column(text_col), k, window)
         for i, xs in enumerate(fps):
             for p, v in xs:
                 rows.append(i)

@@ -1,7 +1,7 @@
 """The end-to-end extraction job (SURVEY §3.1's Spark shape):
 
     read(pages) → salt-bucket rebalance (skew-split oversize blobs)
-                → ONE fused mapInPandas (payload→text + regex fields)
+                → ONE fused mapInArrow (payload→text + regex fields)
                 → write results partitioned by bucket
                 → metrics agg + checkpoint manifests
 
@@ -30,9 +30,9 @@ Scale design (100 TB / 10^12 docs):
 from __future__ import annotations
 
 import os
-from typing import Dict, Iterator, List, Optional
+from typing import Dict, List, Optional
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -79,6 +79,22 @@ def with_buckets(
     )
 
 
+def _extract_batch(
+    batch: pa.RecordBatch,
+    dynamic_config: Optional[Dict[str, List[str]]] = None,
+) -> pa.RecordBatch:
+    """One batch of the fused stage: (url, bucket_id, html, text) in, the
+    ``full_result_schema`` columns out."""
+    text_part = extract_text_batch(batch)
+    field_part = extract_fields_batch(batch, dynamic_config)
+    cols = {"url": batch.column("url"),
+            "bucket_id": batch.column("bucket_id").cast(pa.int32())}
+    for c in ("payload_kind", "n_bytes", "extract_ok", "extracted_text", "spans"):
+        cols[c] = text_part.column(c)
+    cols.update(zip(field_part.schema.names[1:], field_part.columns[1:]))
+    return pa.RecordBatch.from_pydict(cols)
+
+
 def extract_all(
     pages_with_bucket: DataFrame,
     dynamic_config: Optional[Dict[str, List[str]]] = None,
@@ -86,28 +102,14 @@ def extract_all(
     """Fused single-pass extraction: payload → (extracted_text, spans) AND
     raw-text regex fields, one Arrow batch in, one result batch out."""
     dyn_fields = list(dynamic_config.keys()) if dynamic_config else None
-    schema = full_result_schema(dyn_fields)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            text_part = extract_text_batch(pdf[["url", "html"]])
-            field_part = extract_fields_batch(pdf[["url", "text"]], dynamic_config)
-            out = pd.DataFrame({
-                "url": pdf["url"],
-                "bucket_id": pdf["bucket_id"].astype("int32"),
-                "payload_kind": text_part["payload_kind"],
-                "n_bytes": text_part["n_bytes"].astype("int64"),
-                "extract_ok": text_part["extract_ok"],
-                "extracted_text": text_part["extracted_text"],
-                "spans": text_part["spans"],
-            })
-            for c in field_part.columns:
-                if c != "url":
-                    out[c] = field_part[c]
-            yield out
+    def run(batches):
+        for batch in batches:
+            yield _extract_batch(batch, dynamic_config)
 
     cols = ["url", "bucket_id", "html", "text"]
-    return pages_with_bucket.select(*cols).mapInPandas(run, schema=schema)
+    return pages_with_bucket.select(*cols).mapInArrow(
+        run, full_result_schema(dyn_fields))
 
 
 def run_extraction(

@@ -168,7 +168,7 @@ def get_spark(
         .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
                 "128m")
         # Arrow transfer for every Python stage: the per-row kernel maps
-        # (operators/_rowmap) and the mapInPandas stages. Batching
+        # (operators/_rowmap) and the mapInArrow stages that emit rows. Batching
         # is WIDTH-ADAPTIVE (guide §4.2): the byte cap bounds a batch at
         # ~8 MB — the size the round-2 heavy-page bench measured optimal
         # (256 rows × ~32 KB pages; 60 MB batches were 40% slower from

@@ -6,7 +6,7 @@ them into the canonical ``(url, warc_ts, html, text, lang)`` DataFrame:
 * ``spark.read.format("binaryFile")`` lists/reads the files in parallel
   (one task per file — WARC files are the natural split unit, typically
   ~1 GB each on Common Crawl);
-* record parsing runs in a ``mapInPandas`` batch kernel: split on the
+* record parsing runs in a ``mapInArrow`` batch kernel: split on the
   record delimiter, parse WARC headers (WARC-Target-URI, WARC-Date,
   Content-Length), keep ``response`` records, payload = the raw bytes;
 * ``text``/``lang`` are left to downstream stages (the extraction pipeline
@@ -20,11 +20,12 @@ fixture files so the parser is tested without external data.
 from __future__ import annotations
 
 from datetime import datetime, timezone
-from typing import Iterator, List, Optional, Tuple
+from typing import List, Optional, Tuple
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+
+from ocr_system_spark.operators._rowmap import rows_batch
 
 CRLF = b"\r\n"
 DELIM = CRLF * 2
@@ -82,16 +83,14 @@ def read_warc(spark: SparkSession, input_glob: str) -> DataFrame:
     """Directory/glob of .warc files → pages DataFrame."""
     files = spark.read.format("binaryFile").load(input_glob)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for blob in pdf["content"]:
-                for url, ts, body in _parse_warc_bytes(bytes(blob)):
-                    rows.append((url, ts, body, None, None))
-            yield pd.DataFrame(
-                rows, columns=["url", "warc_ts", "html", "text", "lang"])
+    def run(batches):
+        for batch in batches:
+            rows = [(url, ts, body, None, None)
+                    for blob in batch.column("content").to_pylist()
+                    for url, ts, body in _parse_warc_bytes(blob)]
+            yield rows_batch(rows, PAGES_SCHEMA)
 
-    return files.select("content").mapInPandas(run, schema=PAGES_SCHEMA)
+    return files.select("content").mapInArrow(run, PAGES_SCHEMA)
 
 
 def write_synthetic_warc(path: str, records: List[Tuple[str, datetime, bytes]]) -> None:

@@ -1,7 +1,7 @@
 """Continuous-ingest variant of the extraction pipeline.
 
 ``readStream`` over an arriving-pages directory → the SAME fused
-``extract_all`` stage (mapInPandas is streaming-compatible: it is a
+``extract_all`` stage (mapInArrow is streaming-compatible: it is a
 stateless projection) → ``writeStream`` parquet sink with checkpointing.
 Spark's checkpoint/WAL gives exactly-once file-sink semantics per
 micro-batch — the streaming counterpart of the batch tier's per-bucket

@@ -17,7 +17,6 @@ from __future__ import annotations
 
 from typing import Iterator, Tuple
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -89,6 +88,7 @@ def sessionize_stream(
     next session, or (b) the event-time watermark passes session_end + gap
     (GroupStateTimeout.EventTimeTimeout). State per user is one open
     session — bounded regardless of stream length."""
+    import pandas as pd  # the stateful API hands its groups over as pandas
     gap_us = gap_min * 60 * 1_000_000
 
     def fn(

@@ -3,7 +3,7 @@ model-decoder, title/meta, multimodal and PII kernels."""
 
 from __future__ import annotations
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -41,31 +41,29 @@ def _enriched_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _keyed_kernel(df: DataFrame, out_fields: list[str], batch_fn) -> DataFrame:
-    """Run a pandas batch kernel over (doc_id, text|html) keyed by doc_id."""
+    """Run an Arrow batch kernel over (doc_id, text|html) keyed by doc_id:
+    the kernel sees doc_id as its string ``url``."""
     schema = T.StructType(
         [T.StructField("doc_id", T.LongType(), False)]
         + [T.StructField(f, T.StringType(), True) for f in out_fields]
     )
 
     def run(batches):
-        for pdf in batches:
-            out = batch_fn(pdf)
-            out.insert(0, "doc_id", pdf["doc_id"].values)
-            yield out[["doc_id"] + out_fields]
+        for batch in batches:
+            ids = batch.column("doc_id")
+            out = batch_fn(batch.append_column("url", ids.cast(pa.string())))
+            yield pa.RecordBatch.from_arrays(
+                [ids, *(out.column(f) for f in out_fields)], schema.names)
 
-    return df.mapInPandas(run, schema=schema)
+    return df.mapInArrow(run, schema)
 
 
 def _fields_kernel(df: DataFrame, out_fields: list[str],
                    dynamic_config: dict | None = None) -> DataFrame:
-    """``extract_fields_batch`` over (doc_id, text), keyed by doc_id: the
-    kernel sees doc_id as its string ``url``."""
-    def batch(pdf: pd.DataFrame) -> pd.DataFrame:
-        tmp = pdf.rename(columns={"doc_id": "url"})
-        tmp["url"] = tmp["url"].astype(str)
-        return extract_fields_batch(tmp, dynamic_config=dynamic_config)[out_fields]
-
-    return _keyed_kernel(df, out_fields, batch)
+    """``extract_fields_batch`` over (doc_id, text), keyed by doc_id."""
+    return _keyed_kernel(
+        df, out_fields,
+        lambda batch: extract_fields_batch(batch, dynamic_config=dynamic_config))
 
 
 def _static_fields_df(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -81,12 +79,8 @@ def queries() -> dict[str, Builder]:
     def q_html_main_extract(spark, sf_dir):
         pages = tables.pages_from_documents(spark, sf_dir)
 
-        def batch(pdf):
-            out = extract_text_batch(pdf.rename(columns={"doc_id": "url"})
-                                     .assign(url=lambda x: x["url"].astype(str)))
-            return out[["extracted_text"]]
-
-        return _keyed_kernel(pages.select("doc_id", "html"), ["extracted_text"], batch)
+        return _keyed_kernel(pages.select("doc_id", "html"), ["extracted_text"],
+                             extract_text_batch)
 
     q["html_main_extract"] = q_html_main_extract
 
@@ -223,15 +217,15 @@ def queries() -> dict[str, Builder]:
         def run(batches):
             from ocr_system_spark.functions.html_extract import (
                 extract_title_batch)
-            for pdf in batches:
-                meta = extract_title_batch(pdf["html"].tolist())
-                yield pd.DataFrame({
-                    "doc_id": pdf["doc_id"].values,
-                    "title": [t for t, _ in meta],
-                    "n_h1": pd.array([n for _, n in meta],
-                                     dtype="int32")})
+            for batch in batches:
+                meta = extract_title_batch(batch.column("html").to_pylist())
+                yield pa.RecordBatch.from_arrays(
+                    [batch.column("doc_id"),
+                     pa.array([t for t, _ in meta], pa.string()),
+                     pa.array([n for _, n in meta], pa.int32())],
+                    schema.names)
 
-        return src.mapInPandas(run, schema=schema)
+        return src.mapInArrow(run, schema)
 
     q["html_title_meta"] = q_html_title_meta
 

@@ -186,7 +186,7 @@ def test_partial_topk_keeps_boundary_ties(spark):
     scores = np.array([[5.], [4.], [4.], [4.], [4.], [3.], [2.], [1.], [0.], [-1.]])
     out = similarity._partial_topk_frame(ids, q_ids, scores, k=3)
     # top-3 by score, but the 4-way tie at the boundary is fully kept
-    assert set(out["neighbor_id"]) == {100, 101, 102, 103, 104}
+    assert set(out["neighbor_id"].to_pylist()) == {100, 101, 102, 103, 104}
 
 
 def test_triangle_salting_loses_no_pairs(spark):

@@ -2,7 +2,7 @@
 
 from __future__ import annotations
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import functions as F
 
 from ocr_system_spark.operators.extract import (
@@ -27,8 +27,8 @@ def test_custom_column_slot(spark, pages_fixture):
     pages = pages_df(spark, pages_fixture.head(50))
     res = extract_fields(pages)
 
-    def my_rule(rows: pd.DataFrame) -> pd.Series:
-        return rows["licenses"].fillna("").str.len().astype(str) + "!"
+    def my_rule(rows: pa.RecordBatch) -> list:
+        return [f"{len(lic or '')}!" for lic in rows["licenses"].tolist()]
 
     out = with_custom_column(res, my_rule, name="custom").toPandas()
     assert (out["custom"] == out["licenses"].fillna("").str.len().astype(str) + "!").all()

@@ -48,7 +48,7 @@ def test_pdf_reading_order_exact(pages_fixture):
 
 def test_payload_dispatch_errors_as_data(pages_fixture):
     batch = pages_fixture[["url", "html"]].head(500).reset_index(drop=True)
-    out = extract_text_batch(batch)
+    out = extract_text_batch(batch).to_pandas()
     kinds = pages_fixture["payload_kind"].head(500).reset_index(drop=True)
     # html/pdf rows extract ok; empty/garbage rows fail without raising
     assert (out.loc[kinds == "html", "extract_ok"]).all()
@@ -64,7 +64,7 @@ def test_malformed_payloads_never_raise():
     cases = [b"", b"\x00\xff\xfe", b"%PDF-SYN1\nPAGE\nBT 1 1 Td (x", b"<div", b"<p>ok</p>",
              b"%PDF-1.4 real pdf header", b"<" * 10000, b"<a href='x'>" * 500]
     out = extract_text_batch(pd.DataFrame({"url": [str(i) for i in range(len(cases))],
-                                           "html": cases}))
+                                           "html": cases})).to_pandas()
     assert len(out) == len(cases)
     assert not out.loc[0, "extract_ok"]          # empty
     assert not out.loc[1, "extract_ok"]          # garbage

@@ -14,8 +14,7 @@ import pytest
 from ocr_system_spark.functions import fields
 
 
-def _assert_bytes_equal(ours: pd.Series, golden: pd.Series, col: str) -> None:
-    ours = ours.tolist()
+def _assert_bytes_equal(ours: list, golden: pd.Series, col: str) -> None:
     gold = golden.tolist()
     assert len(ours) == len(gold)
     for i, (o, g) in enumerate(zip(ours, gold)):

@@ -359,3 +359,78 @@ def test_per_row_kernels_run_as_one_arrow_map(spark, build, n_inputs):
     the kernel holds one Python node, not two."""
     nodes = python_nodes(build(spark))
     assert [node for node, _ in nodes] == ["MapInArrow"] * n_inputs, nodes
+
+
+
+
+# ---------------------------------------------------------------------------
+# Stages that emit their own rows cross the Python boundary as Arrow too:
+# one MapInArrow each, no pandas round trip.
+# ---------------------------------------------------------------------------
+
+def _multimodal(op):
+    def build(spark, tmp_path):
+        from ocr_system_spark.operators import multimodal
+        return getattr(multimodal, op)(multimodal.documents_as_media(
+            _fresh_docs(spark)))
+    return build
+
+
+def _similarity(op):
+    def build(spark, tmp_path):
+        from ocr_system_spark.operators import similarity
+        e = _embeddings(spark)
+        return getattr(similarity, op)(e, e.filter("vec_id < 3"), k=2)
+    return build
+
+
+def _query(name):
+    def build(spark, tmp_path):
+        return entry.queries()[name](spark, SF)
+    return build
+
+
+def _extract_all(spark, tmp_path):
+    return extract_all(with_buckets(pages_from_documents(spark, SF), 16))
+
+
+def _extract_fields(spark, tmp_path):
+    from ocr_system_spark.operators.extract import extract_fields
+    return extract_fields(pages_from_documents(spark, SF))
+
+
+def _model_extract(spark, tmp_path):
+    from ocr_system_spark.operators.model_extract import model_extract
+    return model_extract(_fresh_docs(spark), id_col="doc_id")
+
+
+def _read_warc(spark, tmp_path):
+    from datetime import datetime, timezone
+    from ocr_system_spark.sources import warc
+    path = str(tmp_path / "a.warc")
+    warc.write_synthetic_warc(path, [("https://x.example/a", datetime(
+        2024, 1, 1, tzinfo=timezone.utc), b"<p>a</p>")])
+    return warc.read_warc(spark, path)
+
+
+_ROW_EMITTING_STAGES = [
+    ("extract_all", _extract_all),
+    ("extract_fields", _extract_fields),
+    ("model_extract", _model_extract),
+    ("decode_media_features", _multimodal("decode_media_features")),
+    ("frame_sample_stub", _multimodal("frame_sample_stub")),
+    ("resize_stub", _multimodal("resize_stub")),
+    ("brute_force_scored", _similarity("brute_force_scored")),
+    ("ivf_scored", _similarity("ivf_scored")),
+    ("brute_force_topk_int8", _similarity("brute_force_topk_int8")),
+    ("read_warc", _read_warc),
+    ("html_main_extract", _query("html_main_extract")),
+    ("html_title_meta", _query("html_title_meta")),
+]
+
+
+@pytest.mark.parametrize("build", [c[1] for c in _ROW_EMITTING_STAGES],
+                         ids=[c[0] for c in _ROW_EMITTING_STAGES])
+def test_row_emitting_stages_run_as_one_arrow_map(spark, tmp_path, build):
+    nodes = python_nodes(build(spark, tmp_path))
+    assert [node for node, _ in nodes] == ["MapInArrow"], nodes

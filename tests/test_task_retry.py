@@ -34,9 +34,7 @@ spark = (SparkSession.builder.master("local[4, 2]").appName("retry_test")
          .config("spark.ui.enabled", "false").getOrCreate())
 spark.sparkContext.setLogLevel("ERROR")
 
-from ocr_system_spark.plans.pipeline import full_result_schema, with_buckets
-from ocr_system_spark.operators.payload import extract_text_batch
-from ocr_system_spark.operators.extract import extract_fields_batch
+from ocr_system_spark.plans import pipeline
 
 fix = pd.read_parquet("@@REPO@@/tests/fixtures/pages_2000.parquet").head(200)
 cols = fix[["url", "warc_ts", "html", "text", "lang"]].copy()
@@ -45,7 +43,6 @@ pages = spark.createDataFrame(
     cols,
     schema="url string, warc_ts timestamp, html binary, text string, lang string")
 
-schema = full_result_schema()
 MARKER = sys.argv[2]  # resolved on the DRIVER; workers see daemon argv
 
 def faulty(batches):
@@ -57,28 +54,15 @@ def faulty(batches):
     if inject:
         open(MARKER, "w").write("fired")  # proves the fault actually ran
     first = True
-    for pdf in batches:
-        text_part = extract_text_batch(pdf[["url", "html"]])
-        field_part = extract_fields_batch(pdf[["url", "text"]])
-        out = pd.DataFrame({
-            "url": pdf["url"],
-            "bucket_id": pdf["bucket_id"].astype("int32"),
-            "payload_kind": text_part["payload_kind"],
-            "n_bytes": text_part["n_bytes"].astype("int64"),
-            "extract_ok": text_part["extract_ok"],
-            "extracted_text": text_part["extracted_text"],
-            "spans": text_part["spans"],
-        })
-        for c in field_part.columns:
-            if c != "url":
-                out[c] = field_part[c]
-        yield out
+    for batch in batches:
+        yield pipeline._extract_batch(batch)
         if inject and first:
             first = False
             raise RuntimeError("injected transient failure after partial output")
 
-bucketed = with_buckets(pages, n_buckets=8).repartition(4, "bucket_id")
-res = bucketed.select("url", "bucket_id", "html", "text").mapInPandas(faulty, schema=schema)
+bucketed = pipeline.with_buckets(pages, n_buckets=8).repartition(4, "bucket_id")
+res = bucketed.select("url", "bucket_id", "html", "text").mapInArrow(
+    faulty, pipeline.full_result_schema())
 
 out_path = sys.argv[1]
 res.write.mode("overwrite").partitionBy("bucket_id").parquet(out_path)

@@ -52,18 +52,17 @@ def test_winnowing_shift_moves_positions_exactly():
 
 def test_quality_features_values():
     out = K.quality_features_batch(pd.Series(["The cat, and a dog!", ""]))
-    r = out.iloc[0]
-    assert r["n_words"] == 5
-    assert r["n_stopwords"] == 3  # 'The' (case-folded), 'and', 'a'
-    assert K.quality_features_batch(pd.Series(["The cat"])).iloc[0]["n_stopwords"] == 1
-    assert out.iloc[1]["n_chars"] == 0
+    assert out["n_words"][0] == 5
+    assert out["n_stopwords"][0] == 3  # 'The' (case-folded), 'and', 'a'
+    assert K.quality_features_batch(pd.Series(["The cat"]))["n_stopwords"][0] == 1
+    assert out["n_chars"][1] == 0
 
 
 def test_token_counts_bpeish():
     out = K.token_count_batch(pd.Series(["ab12 cd, ef"]))
     # ws: ['ab12','cd,','ef']=3 ; bpeish: ab,12,cd,',',ef = 5
-    assert out.iloc[0]["ws_tokens"] == 3
-    assert out.iloc[0]["bpeish_tokens"] == 5
+    assert out["ws_tokens"][0] == 3
+    assert out["bpeish_tokens"][0] == 5
 
 
 def test_multimodal_features_deterministic(spark):
